@@ -64,22 +64,6 @@ def _ordered(fn: Callable[[SparkSession, str], DataFrame]):
 # value-hash, cf. r10 pr08/pr09). Robust to missing/corrupt files.
 
 
-#: queries whose DuckDB oracle was REWRITTEN after driver rows were
-#: recorded (name -> first round whose rows still count): a green row
-#: from before the rewrite certified the OLD oracle SQL, so it no
-#: longer counts as a pass — the query re-queues at the sweep head
-#: until a driver row lands on the new oracle (the same principle as
-#: the r10 pr08/pr09 oracle-upgrade re-queue).  d23/d25's interval
-#: merge was rewritten window-free in r14 (DuckDB 1.0.0 parallel-
-#: window bug, OPTIMIZATION_r14.md §3); their newest green rows are
-#: r12/r13, i.e. pre-rewrite, and the plain staleness key would not
-#: resurface them for several rounds (r14 verdict item 3).
-_ORACLE_REWRITTEN_AT = {
-    "d23_dup_char_fraction": 14,
-    "d25_self_repeat_fraction": 14,
-}
-
-
 def _last_pass_round() -> dict[str, int]:
     import glob as _glob
     import json as _json
@@ -101,8 +85,6 @@ def _last_pass_round() -> dict[str, int]:
         for name, row in rows.items():
             if not isinstance(row, dict):
                 continue
-            if rnd < _ORACLE_REWRITTEN_AT.get(name, -1):
-                continue  # row predates the oracle rewrite — not a pass
             if row.get("err") == "no_oracle" and row.get("spark_rows") is not None:
                 q = CATALOG.get(name)
                 if q is None or q.oracle is None:

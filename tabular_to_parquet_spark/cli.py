@@ -34,7 +34,56 @@ def spool_stdin_to_tempfile() -> str:
     return fh.name
 
 
+def fixed_width_spec(text: str):
+    """``--fixed-width-spec`` type: comma-separated ``name:width`` pairs
+    with a non-empty name and a positive integer width."""
+    from tabular_to_parquet_spark.sources.fixed_width import fields_from_widths
+
+    pairs = []
+    for part in text.split(","):
+        name, sep, width = part.partition(":")
+        if not sep or not name.strip() or not width.strip().isdigit() or int(width) <= 0:
+            raise argparse.ArgumentTypeError(
+                f"{part!r} is not name:width with a positive integer width"
+            )
+        pairs.append((name.strip(), int(width)))
+    return fields_from_widths(pairs)
+
+
+def _adapters():
+    """--format → adapter builder, called as ``build(spark, path, args)``."""
+    from tabular_to_parquet_spark.sources import (
+        columnar,
+        fixed_width,
+        json_lines,
+        logfmt,
+        tar_source,
+        text,
+        warc,
+        xlsx_source,
+        xml_source,
+    )
+
+    return {
+        "delimited": lambda spark, path, args: text.delimited_adapter(spark, path),
+        "jsonl": lambda spark, path, args: json_lines.json_adapter(spark, path),
+        **dict.fromkeys(
+            columnar.SUPPORTED_FORMATS,
+            lambda spark, path, args: columnar.columnar_adapter(spark, path, args.format),
+        ),
+        "fixed-width": lambda spark, path, args: fixed_width.fixed_width_adapter(
+            spark, path, args.fixed_width_spec
+        ),
+        "logfmt": lambda spark, path, args: logfmt.logfmt_adapter(spark, path),
+        "xml": lambda spark, path, args: xml_source.xml_adapter(spark, path),
+        "warc": lambda spark, path, args: warc.warc_adapter(spark, path),
+        "tar": lambda spark, path, args: tar_source.tar_adapter(spark, path),
+        "xlsx": lambda spark, path, args: xlsx_source.xlsx_adapter(spark, path),
+    }
+
+
 def main(argv: list[str] | None = None) -> int:
+    adapters = _adapters()
     ap = argparse.ArgumentParser(
         prog="tabular_to_parquet_spark",
         description="Convert a delimited tabular file (CSV/TSV/…) to Parquet",
@@ -68,8 +117,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--output", help="override the derived output path")
     ap.add_argument(
         "--format",
-        choices=["delimited", "jsonl", "orc", "avro", "ipc", "fixed-width",
-                 "logfmt", "xml", "warc", "tar", "xlsx"],
+        choices=list(adapters),
         default="delimited",
         help="input wire format (default: delimited text with sniffed "
         "delimiter); every format runs the same inference + lenient-cast "
@@ -77,6 +125,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument(
         "--fixed-width-spec",
+        type=fixed_width_spec,
         help="comma-separated name:width pairs for --format fixed-width, "
         "e.g. 'id:6,name:20,price:10'",
     )
@@ -85,6 +134,21 @@ def main(argv: list[str] | None = None) -> int:
     if not args.input:
         ap.print_help()
         print("\nerror: no input provided", file=sys.stderr)
+        return 1
+    if args.preserve_order and args.format != "delimited":
+        # the reference's input-order guarantee is defined over
+        # delimited text lines (conversion.rs:177-189); pretending it
+        # holds for container formats would be a silent lie — refuse
+        # rather than ignore
+        print(
+            "error: --preserve-order is only supported for delimited "
+            "input; row order for container formats is not part of the "
+            "reference contract",
+            file=sys.stderr,
+        )
+        return 1
+    if args.format == "fixed-width" and not args.fixed_width_spec:
+        print("error: --format fixed-width requires --fixed-width-spec", file=sys.stderr)
         return 1
 
     if args.input == "-":
@@ -98,25 +162,34 @@ def main(argv: list[str] | None = None) -> int:
         input_path = args.input
         output_path = args.output or derive_output_path(args.input)
 
-    from tabular_to_parquet_spark.operators.convert import convert_delimited_to_parquet
+    from tabular_to_parquet_spark.operators.convert import run_conversion
     from tabular_to_parquet_spark.session import get_spark
 
     spark = get_spark("tabular_to_parquet_cli")
-    if args.format != "delimited":
-        return _convert_other_format(spark, args, input_path, output_path)
-    res = convert_delimited_to_parquet(
+    adapter = adapters[args.format](spark, input_path, args)
+    if args.strict_drop and adapter.typed:
+        print(
+            f"error: --strict-drop applies to string-typed input; this "
+            f"{args.format} input has typed columns, which pass through",
+            file=sys.stderr,
+        )
+        return 1
+    res = run_conversion(
         spark,
-        input_path,
+        adapter,
         output_path,
         infer_full=args.infer_full_schema,
         preserve_order=args.preserve_order,
         single_file=args.single_file,
         strict_drop=args.strict_drop,
     )
-    schema_desc = ", ".join(
-        f"{n}:{t.kind}{'[' + t.unit + ']' if t.unit else ''}"
-        for n, t in zip(res.columns, res.types)
-    )
+    if res.types is None:
+        schema_desc = ", ".join(res.columns) + " (typed passthrough)"
+    else:
+        schema_desc = ", ".join(
+            f"{n}:{t.kind}{'[' + t.unit + ']' if t.unit else ''}"
+            for n, t in zip(res.columns, res.types)
+        )
     print(f"schema: {schema_desc}", file=sys.stderr)
     # exit banner (reference conversion.rs:101-117): rows, throughput,
     # and per-column parse-error accounting (O5)
@@ -130,131 +203,6 @@ def main(argv: list[str] | None = None) -> int:
         f"({rate:,.0f} lines/s): {res.output_path}",
         file=sys.stderr,
     )
-    return 0
-
-
-def _convert_other_format(spark, args, input_path: str, output_path: str) -> int:
-    """Non-delimited wire formats — same inference + casts, one flag."""
-    if args.preserve_order:
-        # the reference's input-order guarantee is defined over
-        # delimited text lines (conversion.rs:177-189); pretending it
-        # holds for container formats would be a silent lie — refuse
-        # rather than ignore (r10: the flag used to be dropped here)
-        print(
-            "error: --preserve-order is only supported for delimited "
-            "input; row order for container formats is not part of the "
-            "reference contract",
-            file=sys.stderr,
-        )
-        return 1
-    if args.format == "jsonl":
-        from tabular_to_parquet_spark.sources.json_lines import (
-            convert_json_to_parquet,
-        )
-
-        names, types, _ = convert_json_to_parquet(
-            spark, input_path, output_path, infer_full=args.infer_full_schema
-        )
-    elif args.format in ("orc", "avro", "ipc"):
-        from tabular_to_parquet_spark.sources.columnar import (
-            convert_columnar_to_parquet,
-        )
-
-        names, types, _rows = convert_columnar_to_parquet(
-            spark, input_path, output_path, fmt=args.format
-        )
-    elif args.format == "fixed-width":
-        if not args.fixed_width_spec:
-            print("error: --format fixed-width requires --fixed-width-spec",
-                  file=sys.stderr)
-            return 1
-        from tabular_to_parquet_spark.sources.fixed_width import (
-            convert_fixed_width_to_parquet,
-            fields_from_widths,
-        )
-
-        pairs = []
-        for part in args.fixed_width_spec.split(","):
-            name, _, width = part.partition(":")
-            pairs.append((name.strip(), int(width)))
-        names, types, _ = convert_fixed_width_to_parquet(
-            spark, input_path, output_path, fields_from_widths(pairs),
-            infer_full=args.infer_full_schema,
-        )
-    elif args.format == "xlsx":
-        from tabular_to_parquet_spark.sources.xlsx_source import (
-            convert_xlsx_to_parquet,
-        )
-
-        names, types, _ = convert_xlsx_to_parquet(
-            spark, input_path, output_path,
-            infer_full=args.infer_full_schema,
-        )
-    elif args.format == "tar":
-        from tabular_to_parquet_spark.sources.tar_source import (
-            convert_tar_csv_to_parquet,
-        )
-
-        names, types, _ = convert_tar_csv_to_parquet(
-            spark, input_path, output_path,
-            infer_full=args.infer_full_schema,
-        )
-    elif args.format == "warc":
-        from tabular_to_parquet_spark.sources.warc import (
-            convert_warc_to_parquet,
-        )
-
-        names, types, _rows = convert_warc_to_parquet(
-            spark, input_path, output_path
-        )
-    elif args.format == "xml":
-        from tabular_to_parquet_spark.sources.xml_source import (
-            convert_xml_to_parquet,
-        )
-
-        names, types, _ = convert_xml_to_parquet(
-            spark, input_path, output_path, infer_full=args.infer_full_schema
-        )
-    else:  # logfmt
-        from tabular_to_parquet_spark.sources.logfmt import (
-            convert_logfmt_to_parquet,
-        )
-
-        names, types, _ = convert_logfmt_to_parquet(
-            spark, input_path, output_path, infer_full=args.infer_full_schema
-        )
-    if types is not None:
-        schema_desc = ", ".join(
-            f"{n}:{t.kind}{'[' + t.unit + ']' if t.unit else ''}"
-            for n, t in zip(names, types)
-        )
-    else:
-        schema_desc = ", ".join(names) + " (typed passthrough)"
-    if args.single_file:
-        # same one-file contract as the delimited path (S7): coalesce
-        # the written directory into a single part and promote it to
-        # output_path itself. A consolidation pass (read-back +
-        # rewrite) keeps every converter untouched; --single-file is
-        # inherently a small-output convenience — the one-part write
-        # is single-threaded regardless of where the coalesce happens.
-        from tabular_to_parquet_spark.operators.convert import (
-            _promote_single_file,
-        )
-
-        tmp = output_path + "._spark_tmp"
-        (
-            spark.read.parquet(output_path)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            .parquet(tmp)
-        )
-        import shutil
-
-        shutil.rmtree(output_path)
-        _promote_single_file(tmp, output_path)
-    print(f"schema: {schema_desc}", file=sys.stderr)
-    print(f"conversion done: {output_path}", file=sys.stderr)
     return 0
 
 

@@ -1,15 +1,18 @@
 """The conversion pipeline (reference src/conversion.rs:28-120, re-planned
 for Spark — SURVEY.md §3.4).
 
-Lifecycle: driver sniffs the delimiter (S4) → driver (or Spark, for
-full-scan) infers logical types (I1-I5) → Spark reads the file as one
-string-typed DataFrame (S1/S2) → a single ``select()`` of lenient-cast
-expressions (P1-P12) → zstd parquet sink (S6).
+Lifecycle: a format adapter (``sources/``) names the columns and
+supplies the scan → driver (or Spark, for full-scan) infers logical
+types (I1-I5) → a single ``select()`` of lenient-cast expressions
+(P1-P12) with ``observe`` parse-error accounting → zstd parquet sink
+(S6). :func:`run_conversion` owns every step after the scan for every
+format; :func:`convert_delimited_to_parquet` is the delimited entry
+point (sniffed delimiter, S1/S2/S4).
 
 The reference's producer/worker/writer thread pipeline collapses into
-Spark partition parallelism; the cast projection is one whole-stage
-codegen over the scan — no shuffle anywhere in this plan (verified via
-``explain``: Scan csv → Project → WriteFiles).
+Spark partition parallelism: Scan → Project → WriteFiles, no shuffle
+in the default plan (verified via ``explain``). Whole-stage codegen
+is pinned off for the conversion job (see :func:`run_conversion`).
 """
 
 from __future__ import annotations
@@ -17,23 +20,24 @@ from __future__ import annotations
 import logging
 import os as _os
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from tabular_to_parquet_spark.functions import parsers
+from tabular_to_parquet_spark.functions.nulls import is_null_token
 from tabular_to_parquet_spark.plans.inference import (
-    infer_schema,
+    infer_from_rows,
     infer_schema_distributed,
 )
 from tabular_to_parquet_spark.plans.logical_types import LogicalType
-from tabular_to_parquet_spark.sources.sniff import detect_delimiter
-from tabular_to_parquet_spark.sources.text import (
-    read_delimited_as_strings,
-    read_header,
-    sanitize_names,
+from tabular_to_parquet_spark.sources.adapter import (  # noqa: F401 (re-export)
+    Adapter,
+    first_data_file,
 )
+from tabular_to_parquet_spark.sources.text import delimited_adapter
 
 
 def cast_expr(c: Column, lt: LogicalType) -> Column:
@@ -101,10 +105,6 @@ def observed_typed_frame(
     not a null-token but came out NULL. Each cast is computed once —
     the metric reads the aliased output column, not a re-evaluation.
     """
-    from pyspark.sql import Observation
-
-    from tabular_to_parquet_spark.functions.nulls import is_null_token
-
     names = list(raw.columns)
     cols = [cast_expr(F.col(n), lt).alias(n) for n, lt in zip(names, types)]
     # string/binary casts are passthroughs — a non-null-token value can
@@ -143,11 +143,9 @@ def counted_typed_frame(
 ):
     """Typed frame + row count only — the ``observe_errors=False``
     path: the accounting aggregate re-trims every fallible value
-    (~15% of the conversion projection, measured at sf0.1), so bulk
-    callers that don't read ``parse_errors`` can skip it. The lone
+    (about 46% on top of scan + casts, sf0.1 lineitem at 4 cores), so
+    bulk callers that don't read ``parse_errors`` can skip it. The lone
     count(1) metric is free by comparison."""
-    from pyspark.sql import Observation
-
     names = list(raw.columns)
     staged = typed_frame(raw, types, preserve_order=preserve_order)
     if preserve_order:
@@ -161,24 +159,15 @@ def counted_typed_frame(
 class ConvertResult:
     output_path: str
     columns: list[str]
-    types: list[LogicalType]
-    delimiter: str
+    #: inferred logical types; ``None`` for a typed passthrough source
+    types: list[LogicalType] | None
+    #: the field delimiter of delimited sources, else ``None``
+    delimiter: str | None
+    #: wall time of the shared run: inference, casts and the write
     seconds: float
     rows: int = 0
     #: per-column count of non-null input values that cast to NULL (O5)
     parse_errors: dict[str, int] = None  # type: ignore[assignment]
-
-
-def first_data_file(path: str) -> str:
-    """A file path: ``path`` itself, or the lexicographically-first
-    regular file under a directory input (header/sample source)."""
-    if _os.path.isfile(path):
-        return path
-    for name in sorted(_os.listdir(path)):
-        cand = _os.path.join(path, name)
-        if _os.path.isfile(cand) and not name.startswith((".", "_")):
-            return cand
-    raise FileNotFoundError(f"no data files under {path!r}")
 
 
 def _input_bytes(path: str) -> int:
@@ -205,26 +194,52 @@ def drop_replacement_char_rows(frame: DataFrame, names: list[str]) -> DataFrame:
     return frame.filter(~bad)
 
 
-def convert_delimited_to_parquet(
+@contextmanager
+def _scoped_conf(spark: SparkSession):
+    """Yield a setter for session confs; each conf set through it gets
+    its prior value back (or is unset) on exit, also when the body
+    raises — a caller-provided session keeps its own settings."""
+    saved: dict[str, str | None] = {}
+
+    def set_conf(key: str, value: str) -> None:
+        saved.setdefault(key, spark.conf.get(key, None))
+        spark.conf.set(key, value)
+
+    try:
+        yield set_conf
+    finally:
+        for key, old in saved.items():
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
+
+
+def run_conversion(
     spark: SparkSession,
-    input_path: str,
+    adapter: Adapter,
     output_path: str,
     infer_full: bool = False,
     preserve_order: bool = False,
     single_file: bool = False,
-    delimiter: str | None = None,
     strict_drop: bool = False,
     observe_errors: bool = True,
 ) -> ConvertResult:
-    """End-to-end conversion (the product surface, main.rs:39-83).
+    """One input format (``adapter``) → zstd parquet: inference, the
+    lenient-cast projection with parse-error accounting, and the write.
+    Every format runs this code; the adapter only supplies the scan.
+
+    ``infer_full`` infers over the whole frame (Spark-side) instead of
+    the adapter's first-1000-rows driver sample (reference
+    --inferer-schema-complet, main.rs:25-26).
 
     ``preserve_order`` reproduces the reference's input-order guarantee
     (conversion.rs:177-189) — for directory inputs, files are ordered
     lexicographically by path and rows by position within each file
-    (the ``_metadata`` sort key in :func:`_order_key_cols`);
-    ``single_file`` additionally coalesces to one part-file and renames
-    it to ``output_path`` itself. Defaults keep Spark's parallel
-    many-part layout — the right shape at scale.
+    (the ``_metadata`` sort key in :func:`_order_key_cols`, so the frame
+    must be a file scan); ``single_file`` additionally coalesces to one
+    part-file and renames it to ``output_path`` itself. Defaults keep
+    Spark's parallel many-part layout — the right shape at scale.
 
     ``strict_drop`` (P14 parity, opt-in): the reference's producer reads
     lines with ``.lines().filter_map(Result::ok)``
@@ -241,127 +256,130 @@ def convert_delimited_to_parquet(
     ``observe_errors=False`` skips the per-column parse-error
     accounting (``parse_errors`` reports zeros; ``rows`` stays exact).
     The accounting rides the write job but re-trims every fallible
-    value — ~15% of the projection — so bulk callers that don't read
-    the counters can opt out.
+    value — about 46% on top of scan + casts (sf0.1 lineitem, 4
+    cores) — so bulk callers that don't read the counters can opt out.
+
+    A typed adapter passes its frame through unchanged (``types`` is
+    ``None``); strict drop and input order are defined over string
+    rows only, so it refuses both.
     """
+    if adapter.typed and (strict_drop or preserve_order):
+        raise ValueError(
+            "strict_drop and preserve_order apply to string-typed sources; "
+            "this source passes typed columns through"
+        )
     t0 = time.monotonic()
-    from tabular_to_parquet_spark.session import ensure_utc, restore_timezone
-
-    # epoch-timestamp casts are session-tz-sensitive; safe to restore
-    # after the write because everything here executes eagerly
-    prior_tz = ensure_utc(spark)
-    _UNSET = object()
-    old_split: object = _UNSET
-    old_wscg: object = _UNSET
-    try:
-        # directory / multi-file input: driver-side sniff + header +
-        # sample inference read the lexicographically-first file (the
-        # same file whose rows come first under preserve_order)
-        head_file = first_data_file(input_path)
-        delim = delimiter or detect_delimiter(head_file)
-        names = sanitize_names(read_header(head_file, delim))
-        # width-adaptive output chunking (O1/S6, conversion.rs:52-58,169):
-        # the reference couples block size = parquet row-group size to the
-        # column count; the Spark analogue caps rows per output file
-        block_rows = 250_000 if len(names) <= 20 else 150_000 if len(names) <= 50 else 5_000
-
-        if infer_full:
-            raw0 = read_delimited_as_strings(spark, input_path, delim, names)
+    names, frame = adapter.columns, adapter.frame
+    from_sample = not (adapter.typed or infer_full or adapter.sample is None)
+    with _scoped_conf(spark) as set_conf:
+        # epoch-timestamp casts are session-tz-sensitive; safe to restore
+        # on exit because everything here executes eagerly
+        set_conf("spark.sql.session.timeZone", "UTC")
+        if adapter.typed:
+            types = None
+        elif from_sample:
+            types = infer_from_rows(len(names), adapter.sample())
+        else:
             # inference must not observe rows the reference's reader never
             # parses: mirror read_sample_rows, which skips invalid-UTF-8
             # lines (sources/text.py). Without this, a corrupt row can flip
             # a numeric column to string even though strict_drop later
             # removes the row from the output.
-            types = infer_schema_distributed(drop_replacement_char_rows(raw0, names))
-        else:
-            names, types = infer_schema(head_file, delim)
+            types = infer_schema_distributed(drop_replacement_char_rows(frame, names))
 
-        # split sizing: a lone multi-MB CSV must still fan out across all
-        # cores (default 128 MB splits leave a 60 MB file on ONE task).
+        # split sizing: a lone multi-MB input must still fan out across
+        # all cores (default 128 MB splits leave a 60 MB file on ONE task).
         # Target ~2 splits per core, floor 4 MB, never above the default.
-        size = _input_bytes(input_path)
         par = spark.sparkContext.defaultParallelism
+        size = _input_bytes(adapter.path)
         split = min(128 << 20, max(4 << 20, size // max(1, par * 2)))
-        old_split = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-
+        set_conf("spark.sql.files.maxPartitionBytes", str(split))
         # the fused Scan→Project(11 lenient casts)→Write stage generates
         # a method far past HotSpot's JIT limits: whole-stage codegen
         # runs INTERPRETED bytecode and loses to the non-fused path
         # (measured on 600k-row lineitem, local[32]: warm 8.5s→5.2s,
         # cold 12.4s→9.6s incl. the one-shot Janino compile it skips).
-        # Pin WSCG off for the conversion job only (restored below);
-        # per-expression evaluation stays JVM-side with runtime
-        # subexpression elimination.
-        old_wscg = spark.conf.get("spark.sql.codegen.wholeStage", None)
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
+        # Pin WSCG off for the conversion job only; per-expression
+        # evaluation stays JVM-side with runtime subexpression
+        # elimination.
+        set_conf("spark.sql.codegen.wholeStage", "false")
 
-        raw = read_delimited_as_strings(spark, input_path, delim, names)
-        if strict_drop:
-            raw = drop_replacement_char_rows(raw, names)
-        # ordering (when requested) happens inside observed_typed_frame,
-        # below the observation point
-        if observe_errors:
-            typed, obs = observed_typed_frame(
-                raw, types, preserve_order=preserve_order
-            )
+        if types is None:
+            obs = Observation("row_count")
+            out = frame.observe(obs, F.count(F.lit(1)).alias("__rows"))
         else:
-            typed, obs = counted_typed_frame(
-                raw, types, preserve_order=preserve_order
-            )
+            if strict_drop:
+                frame = drop_replacement_char_rows(frame, names)
+            # ordering (when requested) happens below the observation point
+            typed = observed_typed_frame if observe_errors else counted_typed_frame
+            out, obs = typed(frame, types, preserve_order=preserve_order)
 
-        if single_file:
-            typed = typed.coalesce(1)
-
-        writer = typed.write.mode("overwrite").option("compression", "zstd")
-        if not single_file:  # single-file contract must yield exactly one part
-            writer = writer.option("maxRecordsPerFile", block_rows)
-        if single_file:
+        if single_file:  # the one-file contract must yield exactly one part
             tmp = output_path + "._spark_tmp"
-            writer.parquet(tmp)
+            out.coalesce(1).write.mode("overwrite").option(
+                "compression", "zstd"
+            ).parquet(tmp)
             _promote_single_file(tmp, output_path)
         else:
-            writer.parquet(output_path)
-    finally:
-        # a caller-provided session must not keep the mutated confs if
-        # the inference/write throws
-        if old_split is not _UNSET:
-            if old_split is not None:
-                spark.conf.set("spark.sql.files.maxPartitionBytes", old_split)
-            else:
-                spark.conf.unset("spark.sql.files.maxPartitionBytes")
-        if old_wscg is not _UNSET:
-            if old_wscg is not None:
-                spark.conf.set("spark.sql.codegen.wholeStage", old_wscg)
-            else:
-                spark.conf.unset("spark.sql.codegen.wholeStage")
-        restore_timezone(spark, prior_tz)
+            # width-adaptive output chunking (O1/S6, conversion.rs:52-58,169):
+            # the reference couples block size = parquet row-group size to
+            # the column count; the Spark analogue caps rows per output file
+            width = len(names)
+            block_rows = 250_000 if width <= 20 else 150_000 if width <= 50 else 5_000
+            out.write.mode("overwrite").option("compression", "zstd").option(
+                "maxRecordsPerFile", block_rows
+            ).parquet(output_path)
 
     got = obs.get
     # sample-based inference can pick the LongType uint64 lowering from a
     # sample whose max fits i64 while LATER rows exceed it; those values
     # null out (counted in parse_errors) — surface the silent loss
-    if not infer_full:
-        for _n, _lt in zip(names, types):
-            if _lt.kind == "uint64" and not _lt.uint_exceeds_i64 and got.get(
-                f"__err_{names.index(_n)}"
-            ):
+    if from_sample:
+        for i, (name, lt) in enumerate(zip(names, types)):
+            nulled = got.get(f"__err_{i}")
+            if lt.kind == "uint64" and not lt.uint_exceeds_i64 and nulled:
                 logging.getLogger(__name__).warning(
                     "column %r: %d value(s) outside the sample-inferred "
                     "int64 range were nulled; re-run with infer_full=True "
                     "to lower uint64 columns to DECIMAL(20,0)",
-                    _n,
-                    got[f"__err_{names.index(_n)}"],
+                    name,
+                    nulled,
                 )
     return ConvertResult(
         output_path=output_path,
         columns=names,
         types=types,
-        delimiter=delim,
+        delimiter=adapter.delimiter,
         seconds=time.monotonic() - t0,
         rows=got["__rows"],
         # infallible (string/binary) casts have no metric: structurally 0
         parse_errors={n: got.get(f"__err_{i}") or 0 for i, n in enumerate(names)},
+    )
+
+
+def convert_delimited_to_parquet(
+    spark: SparkSession,
+    input_path: str,
+    output_path: str,
+    infer_full: bool = False,
+    preserve_order: bool = False,
+    single_file: bool = False,
+    delimiter: str | None = None,
+    strict_drop: bool = False,
+    observe_errors: bool = True,
+) -> ConvertResult:
+    """End-to-end delimited conversion (the product surface,
+    main.rs:39-83): the delimiter is sniffed from the first file unless
+    given, then :func:`run_conversion` with the same options."""
+    return run_conversion(
+        spark,
+        delimited_adapter(spark, input_path, delimiter),
+        output_path,
+        infer_full=infer_full,
+        preserve_order=preserve_order,
+        single_file=single_file,
+        strict_drop=strict_drop,
+        observe_errors=observe_errors,
     )
 
 

@@ -450,17 +450,18 @@ register("warc1_response_extract", _WARC_PROJECTION_ORACLE)(_q_warc_responses)
 
 def _q_warc_roundtrip(spark, sf_dir):
     """The conversion-product path: WARC -> typed zstd parquet
-    (convert_warc_to_parquet, the --format warc CLI branch) -> read
+    (warc_adapter through run_conversion, as --format warc) -> read
     back -> same projection; proves the extraction schema (timestamp,
     int, binary) survives the parquet sink bit-exactly."""
     import os
     import tempfile
 
-    from tabular_to_parquet_spark.sources.warc import convert_warc_to_parquet
+    from tabular_to_parquet_spark.operators.convert import run_conversion
+    from tabular_to_parquet_spark.sources.warc import warc_adapter
 
     tmp = _build_warc_fixture(spark, sf_dir)
     out = os.path.join(tempfile.mkdtemp(prefix="warc2_"), "warc.parquet")
-    cols, types, _rows = convert_warc_to_parquet(spark, tmp, out)
+    types = run_conversion(spark, warc_adapter(spark, tmp), out).types
     assert types is None, "typed extraction must skip inference"
     return _warc_extract(spark.read.parquet(out))
 
@@ -829,8 +830,9 @@ def _q_tar_csv_members(spark, sf_dir):
     import tempfile
 
     from tabular_to_parquet_spark.parity.extensions import _fixture_pdf
+    from tabular_to_parquet_spark.operators.convert import run_conversion
     from tabular_to_parquet_spark.sources.tar_source import (
-        convert_tar_csv_to_parquet,
+        tar_adapter,
     )
 
     li = load_table(spark, sf_dir, "lineitem").filter(
@@ -869,7 +871,7 @@ def _q_tar_csv_members(spark, sf_dir):
                 info.size = len(data)
                 tf.addfile(info, _io.BytesIO(data))
     out = os.path.join(tmp, "lineitem_tar.parquet")
-    names, types, _rows = convert_tar_csv_to_parquet(spark, arch_dir, out)
+    types = run_conversion(spark, tar_adapter(spark, arch_dir), out).types
     assert types is not None, "tar members must run inference"
     return spark.read.parquet(out)
 
@@ -1051,15 +1053,16 @@ register("s13_knn_ivf_pq", _s13_oracle())(_q_knn_ivf_pq)
 
 def _q_xlsx_string_inference(spark, sf_dir):
     """Two single-sheet workbooks (inline-string cells) holding the
-    stringly lineitem slice -> convert_xlsx_to_parquet (binaryFile ->
+    stringly lineitem slice -> xlsx_adapter (binaryFile ->
     executor-side zip+XML parse -> shared inference -> lenient casts):
     the ipc2/tar1 shape on the spreadsheet wire format; same oracle."""
     import os
     import tempfile
 
     from tabular_to_parquet_spark.parity.extensions import _fixture_pdf
+    from tabular_to_parquet_spark.operators.convert import run_conversion
     from tabular_to_parquet_spark.sources.xlsx_source import (
-        convert_xlsx_to_parquet,
+        xlsx_adapter,
         write_xlsx,
     )
 
@@ -1086,7 +1089,7 @@ def _q_xlsx_string_inference(spark, sf_dir):
         ]
         write_xlsx(rows, os.path.join(wb_dir, f"book-{i}.xlsx"))
     out = os.path.join(tmp, "lineitem_xlsx.parquet")
-    names, types, _rows = convert_xlsx_to_parquet(spark, wb_dir, out)
+    types = run_conversion(spark, xlsx_adapter(spark, wb_dir), out).types
     assert types is not None, "xlsx members must run inference"
     return spark.read.parquet(out)
 

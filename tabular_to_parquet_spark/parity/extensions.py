@@ -1440,9 +1440,10 @@ def _q_fixed_width_conversion(spark, sf_dir):
     import os
     import tempfile
 
+    from tabular_to_parquet_spark.operators.convert import run_conversion
     from tabular_to_parquet_spark.sources.fixed_width import (
-        convert_fixed_width_to_parquet,
         fields_from_widths,
+        fixed_width_adapter,
     )
 
     orders = load_table(spark, sf_dir, "orders")
@@ -1471,7 +1472,7 @@ def _q_fixed_width_conversion(spark, sf_dir):
             ("o_orderpriority", 16),
         ]
     )
-    convert_fixed_width_to_parquet(spark, txt_file, out, fields)
+    run_conversion(spark, fixed_width_adapter(spark, txt_file, fields), out)
     # the parquet column IS DateType (inference picked date); compare
     # as timestamp because pandas maps Spark dates to objects but both
     # engines' timestamps to datetime64
@@ -1501,7 +1502,8 @@ def _q_logfmt_conversion(spark, sf_dir):
     import os
     import tempfile
 
-    from tabular_to_parquet_spark.sources.logfmt import convert_logfmt_to_parquet
+    from tabular_to_parquet_spark.operators.convert import run_conversion
+    from tabular_to_parquet_spark.sources.logfmt import logfmt_adapter
 
     orders = load_table(spark, sf_dir, "orders")
     line = F.concat(
@@ -1519,7 +1521,7 @@ def _q_logfmt_conversion(spark, sf_dir):
     )
     txt_file = glob.glob(os.path.join(txt_dir, "part-*.txt"))[0]
     out = os.path.join(tmp, "lf.parquet")
-    convert_logfmt_to_parquet(spark, txt_file, out)
+    run_conversion(spark, logfmt_adapter(spark, txt_file), out)
     return spark.read.parquet(out).withColumn(
         "date", F.col("date").cast("timestamp")
     )
@@ -2267,7 +2269,8 @@ def _q_json_roundtrip(spark, sf_dir):
     import os
     import tempfile
 
-    from tabular_to_parquet_spark.sources.json_lines import convert_json_to_parquet
+    from tabular_to_parquet_spark.operators.convert import run_conversion
+    from tabular_to_parquet_spark.sources.json_lines import json_adapter
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_returnflag", "l_shipdate"
@@ -2282,7 +2285,7 @@ def _q_json_roundtrip(spark, sf_dir):
     )
     json_file = glob.glob(os.path.join(json_dir, "part-*.json"))[0]
     out = os.path.join(tmp, "lineitem_json.parquet")
-    convert_json_to_parquet(spark, json_file, out)
+    run_conversion(spark, json_adapter(spark, json_file), out)
     return spark.read.parquet(out)
 
 
@@ -2302,8 +2305,9 @@ def _q_orc_roundtrip(spark, sf_dir):
     import os
     import tempfile
 
+    from tabular_to_parquet_spark.operators.convert import run_conversion
     from tabular_to_parquet_spark.sources.columnar import (
-        convert_columnar_to_parquet,
+        columnar_adapter,
     )
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -2313,7 +2317,7 @@ def _q_orc_roundtrip(spark, sf_dir):
     orc_dir = os.path.join(tmp, "orc")
     li.write.orc(orc_dir)
     out = os.path.join(tmp, "lineitem_orc.parquet")
-    convert_columnar_to_parquet(spark, orc_dir, out, fmt="orc")
+    run_conversion(spark, columnar_adapter(spark, orc_dir, "orc"), out)
     return spark.read.parquet(out)
 
 
@@ -2327,8 +2331,9 @@ def _q_orc_string_inference(spark, sf_dir):
     import os
     import tempfile
 
+    from tabular_to_parquet_spark.operators.convert import run_conversion
     from tabular_to_parquet_spark.sources.columnar import (
-        convert_columnar_to_parquet,
+        columnar_adapter,
     )
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -2342,7 +2347,7 @@ def _q_orc_string_inference(spark, sf_dir):
     orc_dir = os.path.join(tmp, "orc")
     stringly.write.orc(orc_dir)
     out = os.path.join(tmp, "lineitem_orc2.parquet")
-    cols, types, _rows = convert_columnar_to_parquet(spark, orc_dir, out, fmt="orc")
+    types = run_conversion(spark, columnar_adapter(spark, orc_dir, "orc"), out).types
     assert types is not None and [t.kind for t in types] == [
         "uint64", "float64", "string", "timestamp",
     ], [t.kind for t in types]
@@ -2662,8 +2667,9 @@ def _q_avro_roundtrip(spark, sf_dir):
     import tempfile
 
     from tabular_to_parquet_spark.sources.avro_python import parse_record_schema
+    from tabular_to_parquet_spark.operators.convert import run_conversion
     from tabular_to_parquet_spark.sources.columnar import (
-        convert_columnar_to_parquet,
+        columnar_adapter,
     )
 
     # deterministic fixture bound: covers every certification sf
@@ -2690,9 +2696,7 @@ def _q_avro_roundtrip(spark, sf_dir):
     avro_dir = os.path.join(tmp, "avro")
     _write_avro_fixture(pdf, avro_dir, schema, fields)
     out = os.path.join(tmp, "lineitem_avro.parquet")
-    cols, types, _rows = convert_columnar_to_parquet(
-        spark, avro_dir, out, fmt="avro"
-    )
+    types = run_conversion(spark, columnar_adapter(spark, avro_dir, "avro"), out).types
     assert types is None, "typed container must skip inference"
     return spark.read.parquet(out)
 
@@ -2708,8 +2712,9 @@ def _q_avro_string_inference(spark, sf_dir):
     import tempfile
 
     from tabular_to_parquet_spark.sources.avro_python import parse_record_schema
+    from tabular_to_parquet_spark.operators.convert import run_conversion
     from tabular_to_parquet_spark.sources.columnar import (
-        convert_columnar_to_parquet,
+        columnar_adapter,
     )
 
     li = load_table(spark, sf_dir, "lineitem").filter(
@@ -2729,9 +2734,7 @@ def _q_avro_string_inference(spark, sf_dir):
     avro_dir = os.path.join(tmp, "avro")
     _write_avro_fixture(pdf, avro_dir, schema, fields)
     out = os.path.join(tmp, "lineitem_avro2.parquet")
-    cols, types, _rows = convert_columnar_to_parquet(
-        spark, avro_dir, out, fmt="avro"
-    )
+    types = run_conversion(spark, columnar_adapter(spark, avro_dir, "avro"), out).types
     assert types is not None and [t.kind for t in types] == [
         "uint64", "float64", "string", "timestamp",
     ], types and [t.kind for t in types]
@@ -2982,7 +2985,8 @@ def _q_xml_conversion(spark, sf_dir):
     import os
     import tempfile
 
-    from tabular_to_parquet_spark.sources.xml_source import convert_xml_to_parquet
+    from tabular_to_parquet_spark.operators.convert import run_conversion
+    from tabular_to_parquet_spark.sources.xml_source import xml_adapter
 
     orders = load_table(spark, sf_dir, "orders")
     rec = F.concat(
@@ -3006,7 +3010,7 @@ def _q_xml_conversion(spark, sf_dir):
                 out_fh.write(line)
         out_fh.write("</rows>\n")
     out = os.path.join(tmp, "xml.parquet")
-    convert_xml_to_parquet(spark, xml_file, out, row_tag="row")
+    run_conversion(spark, xml_adapter(spark, xml_file, row_tag="row"), out)
     return spark.read.parquet(out).withColumn(
         "date", F.col("date").cast("timestamp")
     )
@@ -7202,8 +7206,9 @@ def _q_ipc_roundtrip(spark, sf_dir):
     import pyarrow as pa
     import pyarrow.ipc as pipc
 
+    from tabular_to_parquet_spark.operators.convert import run_conversion
     from tabular_to_parquet_spark.sources.columnar import (
-        convert_columnar_to_parquet,
+        columnar_adapter,
     )
 
     pdf = _fixture_pdf(
@@ -7231,9 +7236,7 @@ def _q_ipc_roundtrip(spark, sf_dir):
         ) as w:
             w.write_table(part, max_chunksize=4096)
     out = os.path.join(tmp, "lineitem_ipc.parquet")
-    cols, types, _rows = convert_columnar_to_parquet(
-        spark, ipc_dir, out, fmt="ipc"
-    )
+    types = run_conversion(spark, columnar_adapter(spark, ipc_dir, "ipc"), out).types
     assert types is None, "typed container must skip inference"
     return spark.read.parquet(out)
 
@@ -7590,8 +7593,9 @@ def _q_ipc_string_inference(spark, sf_dir):
     import pyarrow as pa
     import pyarrow.ipc as pipc
 
+    from tabular_to_parquet_spark.operators.convert import run_conversion
     from tabular_to_parquet_spark.sources.columnar import (
-        convert_columnar_to_parquet,
+        columnar_adapter,
     )
 
     li = load_table(spark, sf_dir, "lineitem").filter(
@@ -7624,9 +7628,7 @@ def _q_ipc_string_inference(spark, sf_dir):
         ) as w:
             w.write_table(part, max_chunksize=8192)
     out = os.path.join(tmp, "lineitem_ipc_str.parquet")
-    cols, types, _rows = convert_columnar_to_parquet(
-        spark, ipc_dir, out, fmt="ipc"
-    )
+    types = run_conversion(spark, columnar_adapter(spark, ipc_dir, "ipc"), out).types
     assert types is not None, "stringly container must run inference"
     return spark.read.parquet(out)
 

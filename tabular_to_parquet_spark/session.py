@@ -24,27 +24,20 @@ def ensure_utc(spark: SparkSession) -> str | None:
     under a non-UTC session epoch values would shift by the zone offset
     while text timestamps round-trip — internally inconsistent columns.
     Sessions built by :func:`get_spark` are already UTC; this covers
-    driver-harness or user sessions entering through the conversion API.
+    driver-harness or user sessions.
 
     Returns the PRIOR timezone string when the session had to be
-    re-pinned (``None`` when it was already UTC), so eagerly-executing
-    callers can restore it via :func:`restore_timezone` in a ``finally``
-    block. Callers that hand back a LAZY DataFrame (the json-lines and
-    columnar source fronts) must NOT restore — the conf is read at
-    action time, so un-pinning would shift the frame's epoch casts —
-    and instead document that the session stays pinned to UTC.
+    re-pinned (``None`` when it was already UTC). The conversion run
+    scopes its own pin (``operators.convert.run_conversion``); callers
+    that hand back a LAZY DataFrame must leave the pin in place — the
+    conf is read at action time, so un-pinning would shift the frame's
+    epoch casts.
     """
     prior = spark.conf.get("spark.sql.session.timeZone", "")
     if prior != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         return prior or None
     return None
-
-
-def restore_timezone(spark: SparkSession, prior: str | None) -> None:
-    """Undo :func:`ensure_utc` (no-op when it returned ``None``)."""
-    if prior is not None:
-        spark.conf.set("spark.sql.session.timeZone", prior)
 
 
 def warm_codegen(*frames) -> float:

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from tabular_to_parquet_spark.sources.adapter import Adapter
+
 SUPPORTED_FORMATS = ("orc", "avro", "ipc")
 
 
@@ -194,45 +196,16 @@ def read_columnar(spark: SparkSession, path: str, fmt: str) -> DataFrame:
         raise
 
 
-def convert_columnar_to_parquet(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    fmt: str = "orc",
-    infer_strings: bool = True,
-):
-    """ORC/Avro → typed zstd parquet.
-
-    Typed inputs pass through as-is (their schema is authoritative).
-    When ``infer_strings`` and EVERY column is a string, the table is
-    treated as raw text and run through the shared distributed
-    inference + lenient-cast projection (plans/inference.py,
-    functions/parsers.py) — the same semantics as the delimited path.
-    Returns (columns, logical types or None, rows written).
-    """
-    from tabular_to_parquet_spark.operators.convert import observed_typed_frame
-    from tabular_to_parquet_spark.plans.inference import infer_schema_distributed
-    from tabular_to_parquet_spark.session import ensure_utc, restore_timezone
-
-    # epoch-timestamp casts are session-tz-sensitive; restored in the
-    # finally below because everything here executes eagerly
-    prior_tz = ensure_utc(spark)
-    try:
-        df = read_columnar(spark, input_path, fmt)
-        all_strings = all(
-            isinstance(f.dataType, T.StringType) for f in df.schema.fields
-        )
-        if infer_strings and all_strings and df.columns:
-            types = infer_schema_distributed(df)
-            typed, obs = observed_typed_frame(df, types)
-            typed.write.mode("overwrite").option("compression", "zstd").parquet(
-                output_path
-            )
-            return df.columns, types, obs.get["__rows"]
-        df.write.mode("overwrite").option("compression", "zstd").parquet(output_path)
-        return df.columns, None, spark.read.parquet(output_path).count()
-    finally:
-        restore_timezone(spark, prior_tz)
+def columnar_adapter(spark: SparkSession, path: str, fmt: str = "orc") -> Adapter:
+    """ORC/Avro/IPC as a conversion adapter. Typed containers pass
+    through (their schema is authoritative); an all-string container is
+    raw text and runs the shared inference over the whole frame (there
+    is no driver-side reader) and the lenient casts."""
+    frame = read_columnar(spark, path, fmt)
+    stringly = bool(frame.columns) and all(
+        isinstance(f.dataType, T.StringType) for f in frame.schema.fields
+    )
+    return Adapter(frame.columns, frame, path, typed=not stringly)
 
 
 def write_ipc(

@@ -21,9 +21,12 @@ NULL downstream).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from itertools import islice
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from tabular_to_parquet_spark.sources.adapter import Adapter, first_data_file
 
 
 @dataclass(frozen=True)
@@ -48,12 +51,11 @@ def read_fixed_width_as_strings(
     spark: SparkSession, path: str, fields: list[FWField]
 ) -> DataFrame:
     """Distributed string-typed scan: substring + trim per field."""
-    raw = spark.read.text(path)
-    return raw.select(
-        *[
-            F.trim(F.substring(F.col("value"), f.start, f.width)).alias(f.name)
-            for f in fields
-        ]
+    # invalid UTF-8 bytes decode to U+FFFD, as in the delimited reader
+    # (strict_drop keys on it)
+    line = F.make_valid_utf8("value")
+    return spark.read.text(path).select(
+        *[F.trim(F.substring(line, f.start, f.width)).alias(f.name) for f in fields]
     )
 
 
@@ -65,44 +67,15 @@ def _slice_line(line: str, fields: list[FWField]) -> list[str]:
     ]
 
 
-def convert_fixed_width_to_parquet(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    fields: list[FWField],
-    infer_full: bool = False,
-):
-    """Fixed-width text → typed parquet through the SAME inference +
-    cast pipeline as the delimited path (operators/convert.py)."""
-    from tabular_to_parquet_spark.operators.convert import observed_typed_frame
-    from tabular_to_parquet_spark.plans.inference import (
-        infer_from_rows,
-        infer_schema_distributed,
-    )
-    from tabular_to_parquet_spark.session import ensure_utc, restore_timezone
+def fixed_width_adapter(
+    spark: SparkSession, path: str, fields: list[FWField]
+) -> Adapter:
+    """Fixed-width text as a conversion adapter; the sample slices the
+    first lines of the first file with the Spark projection's rules."""
 
-    from tabular_to_parquet_spark.operators.convert import first_data_file
+    def sample() -> list[list[str]]:
+        with open(first_data_file(path), encoding="utf-8", errors="replace") as fh:
+            return [_slice_line(line.rstrip("\r\n"), fields) for line in islice(fh, 1000)]
 
-    prior_tz = ensure_utc(spark)
-    try:
-        raw = read_fixed_width_as_strings(spark, input_path, fields)
-        if infer_full:
-            types = infer_schema_distributed(raw)
-        else:
-            # driver-side sample in file order, like the delimited default
-            # (directory inputs sample the lexicographically-first file)
-            rows = []
-            with open(first_data_file(input_path), encoding="utf-8",
-                      errors="replace") as fh:
-                for line in fh:
-                    if len(rows) >= 1000:
-                        break
-                    rows.append(_slice_line(line.rstrip("\r\n"), fields))
-            types = infer_from_rows(len(fields), rows)
-        typed, obs = observed_typed_frame(raw, types)
-        typed.write.mode("overwrite").option("compression", "zstd").parquet(
-            output_path
-        )
-        return [f.name for f in fields], types, obs.get
-    finally:
-        restore_timezone(spark, prior_tz)
+    frame = read_fixed_width_as_strings(spark, path, fields)
+    return Adapter([f.name for f in fields], frame, path, sample)

@@ -12,34 +12,34 @@ two wire formats.
 from __future__ import annotations
 
 import json
+from itertools import islice
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tabular_to_parquet_spark.sources.adapter import Adapter, first_data_file
+
+
+def _json_objects(path: str):
+    """One item per line: the parsed object, or ``None`` for a blank,
+    malformed or non-object line."""
+    with open(path, encoding="utf-8", errors="replace") as fh:
+        for line in fh:
+            try:
+                obj = json.loads(line)
+            except ValueError:
+                obj = None
+            yield obj if isinstance(obj, dict) else None
+
 
 def read_json_header(path: str, max_lines: int = 100) -> list[str]:
     """Column names = union of keys over the first ``max_lines``
     objects, in first-seen order (JSON has no header line)."""
-    names: list[str] = []
-    seen: set[str] = set()
-    with open(path, encoding="utf-8", errors="replace") as fh:
-        for i, line in enumerate(fh):
-            if i >= max_lines:
-                break
-            line = line.strip()
-            if not line:
-                continue
-            try:
-                obj = json.loads(line)
-            except ValueError:
-                continue
-            if isinstance(obj, dict):
-                for k in obj:
-                    if k not in seen:
-                        seen.add(k)
-                        names.append(k)
-    return names
+    names: dict[str, None] = {}  # an insertion-ordered set
+    for obj in islice(_json_objects(path), max_lines):
+        names.update(dict.fromkeys(obj or ()))
+    return list(names)
 
 
 def read_json_as_strings(
@@ -48,68 +48,39 @@ def read_json_as_strings(
     """Distributed string-typed scan of a JSON-lines file: every field
     read as its raw text so the shared cast builders own ALL type
     decisions (numbers keep their exact source text — no double
-    round-trip)."""
-    schema = T.StructType(
-        [T.StructField(name, T.StringType(), True) for name in columns]
-    )
+    round-trip).
+
+    A line that is not valid UTF-8 is one Jackson rejects outright (a
+    PERMISSIVE all-NULL row); it is re-parsed from its U+FFFD-decoded
+    text instead, as the delimited reader sees such a line — so its
+    values survive the default repair and ``strict_drop`` recognizes
+    the row."""
+    fields = [T.StructField(name, T.StringType(), True) for name in columns]
+    schema = T.StructType(fields)
     df = (
-        spark.read.schema(schema)
+        spark.read.schema(T.StructType(fields + [T.StructField("__line", T.StringType())]))
         .option("primitivesAsString", True)
         .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "__line")
         .json(path)
     )
-    return df.select(*[F.col(c) for c in columns])
-
-
-def convert_json_to_parquet(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    infer_full: bool = False,
-):
-    """JSON-lines → typed parquet through the SAME inference + cast
-    pipeline as the delimited path (convert.py)."""
-    from tabular_to_parquet_spark.operators.convert import observed_typed_frame
-    from tabular_to_parquet_spark.plans.inference import (
-        infer_from_rows,
-        infer_schema_distributed,
+    invalid = ~F.is_valid_utf8("__line")  # NULL (not invalid) for parsed lines
+    repaired = F.from_json(F.make_valid_utf8("__line"), schema)
+    return df.select(
+        *[F.when(invalid, repaired[c]).otherwise(F.col(c)).alias(c) for c in columns]
     )
-    from tabular_to_parquet_spark.session import ensure_utc, restore_timezone
 
-    # epoch-timestamp casts are session-tz-sensitive; restored in the
-    # finally below because everything here executes eagerly
-    prior_tz = ensure_utc(spark)
-    try:
-        from tabular_to_parquet_spark.operators.convert import first_data_file
 
-        head_file = first_data_file(input_path)
-        names = read_json_header(head_file)
-        raw = read_json_as_strings(spark, input_path, names)
-        if infer_full:
-            types = infer_schema_distributed(raw)
-        else:
-            # driver-side sample in file order, like the delimited default
-            rows = []
-            with open(head_file, encoding="utf-8", errors="replace") as fh:
-                for i, line in enumerate(fh):
-                    if len(rows) >= 1000:
-                        break
-                    line = line.strip()
-                    if not line:
-                        continue
-                    try:
-                        obj = json.loads(line)
-                    except ValueError:
-                        continue
-                    if isinstance(obj, dict):
-                        # JSON null / missing key observed as "" (a null
-                        # token), matching the ragged-row rule
-                        rows.append(
-                            ["" if obj.get(n) is None else str(obj.get(n)) for n in names]
-                        )
-            types = infer_from_rows(len(names), rows)
-        typed, obs = observed_typed_frame(raw, types)
-        typed.write.mode("overwrite").option("compression", "zstd").parquet(output_path)
-        return names, types, obs.get
-    finally:
-        restore_timezone(spark, prior_tz)
+def json_adapter(spark: SparkSession, path: str) -> Adapter:
+    """JSON lines as a conversion adapter; names and the sample come
+    from the first file."""
+    head = first_data_file(path)
+    names = read_json_header(head)
+
+    def sample() -> list[list[str]]:
+        # JSON null / missing key observed as "" (a null token),
+        # matching the ragged-row rule
+        objs = islice((o for o in _json_objects(head) if o is not None), 1000)
+        return [["" if o.get(n) is None else str(o.get(n)) for n in names] for o in objs]
+
+    return Adapter(names, read_json_as_strings(spark, path, names), path, sample)

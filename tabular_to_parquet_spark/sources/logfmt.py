@@ -19,9 +19,12 @@ the cast projection (documented collapse).
 from __future__ import annotations
 
 import re
+from itertools import islice
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from tabular_to_parquet_spark.sources.adapter import Adapter, first_data_file
 
 _KEY_RE = re.compile(r'(?:^| )([A-Za-z_][A-Za-z0-9_]*)=')
 
@@ -54,11 +57,14 @@ def read_logfmt_as_strings(
     """Distributed string-typed scan: one regexp per key; quoted
     content wins over the bare capture."""
     raw = spark.read.text(path)
+    # invalid UTF-8 bytes decode to U+FFFD, as in the delimited reader
+    # (strict_drop keys on it)
+    line = F.make_valid_utf8("value")
     cols = []
     for k in keys:
         pat = _value_pattern(k)
-        quoted = F.regexp_extract(F.col("value"), pat, 1)
-        bare = F.regexp_extract(F.col("value"), pat, 2)
+        quoted = F.regexp_extract(line, pat, 1)
+        bare = F.regexp_extract(line, pat, 2)
         cols.append(F.when(quoted != "", quoted).otherwise(bare).alias(k))
     return raw.select(*cols)
 
@@ -77,42 +83,14 @@ def _extract_line(line: str, keys: list[str]) -> list[str]:
     return out
 
 
-def convert_logfmt_to_parquet(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    infer_full: bool = False,
-):
-    """logfmt → typed parquet through the SAME inference + cast
-    pipeline as the delimited / JSON-lines / fixed-width paths."""
-    from tabular_to_parquet_spark.operators.convert import observed_typed_frame
-    from tabular_to_parquet_spark.plans.inference import (
-        infer_from_rows,
-        infer_schema_distributed,
-    )
-    from tabular_to_parquet_spark.session import ensure_utc, restore_timezone
+def logfmt_adapter(spark: SparkSession, path: str) -> Adapter:
+    """logfmt as a conversion adapter; keys and the sample come from
+    the first file."""
+    head = first_data_file(path)
+    keys = read_logfmt_keys(head)
 
-    from tabular_to_parquet_spark.operators.convert import first_data_file
+    def sample() -> list[list[str]]:
+        with open(head, encoding="utf-8", errors="replace") as fh:
+            return [_extract_line(line.rstrip("\r\n"), keys) for line in islice(fh, 1000)]
 
-    prior_tz = ensure_utc(spark)
-    try:
-        head = first_data_file(input_path)
-        keys = read_logfmt_keys(head)
-        raw = read_logfmt_as_strings(spark, input_path, keys)
-        if infer_full:
-            types = infer_schema_distributed(raw)
-        else:
-            rows = []
-            with open(head, encoding="utf-8", errors="replace") as fh:
-                for line in fh:
-                    if len(rows) >= 1000:
-                        break
-                    rows.append(_extract_line(line.rstrip("\r\n"), keys))
-            types = infer_from_rows(len(keys), rows)
-        typed, obs = observed_typed_frame(raw, types)
-        typed.write.mode("overwrite").option("compression", "zstd").parquet(
-            output_path
-        )
-        return keys, types, obs.get
-    finally:
-        restore_timezone(spark, prior_tz)
+    return Adapter(keys, read_logfmt_as_strings(spark, path, keys), path, sample)

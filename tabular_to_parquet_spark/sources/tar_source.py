@@ -29,6 +29,9 @@ import tarfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from tabular_to_parquet_spark.sources.adapter import Adapter, first_container
+from tabular_to_parquet_spark.sources.text import sanitize_names
+
 
 def _iter_members(buf: bytes):
     """Yield ``(name, text)`` per regular-file member, archive order."""
@@ -51,16 +54,7 @@ def read_tar_csv_header(
 ) -> list[str]:
     """Column names from the first member of the first archive (same
     single-writer-directory assumption as the Avro/IPC readers)."""
-    first = (
-        spark.read.format("binaryFile")
-        .load(path)
-        .orderBy("path")
-        .select("content")
-        .head()
-    )
-    if first is None:
-        raise ValueError(f"no archives under {path!r}")
-    for _name, text in _iter_members(bytes(first["content"])):
+    for _name, text in _iter_members(first_container(spark, path, "archives")):
         for row in _member_rows(text, delimiter):
             return [c for c in row]
     raise ValueError(f"no delimited members in the first archive under {path!r}")
@@ -118,44 +112,14 @@ def sample_rows(path_content: bytes, delimiter: str, limit: int = 1000):
     return rows
 
 
-def convert_tar_csv_to_parquet(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    delimiter: str = ",",
-    infer_full: bool = False,
-):
-    """tar-of-CSVs → typed parquet through the SAME inference + cast
-    pipeline as every other wire format."""
-    from tabular_to_parquet_spark.operators.convert import observed_typed_frame
-    from tabular_to_parquet_spark.plans.inference import (
-        infer_from_rows,
-        infer_schema_distributed,
+def tar_adapter(spark: SparkSession, path: str, delimiter: str = ",") -> Adapter:
+    """tar-of-CSVs as a conversion adapter; names and the sample come
+    from the first archive."""
+    names = sanitize_names(read_tar_csv_header(spark, path, delimiter))
+    return Adapter(
+        names,
+        read_tar_csv_as_strings(spark, path, names, delimiter),
+        path,
+        sample=lambda: sample_rows(first_container(spark, path, "archives"), delimiter),
+        delimiter=delimiter,
     )
-    from tabular_to_parquet_spark.session import ensure_utc, restore_timezone
-    from tabular_to_parquet_spark.sources.text import sanitize_names
-
-    prior_tz = ensure_utc(spark)
-    try:
-        names = sanitize_names(read_tar_csv_header(spark, input_path, delimiter))
-        raw = read_tar_csv_as_strings(spark, input_path, names, delimiter)
-        if infer_full:
-            types = infer_schema_distributed(raw)
-        else:
-            first = (
-                spark.read.format("binaryFile")
-                .load(input_path)
-                .orderBy("path")
-                .select("content")
-                .head()
-            )
-            types = infer_from_rows(
-                len(names), sample_rows(bytes(first["content"]), delimiter)
-            )
-        typed, obs = observed_typed_frame(raw, types)
-        typed.write.mode("overwrite").option("compression", "zstd").parquet(
-            output_path
-        )
-        return names, types, obs.get
-    finally:
-        restore_timezone(spark, prior_tz)

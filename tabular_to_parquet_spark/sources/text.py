@@ -26,6 +26,9 @@ import io
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from tabular_to_parquet_spark.sources.adapter import Adapter, first_data_file
+from tabular_to_parquet_spark.sources.sniff import detect_delimiter
+
 
 def open_text(path: str):
     """Text handle with transparent gzip: if the file starts with the
@@ -128,4 +131,22 @@ def read_delimited_as_strings(
         .option("mode", "PERMISSIVE")
         .option("emptyValue", "")
         .csv(path)
+    )
+
+
+def delimited_adapter(
+    spark: SparkSession, path: str, delimiter: str | None = None
+) -> Adapter:
+    """Delimited text as a conversion adapter. For a directory input the
+    sniff, header and sample read the lexicographically-first file (the
+    same file whose rows come first under preserve_order)."""
+    head = first_data_file(path)
+    delim = delimiter or detect_delimiter(head)
+    names = sanitize_names(read_header(head, delim))
+    return Adapter(
+        names,
+        read_delimited_as_strings(spark, path, delim, names),
+        path,
+        sample=lambda: read_sample_rows(head, delim)[1],
+        delimiter=delim,
     )

@@ -39,6 +39,8 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
+from tabular_to_parquet_spark.sources.adapter import Adapter
+
 #: extraction schema (DDL) — binary body LAST so prose columns print
 WARC_SCHEMA = (
     "record_id string, warc_type string, target_uri string, "
@@ -205,25 +207,12 @@ def read_warc_python(spark: SparkSession, path: str) -> DataFrame:
     return files.select("content").mapInPandas(decode, schema=WARC_SCHEMA)
 
 
-def convert_warc_to_parquet(
-    spark: SparkSession, input_path: str, output_path: str
-):
-    """WARC → typed zstd parquet of the extraction schema.  Like the
-    ORC/Avro/IPC typed path, inference is skipped — the schema is
-    fixed by the format; the lenient-cast pipeline applies downstream
-    if a user re-types the prose columns."""
-    from tabular_to_parquet_spark.session import ensure_utc, restore_timezone
-
-    prior_tz = ensure_utc(spark)
-    try:
-        df = read_warc_python(spark, input_path)
-        df.write.mode("overwrite").option("compression", "zstd").parquet(
-            output_path
-        )
-        back = spark.read.parquet(output_path)
-        return list(back.columns), None, back.count()
-    finally:
-        restore_timezone(spark, prior_tz)
+def warc_adapter(spark: SparkSession, path: str) -> Adapter:
+    """WARC as a conversion adapter: the extraction schema is fixed by
+    the format, so the typed frame passes through (no inference; the
+    lenient casts apply downstream if a user re-types prose columns)."""
+    frame = read_warc_python(spark, path)
+    return Adapter(frame.columns, frame, path, typed=True)
 
 
 # ---------------------------------------------------------------------------

@@ -28,6 +28,9 @@ from xml.etree import ElementTree as ET
 
 from pyspark.sql import DataFrame, SparkSession
 
+from tabular_to_parquet_spark.sources.adapter import Adapter, first_container
+from tabular_to_parquet_spark.sources.text import sanitize_names
+
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _CELL_REF = re.compile(r"^([A-Z]+)[0-9]+$")
 
@@ -137,16 +140,7 @@ def read_xlsx_header(spark: SparkSession, path: str) -> list[str]:
     max width, and without the strip a single ragged-wide data row
     would silently widen the schema with empty-named columns (found
     by the r11 xlsx fuzzer)."""
-    first = (
-        spark.read.format("binaryFile")
-        .load(path)
-        .orderBy("path")
-        .select("content")
-        .head()
-    )
-    if first is None:
-        raise ValueError(f"no workbooks under {path!r}")
-    rows = sheet_rows(bytes(first["content"]))
+    rows = sheet_rows(first_container(spark, path, "workbooks"))
     if not rows:
         raise ValueError("first workbook's sheet is empty")
     header = list(rows[0])
@@ -178,47 +172,17 @@ def read_xlsx_as_strings(
     return files.select("content").mapInPandas(decode, schema=schema)
 
 
-def convert_xlsx_to_parquet(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    infer_full: bool = False,
-):
-    """xlsx → typed parquet through the SHARED inference + casts."""
-    from tabular_to_parquet_spark.operators.convert import observed_typed_frame
-    from tabular_to_parquet_spark.plans.inference import (
-        infer_from_rows,
-        infer_schema_distributed,
-    )
-    from tabular_to_parquet_spark.session import ensure_utc, restore_timezone
-    from tabular_to_parquet_spark.sources.text import sanitize_names
+def xlsx_adapter(spark: SparkSession, path: str) -> Adapter:
+    """Workbooks as a conversion adapter; names and the sample come
+    from the first workbook's sheet."""
+    names = sanitize_names(read_xlsx_header(spark, path))
+    width = len(names)
 
-    prior_tz = ensure_utc(spark)
-    try:
-        names = sanitize_names(read_xlsx_header(spark, input_path))
-        raw = read_xlsx_as_strings(spark, input_path, names)
-        if infer_full:
-            types = infer_schema_distributed(raw)
-        else:
-            first = (
-                spark.read.format("binaryFile")
-                .load(input_path)
-                .orderBy("path")
-                .select("content")
-                .head()
-            )
-            sample = [
-                (r + [""] * (len(names) - len(r)))[: len(names)]
-                for r in sheet_rows(bytes(first["content"]))[1:1001]
-            ]
-            types = infer_from_rows(len(names), sample)
-        typed, obs = observed_typed_frame(raw, types)
-        typed.write.mode("overwrite").option("compression", "zstd").parquet(
-            output_path
-        )
-        return names, types, obs.get
-    finally:
-        restore_timezone(spark, prior_tz)
+    def sample() -> list[list[str]]:
+        rows = sheet_rows(first_container(spark, path, "workbooks"))[1:1001]
+        return [(r + [""] * (width - len(r)))[:width] for r in rows]
+
+    return Adapter(names, read_xlsx_as_strings(spark, path, names), path, sample)
 
 
 # ---------------------------------------------------------------------------

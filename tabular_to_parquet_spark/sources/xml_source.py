@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tabular_to_parquet_spark.sources.adapter import Adapter, first_data_file
+
 
 def read_xml_tags(path: str, row_tag: str, max_rows: int = 100) -> list[str]:
     """Column names = union of child tags over the first ``max_rows``
@@ -77,38 +79,14 @@ def sample_xml_rows(
     return rows
 
 
-def convert_xml_to_parquet(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    row_tag: str = "row",
-    infer_full: bool = False,
-):
-    """XML → typed parquet through the SAME inference + cast pipeline
-    as the delimited path (convert.py)."""
-    from tabular_to_parquet_spark.operators.convert import (
-        first_data_file,
-        observed_typed_frame,
+def xml_adapter(spark: SparkSession, path: str, row_tag: str = "row") -> Adapter:
+    """Record-per-element XML as a conversion adapter; tags and the
+    sample come from the first file."""
+    head = first_data_file(path)
+    names = read_xml_tags(head, row_tag)
+    return Adapter(
+        names,
+        read_xml_as_strings(spark, path, row_tag, names),
+        path,
+        sample=lambda: sample_xml_rows(head, row_tag, names),
     )
-    from tabular_to_parquet_spark.plans.inference import (
-        infer_from_rows,
-        infer_schema_distributed,
-    )
-    from tabular_to_parquet_spark.session import ensure_utc, restore_timezone
-
-    prior_tz = ensure_utc(spark)
-    try:
-        head_file = first_data_file(input_path)
-        names = read_xml_tags(head_file, row_tag)
-        raw = read_xml_as_strings(spark, input_path, row_tag, names)
-        if infer_full:
-            types = infer_schema_distributed(raw)
-        else:
-            types = infer_from_rows(
-                len(names), sample_xml_rows(head_file, row_tag, names)
-            )
-        typed, obs = observed_typed_frame(raw, types)
-        typed.write.mode("overwrite").option("compression", "zstd").parquet(output_path)
-        return names, types, obs.get
-    finally:
-        restore_timezone(spark, prior_tz)

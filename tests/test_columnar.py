@@ -5,8 +5,9 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from tabular_to_parquet_spark.operators.convert import run_conversion
 from tabular_to_parquet_spark.sources.columnar import (
-    convert_columnar_to_parquet,
+    columnar_adapter,
     read_columnar,
 )
 
@@ -18,8 +19,8 @@ def test_orc_typed_passthrough(spark, tmp_path):
     src = str(tmp_path / "t.orc")
     df.write.orc(src)
     out = str(tmp_path / "t.parquet")
-    cols, types, rows = convert_columnar_to_parquet(spark, src, out, fmt="orc")
-    assert cols == ["i", "f", "s"] and types is None and rows == 2
+    res = run_conversion(spark, columnar_adapter(spark, src, "orc"), out)
+    assert res.columns == ["i", "f", "s"] and res.types is None and res.rows == 2
     got = duckdb.sql(f"SELECT * FROM '{out}/*.parquet' ORDER BY i").fetchall()
     assert got == [(1, 2.5, "a"), (2, 3.5, "b")]
 
@@ -32,9 +33,9 @@ def test_orc_string_reinference(spark, tmp_path):
     src = str(tmp_path / "s.orc")
     df.write.orc(src)
     out = str(tmp_path / "s.parquet")
-    cols, types, rows = convert_columnar_to_parquet(spark, src, out, fmt="orc")
-    assert [t.kind for t in types] == ["uint64", "bool", "date"]
-    assert rows == 40
+    res = run_conversion(spark, columnar_adapter(spark, src, "orc"), out)
+    assert [t.kind for t in res.types] == ["uint64", "bool", "date"]
+    assert res.rows == 40
     kinds = {r[0]: r[1] for r in duckdb.sql(
         f"DESCRIBE SELECT * FROM '{out}/*.parquet'").fetchall()}
     assert kinds == {"i": "BIGINT", "b": "BOOLEAN", "d": "DATE"}
@@ -99,8 +100,8 @@ def test_avro_convert_typed_and_reinference(spark, tmp_path):
 
     src = _write_parts(tmp_path)
     out = str(tmp_path / "typed.parquet")
-    cols, types, rows = convert_columnar_to_parquet(spark, src, out, fmt="avro")
-    assert types is None and rows == 3
+    res = run_conversion(spark, columnar_adapter(spark, src, "avro"), out)
+    assert res.types is None and res.rows == 3
 
     # all-string container goes through shared inference
     sschema = {"type": "record", "name": "s", "fields": [
@@ -115,10 +116,8 @@ def test_avro_convert_typed_and_reinference(spark, tmp_path):
          for k in range(40)],
     )
     out2 = str(tmp_path / "inferred.parquet")
-    cols2, types2, rows2 = convert_columnar_to_parquet(
-        spark, str(d2), out2, fmt="avro"
-    )
-    assert [t.kind for t in types2] == ["uint64", "bool"] and rows2 == 40
+    res2 = run_conversion(spark, columnar_adapter(spark, str(d2), "avro"), out2)
+    assert [t.kind for t in res2.types] == ["uint64", "bool"] and res2.rows == 40
 
 
 def test_avro_unsupported_shapes_raise(tmp_path):

@@ -205,17 +205,42 @@ def test_preserve_order_multi_file_roundtrip(spark, tmp_path):
     assert got == want
 
 
-def test_max_partition_bytes_restored_on_failure(spark, tmp_path):
+def _convert_delimited(spark, tmp_path, out):
     src = tmp_path / "ok.csv"
     src.write_text("x\n1\n2\n")
-    before = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
+    return convert_delimited_to_parquet(spark, str(src), out)
+
+
+def _convert_jsonl(spark, tmp_path, out):
+    from tabular_to_parquet_spark.operators.convert import run_conversion
+    from tabular_to_parquet_spark.sources.json_lines import json_adapter
+
+    src = tmp_path / "ok.ndjson"
+    src.write_text('{"x": 1}\n{"x": 2}\n')
+    return run_conversion(spark, json_adapter(spark, str(src)), out)
+
+
+#: every format runs the same scoped-conf code; one delimited and one
+#: non-delimited source pin that down
+SCOPED_CONFS = ("spark.sql.files.maxPartitionBytes", "spark.sql.codegen.wholeStage")
+
+
+def _check_scoped_confs_restored(spark, tmp_path, convert):
+    before = [spark.conf.get(k, None) for k in SCOPED_CONFS]
     # force a write failure: output path is an unwritable location
     with pytest.raises(Exception):
-        convert_delimited_to_parquet(
-            spark, str(src), "/proc/definitely/not/writable.parquet"
-        )
-    after = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-    assert after == before
+        convert(spark, tmp_path, "/proc/definitely/not/writable.parquet")
+    assert [spark.conf.get(k, None) for k in SCOPED_CONFS] == before
+    convert(spark, tmp_path, str(tmp_path / "ok.parquet"))
+    assert [spark.conf.get(k, None) for k in SCOPED_CONFS] == before
+
+
+def test_max_partition_bytes_restored_on_failure(spark, tmp_path):
+    _check_scoped_confs_restored(spark, tmp_path, _convert_delimited)
+
+
+def test_scoped_confs_restored_jsonl(spark, tmp_path):
+    _check_scoped_confs_restored(spark, tmp_path, _convert_jsonl)
 
 
 def test_strict_drop_invalid_utf8_p14(spark, tmp_path):
@@ -241,25 +266,35 @@ def test_strict_drop_invalid_utf8_p14(spark, tmp_path):
     assert [r[0] for r in kept] == [i for i in range(100) if i % 5]
 
 
+def _check_timezone_restored(spark, tmp_path, convert):
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    prev_wscg = spark.conf.get("spark.sql.codegen.wholeStage")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    try:
+        convert(spark, tmp_path, str(tmp_path / "tz.parquet"))
+        assert spark.conf.get("spark.sql.session.timeZone") == "Asia/Tokyo"
+        assert spark.conf.get("spark.sql.codegen.wholeStage") == "true"
+        # and on failure too
+        with pytest.raises(Exception):
+            convert(spark, tmp_path, "/proc/definitely/not/writable.parquet")
+        assert spark.conf.get("spark.sql.session.timeZone") == "Asia/Tokyo"
+        assert spark.conf.get("spark.sql.codegen.wholeStage") == "true"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+        spark.conf.set("spark.sql.codegen.wholeStage", prev_wscg)
+
+
 def test_timezone_restored_after_conversion(spark, tmp_path):
     """ADVICE r2: a caller-provided session's timeZone must be restored
     after the (eager) conversion returns — pinning UTC is an internal
-    detail, not a lasting side effect."""
-    src = tmp_path / "tz.csv"
-    src.write_text("x\n1\n2\n")
-    prev = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
-    try:
-        convert_delimited_to_parquet(spark, str(src), str(tmp_path / "tz.parquet"))
-        assert spark.conf.get("spark.sql.session.timeZone") == "Asia/Tokyo"
-        # and on failure too
-        with pytest.raises(Exception):
-            convert_delimited_to_parquet(
-                spark, str(src), "/proc/definitely/not/writable.parquet"
-            )
-        assert spark.conf.get("spark.sql.session.timeZone") == "Asia/Tokyo"
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev)
+    detail, not a lasting side effect. The same holds for whole-stage
+    codegen, which the conversion job pins off."""
+    _check_timezone_restored(spark, tmp_path, _convert_delimited)
+
+
+def test_timezone_restored_after_conversion_jsonl(spark, tmp_path):
+    _check_timezone_restored(spark, tmp_path, _convert_jsonl)
 
 
 def test_strict_full_inference_skips_invalid_utf8(spark, tmp_path):
@@ -320,3 +355,40 @@ def test_sink_storage_contract(spark, tmp_path):
     assert rep["codecs"] == ["ZSTD"]
     assert rep["max_row_group_rows"] <= 250_000
     assert rep["ratio"] and rep["ratio"] > 1.0
+
+
+#: one line per format carrying an integer i and a string s
+_LINES = {
+    "jsonl": lambda i, s: b'{"i": %d, "s": "%s"}' % (i, s),
+    "fixed-width": lambda i, s: b"%4d%6s" % (i, s),
+    "logfmt": lambda i, s: b"i=%d s=%s" % (i, s),
+}
+
+
+@pytest.mark.parametrize("fmt", list(_LINES))
+def test_strict_drop_string_adapters(spark, tmp_path, fmt):
+    # every string-typed adapter reads an invalid UTF-8 byte as U+FFFD,
+    # like the delimited reader: the default keeps (repairs) the line,
+    # strict drop removes exactly those lines
+    from tabular_to_parquet_spark.operators.convert import run_conversion
+    from tabular_to_parquet_spark.sources import fixed_width, json_lines, logfmt
+
+    src = tmp_path / "in.txt"
+    src.write_bytes(
+        b"".join(_LINES[fmt](i, b"ok" if i % 5 else b"bad\xff") + b"\n" for i in range(50))
+    )
+    if fmt == "jsonl":
+        adapter = json_lines.json_adapter(spark, str(src))
+    elif fmt == "logfmt":
+        adapter = logfmt.logfmt_adapter(spark, str(src))
+    else:
+        fields = fixed_width.fields_from_widths([("i", 4), ("s", 6)])
+        adapter = fixed_width.fixed_width_adapter(spark, str(src), fields)
+    lax = tmp_path / "lax.parquet"
+    assert run_conversion(spark, adapter, str(lax)).rows == 50
+    repaired = duckdb.sql(f"SELECT i, s FROM '{lax}/*.parquet' WHERE i = 5").fetchall()
+    assert repaired == [(5, "bad\ufffd")]
+    out = tmp_path / "strict.parquet"
+    assert run_conversion(spark, adapter, str(out), strict_drop=True).rows == 40
+    kept = duckdb.sql(f"SELECT i FROM '{out}/*.parquet' ORDER BY i").fetchall()
+    assert [r[0] for r in kept] == [i for i in range(50) if i % 5]

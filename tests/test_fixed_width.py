@@ -5,12 +5,14 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import types as T
 
+from tabular_to_parquet_spark.operators.convert import run_conversion
 from tabular_to_parquet_spark.sources.fixed_width import (
     FWField,
-    convert_fixed_width_to_parquet,
     fields_from_widths,
+    fixed_width_adapter,
     read_fixed_width_as_strings,
 )
 
@@ -18,6 +20,19 @@ from tabular_to_parquet_spark.sources.fixed_width import (
 def test_fields_from_widths_contiguous():
     fs = fields_from_widths([("a", 3), ("b", 5), ("c", 2)])
     assert fs == [FWField("a", 1, 3), FWField("b", 4, 5), FWField("c", 9, 2)]
+
+
+@pytest.mark.parametrize("spec", ["a:x", "a", "a:0", "a:-3", "a:5,:4"])
+def test_cli_rejects_malformed_spec_before_spark(spec, tmp_path, capsys):
+    # argparse exits 2 while parsing, so no Spark session is ever built
+    from tabular_to_parquet_spark import cli
+
+    src = tmp_path / "fw.txt"
+    src.write_text("abc\n")
+    with pytest.raises(SystemExit) as exc:
+        cli.main([str(src), "--format", "fixed-width", "--fixed-width-spec", spec])
+    assert exc.value.code == 2
+    assert "--fixed-width-spec" in capsys.readouterr().err
 
 
 def test_read_and_convert_fixed_width(spark, tmp_path):
@@ -44,8 +59,8 @@ def test_read_and_convert_fixed_width(spark, tmp_path):
     assert raw["444"]["price"] == ""           # ragged -> empty
 
     out = str(tmp_path / "fw.parquet")
-    names, types, _ = convert_fixed_width_to_parquet(spark, str(src), out, fields)
-    assert names == ["id", "name", "price", "d"]
+    res = run_conversion(spark, fixed_width_adapter(spark, str(src), fields), out)
+    assert res.columns == ["id", "name", "price", "d"]
     got = spark.read.parquet(out)
     schema = {f.name: f.dataType for f in got.schema.fields}
     assert schema["id"] == T.LongType()
@@ -62,9 +77,7 @@ def test_date_column_infers_date(spark, tmp_path):
     src = tmp_path / "d.txt"
     src.write_text("2024-01-02\n2024-02-03\n")
     out = str(tmp_path / "d.parquet")
-    convert_fixed_width_to_parquet(
-        spark, str(src), out, [FWField("d", 1, 10)]
-    )
+    run_conversion(spark, fixed_width_adapter(spark, str(src), [FWField("d", 1, 10)]), out)
     got = spark.read.parquet(out)
     assert got.schema.fields[0].dataType == T.DateType()
     assert got.count() == 2

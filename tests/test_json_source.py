@@ -6,8 +6,9 @@ import datetime
 
 import duckdb
 
+from tabular_to_parquet_spark.operators.convert import run_conversion
 from tabular_to_parquet_spark.sources.json_lines import (
-    convert_json_to_parquet,
+    json_adapter,
     read_json_header,
 )
 
@@ -22,16 +23,16 @@ def test_json_lines_conversion(spark, tmp_path):
     src.write_text("\n".join(lines) + "\n")
     assert read_json_header(str(src)) == ["i", "f", "b", "d"]
     out = tmp_path / "d.parquet"
-    names, types, metrics = convert_json_to_parquet(spark, str(src), str(out))
-    assert names == ["i", "f", "b", "d"]
-    assert [t.kind for t in types] == ["uint64", "float64", "bool", "date"]
+    res = run_conversion(spark, json_adapter(spark, str(src)), str(out))
+    assert res.columns == ["i", "f", "b", "d"]
+    assert [t.kind for t in res.types] == ["uint64", "float64", "bool", "date"]
     rows = duckdb.sql(
         f"SELECT * FROM '{out}/*.parquet' ORDER BY i NULLS FIRST LIMIT 3"
     ).fetchall()
     # null token NA -> null; "off" -> false; day-first date; missing key -> null
     assert rows[0] == (None, None, False, datetime.date(2024, 1, 2))
     assert rows[1] == (0, 0.5, True, datetime.date(2024, 1, 2))
-    assert metrics["__rows"] == 203
+    assert res.rows == 203
 
 
 def test_json_full_scan_inference(spark, tmp_path):
@@ -40,7 +41,7 @@ def test_json_full_scan_inference(spark, tmp_path):
     vals[1100] = "99.5"
     src.write_text("\n".join(f'{{"x": {v}}}' for v in vals) + "\n")
     out = tmp_path / "late.parquet"
-    _, types_sample, _ = convert_json_to_parquet(spark, str(src), str(out))
-    assert types_sample[0].kind == "uint64"
-    _, types_full, _ = convert_json_to_parquet(spark, str(src), str(out), infer_full=True)
-    assert types_full[0].kind == "float64"
+    res_sample = run_conversion(spark, json_adapter(spark, str(src)), str(out))
+    assert res_sample.types[0].kind == "uint64"
+    res_full = run_conversion(spark, json_adapter(spark, str(src)), str(out), infer_full=True)
+    assert res_full.types[0].kind == "float64"

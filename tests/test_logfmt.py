@@ -5,8 +5,9 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
+from tabular_to_parquet_spark.operators.convert import run_conversion
 from tabular_to_parquet_spark.sources.logfmt import (
-    convert_logfmt_to_parquet,
+    logfmt_adapter,
     read_logfmt_as_strings,
     read_logfmt_keys,
 )
@@ -30,7 +31,7 @@ def test_logfmt_keys_and_values(spark, tmp_path):
     assert by_n["3"]["level"] == "error" # order-independent extraction
 
     out = str(tmp_path / "app.parquet")
-    names, types, _ = convert_logfmt_to_parquet(spark, str(src), out)
+    run_conversion(spark, logfmt_adapter(spark, str(src)), out)
     got = spark.read.parquet(out)
     schema = {f.name: f.dataType for f in got.schema.fields}
     assert schema["n"] == T.LongType()
@@ -45,7 +46,8 @@ def test_cli_format_flag(tmp_path):
     import sys
 
     src = tmp_path / "a.log"
-    src.write_text("k=1 v=2.5\nk=2 v=3.5\n")
+    # one unparseable v in 60 stays under the float threshold (98%)
+    src.write_text("".join(f"k={i} v={i}.5\n" for i in range(1, 60)) + "k=60 v=oops\n")
     out = tmp_path / "a.parquet"
     r = subprocess.run(
         [sys.executable, "-m", "tabular_to_parquet_spark.cli", str(src),
@@ -54,6 +56,10 @@ def test_cli_format_flag(tmp_path):
     )
     assert r.returncode == 0, r.stderr
     assert "k:uint64" in r.stderr and "v:float64" in r.stderr
+    # the same banner as the delimited path: rows, throughput, and the
+    # per-column parse errors
+    assert "conversion done: 60 rows in" in r.stderr and "lines/s" in r.stderr
+    assert "parse errors (value → NULL): 1 across {'v': 1}" in r.stderr
 
 
 def test_logfmt_extraction_differential(spark, tmp_path):

@@ -283,15 +283,25 @@ def test_cli_single_file_honored_for_ipc(spark, tmp_path):
     assert (n, sk) == (300, sum(range(300)))
 
 
-def test_cli_preserve_order_refused_for_container_formats(spark, tmp_path):
+def _check_cli_flag_refused_for_ipc(spark, tmp_path, flag):
     from tabular_to_parquet_spark.sources.columnar import write_ipc
 
     src = spark.range(0, 10).select(F.col("id").alias("k"))
     ipc_dir = str(tmp_path / "po_ipc")
     write_ipc(src, ipc_dir)
-    proc = _cli([ipc_dir, "--format", "ipc", "--preserve-order"])
+    proc = _cli([ipc_dir, "--format", "ipc", flag])
     assert proc.returncode == 1
-    assert "--preserve-order" in proc.stderr
+    assert flag in proc.stderr
+
+
+def test_cli_preserve_order_refused_for_container_formats(spark, tmp_path):
+    # typed containers pass through: input order is not defined for them
+    _check_cli_flag_refused_for_ipc(spark, tmp_path, "--preserve-order")
+
+
+def test_cli_strict_drop_refused_for_container_formats(spark, tmp_path):
+    # nor is the invalid-UTF-8 row drop: typed columns carry no raw text
+    _check_cli_flag_refused_for_ipc(spark, tmp_path, "--strict-drop")
 
 
 # ---------------------------------------------------------------------------

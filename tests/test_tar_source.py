@@ -7,6 +7,7 @@ import csv
 import io
 import tarfile
 
+from tabular_to_parquet_spark.operators.convert import run_conversion
 from tabular_to_parquet_spark.sources import tar_source as ts
 
 
@@ -71,8 +72,8 @@ def test_convert_infers_types(spark, tmp_path):
     rows = [["n", "f", "s"]] + [[str(i), f"{i}.5", f"w{i}"] for i in range(50)]
     _make_tar(d / "a.tar", {"m1.csv": rows}, gz=False)
     out = str(tmp_path / "out.parquet")
-    names, types, obs = ts.convert_tar_csv_to_parquet(spark, str(d), out)
-    assert names == ["n", "f", "s"]
+    res = run_conversion(spark, ts.tar_adapter(spark, str(d)), out)
+    assert res.columns == ["n", "f", "s"]
     back = spark.read.parquet(out)
     dt = dict(back.dtypes)
     assert dt["n"] == "bigint" and dt["f"] == "double" and dt["s"] == "string"

@@ -7,6 +7,7 @@ import gzip
 
 import pytest
 
+from tabular_to_parquet_spark.operators.convert import run_conversion
 from tabular_to_parquet_spark.sources import warc
 
 
@@ -96,8 +97,8 @@ def test_convert_cli_branch(spark, tmp_path):
     d.mkdir()
     (d / "a.warc").write_bytes(_record(0))
     out = str(tmp_path / "out.parquet")
-    cols, types, n = warc.convert_warc_to_parquet(spark, str(d), out)
-    assert types is None and n == 1
+    res = run_conversion(spark, warc.warc_adapter(spark, str(d)), out)
+    assert res.types is None and res.rows == 1
     back = spark.read.parquet(out)
     assert back.count() == 1
     assert dict(back.dtypes)["warc_date"] == "timestamp"

@@ -6,6 +6,7 @@ from __future__ import annotations
 import io
 import zipfile
 
+from tabular_to_parquet_spark.operators.convert import run_conversion
 from tabular_to_parquet_spark.sources import xlsx_source as xs
 
 
@@ -73,8 +74,8 @@ def test_convert_infers_types(spark, tmp_path):
     rows = [["n", "f", "s"]] + [[str(i), f"{i}.5", f"w{i}"] for i in range(40)]
     xs.write_xlsx(rows, str(d / "b.xlsx"))
     out = str(tmp_path / "out.parquet")
-    names, types, obs = xs.convert_xlsx_to_parquet(spark, str(d), out)
-    assert names == ["n", "f", "s"]
+    res = run_conversion(spark, xs.xlsx_adapter(spark, str(d)), out)
+    assert res.columns == ["n", "f", "s"]
     back = spark.read.parquet(out)
     dt = dict(back.dtypes)
     assert dt["n"] == "bigint" and dt["f"] == "double" and dt["s"] == "string"

@@ -11,6 +11,7 @@ import sys
 import duckdb
 import pytest
 
+from tabular_to_parquet_spark.operators.convert import run_conversion
 from tabular_to_parquet_spark.sources import xml_source as xs
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -36,7 +37,8 @@ def test_tag_discovery_first_seen_order(xml_file):
 
 def test_missing_and_empty_collapse_to_null(spark, xml_file, tmp_path):
     out = str(tmp_path / "out.parquet")
-    names, types, _ = xs.convert_xml_to_parquet(spark, xml_file, out)
+    res = run_conversion(spark, xs.xml_adapter(spark, xml_file), out)
+    names, types = res.columns, res.types
     assert names == ["id", "name", "score", "extra"]
     rows = {r["id"]: r for r in spark.read.parquet(out).collect()}
     assert rows[1]["score"] == 2.5 and rows[1]["name"] == "alice"
@@ -61,3 +63,5 @@ def test_cli_xml_format(xml_file, tmp_path):
     )
     assert r.returncode == 0, r.stderr[-2000:]
     assert duckdb.sql(f"SELECT COUNT(*) FROM '{out}/*.parquet'").fetchone()[0] == 3
+    # the same banner as the delimited path: rows and throughput
+    assert "conversion done: 3 rows in" in r.stderr and "lines/s" in r.stderr

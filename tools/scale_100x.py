@@ -470,15 +470,16 @@ def _stringly_lineitem(spark, sf_dir: str):
 def _tar_leg(spark, sf_dir: str, work: str) -> None:
     """One .tar.gz (single CSV member) per partition, written
     executor-side (pandas to_csv — vectorized), then
-    convert_tar_csv_to_parquet over the archive directory."""
+    the tar adapter over the archive directory."""
     import io
     import shutil
     import uuid
 
     import pandas as pd
 
+    from tabular_to_parquet_spark.operators.convert import run_conversion
     from tabular_to_parquet_spark.sources.tar_source import (
-        convert_tar_csv_to_parquet,
+        tar_adapter,
     )
 
     arch_dir = os.path.join(work, "tar_arch")
@@ -507,9 +508,8 @@ def _tar_leg(spark, sf_dir: str, work: str) -> None:
     _stringly_lineitem(spark, sf_dir).repartition(32).mapInPandas(
         dump, "n long"
     ).collect()
-    convert_tar_csv_to_parquet(
-        spark, arch_dir, os.path.join(work, "lineitem_tar_out.parquet")
-    )
+    out = os.path.join(work, "lineitem_tar_out.parquet")
+    run_conversion(spark, tar_adapter(spark, arch_dir), out)
 
 
 def _xlsx_leg(spark, sf_dir: str, work: str) -> None:
@@ -517,14 +517,15 @@ def _xlsx_leg(spark, sf_dir: str, work: str) -> None:
     (partition count keeps each sheet under the OOXML 1,048,576-row
     limit — a 100x single sheet isn't even a VALID workbook, so 'more
     workbooks' is the only honest growth mode), then
-    convert_xlsx_to_parquet over the directory."""
+    the xlsx adapter over the directory."""
     import shutil
     import uuid
 
     import pandas as pd
 
+    from tabular_to_parquet_spark.operators.convert import run_conversion
     from tabular_to_parquet_spark.sources.xlsx_source import (
-        convert_xlsx_to_parquet,
+        xlsx_adapter,
         write_xlsx,
     )
 
@@ -545,9 +546,8 @@ def _xlsx_leg(spark, sf_dir: str, work: str) -> None:
     _stringly_lineitem(spark, sf_dir).repartition(96).mapInPandas(
         dump, "n long"
     ).collect()
-    convert_xlsx_to_parquet(
-        spark, wb_dir, os.path.join(work, "lineitem_xlsx_out.parquet")
-    )
+    out = os.path.join(work, "lineitem_xlsx_out.parquet")
+    run_conversion(spark, xlsx_adapter(spark, wb_dir), out)
 
 
 def _warc_leg(spark, sf_dir: str, work: str) -> None:
