@@ -30,7 +30,7 @@ from tabular_to_parquet_spark.operators import dedup, multimodal, similarity
 from tabular_to_parquet_spark.operators import text_analysis as ta
 from tabular_to_parquet_spark.operators.convert import convert_delimited_to_parquet
 from tabular_to_parquet_spark.plans.inference import infer_schema_distributed
-from tabular_to_parquet_spark.session import get_spark
+from tabular_to_parquet_spark.session import get_spark, resolve_cpus
 from tabular_to_parquet_spark.sources.tables import load_table
 from tabular_to_parquet_spark.sources.text import (
     read_delimited_as_strings,
@@ -189,12 +189,11 @@ def main() -> None:
         _over.append((time.monotonic() - _t0 - 0.001) * 1e6)
     sched_latency_p90_us = round(sorted(_over)[180])
     spark = get_spark("bench")
-    # EFFECTIVE core count (r14 verdict item 2a): get_spark honors
-    # $SPARK_GRAFT_CPUS (master local[N], shuffle.partitions N) but the
-    # payload used to stamp os.cpu_count() — the driver's 8-core run
-    # printed "cpus": 32, which is exactly what tripped its
+    # EFFECTIVE core count: the resolver get_spark sizes local[N] and
+    # shuffle.partitions N from. Stamping os.cpu_count() instead once
+    # reported "cpus": 32 for an 8-core run, which tripped the
     # suspect_cpus_ignored check and voided the scaling comparison.
-    eff_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    eff_cpus = resolve_cpus()
     default_par = spark.sparkContext.defaultParallelism
     canary_noop = _canary_spark_noop(spark)
     print(

@@ -6,7 +6,7 @@ trim the value; empty → null; case-insensitive membership in
 before attempting a parse.
 
 All builders are pure ``Column -> Column`` functions over built-in
-expressions — JVM-side, whole-stage-codegen friendly; no Python UDFs.
+expressions, evaluated JVM-side; no Python UDFs.
 """
 
 from __future__ import annotations
@@ -29,6 +29,19 @@ WHITESPACE = (
     "    　"
 )
 
+#: the whole null-token test as one anchored regex on the raw value:
+#: WHITESPACE*, at most one token, WHITESPACE*, end of input. ``\z``,
+#: not ``$``: Java's ``$`` also matches before a final line terminator.
+#: The runs are possessive (``*+``), so a long blank run followed by
+#: text fails in linear time.
+#: ``(?i)`` folds ASCII case only, which is exact here: no non-ASCII
+#: character lower-cases into a token letter (Python's ``str.lower``
+#: maps U+212A to "k" and U+0130 to "i̇", neither a token letter).
+NULL_TOKEN_RE = (
+    f"(?i)^[{WHITESPACE}]*+(?:{'|'.join(NULL_TOKENS)})?[{WHITESPACE}]*+\\z"
+)
+
+
 def trimmed(c: Column) -> Column:
     """Whitespace-trim (utils.rs:49 `v.trim()`).
 
@@ -41,9 +54,11 @@ def trimmed(c: Column) -> Column:
 
 
 def is_null_token(c: Column) -> Column:
-    """Boolean: value is a null token (utils.rs:48-57)."""
-    t = trimmed(c)
-    return c.isNull() | (t == "") | F.lower(t).isin(*NULL_TOKENS)
+    """Boolean: value is a null token (utils.rs:48-57).
+
+    One regex pass over the raw value (:data:`NULL_TOKEN_RE`): no
+    trimmed or lower-cased copy of the string is built."""
+    return c.isNull() | c.rlike(NULL_TOKEN_RE)
 
 
 def normalize_nulls(c: Column) -> Column:

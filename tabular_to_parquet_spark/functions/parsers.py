@@ -1,9 +1,20 @@
 """Lenient cast expression builders (operators P2-P12, SURVEY.md §2.2).
 
 Each builder is a pure ``Column -> Column`` over built-in Spark SQL
-expressions (no Python UDFs — everything stays in whole-stage codegen).
+expressions (no Python UDFs; everything is evaluated JVM-side).
 Shared template (reference src/analyse.rs:108-315): null-token → NULL;
 parse success → value; parse failure / out-of-range → NULL, never error.
+
+Every fallible builder but ``parse_bool`` and the DECIMAL(20,0)
+``parse_uint64`` is ``coalesce(clean(c), lenient(c))``. The
+lenient half is the full parse above. The clean half is one
+``\\z``-anchored shape regex on the raw, untrimmed value and one native
+``try_cast``: a value of a clean shape is never a null token and needs
+no trim, and the clean half returns NULL or exactly the lenient value,
+so the lenient half runs only on the values the clean one misses
+(padding, null tokens, other spellings, out-of-range values). For the
+timestamp casts that equality needs a UTC session, which every
+conversion pins (see :func:`parse_timestamp`).
 
 Reference cites use file:line of /root/reference (read-only snapshot).
 """
@@ -37,6 +48,24 @@ FLOAT_RE = r"(?i)^[+-]?(inf(inity)?|nan|([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0
 #: fraction (utils.rs:88-91 — chrono %.f accepts 1-9 fractional digits)
 TS_DASH_RE = r"^([0-9]{4}-[0-9]{1,2}-[0-9]{1,2})[T ]([0-9]{1,2}:[0-9]{1,2}:[0-9]{1,2})(\.([0-9]{1,9}))?$"
 
+#: clean shapes (see the module docstring). ``\z``, not ``$``: Java's
+#: ``$`` also matches before a final line terminator, and a value with
+#: one is not clean (the lenient half trims it). The float shape allows
+#: at most 200 integer digits and a 1-2 digit exponent, so its value is
+#: always finite (below 10**299) and needs no range check.
+CLEAN_INT_RE = r"^[+-]?[0-9]+\z"
+CLEAN_UINT_RE = r"^\+?[0-9]+\z"
+CLEAN_FLOAT_RE = r"^[+-]?(?:[0-9]{1,200}(?:\.[0-9]*)?|\.[0-9]+)(?:[eE][+-]?[0-9]{1,2})?\z"
+CLEAN_DATE_RE = r"^[0-9]{4}-[0-9]{2}-[0-9]{2}\z"
+_CLEAN_TS_TAIL = r"-[0-9]{2}-[0-9]{2}[T ][0-9]{2}:[0-9]{2}:[0-9]{2}(?:\.[0-9]{1,9})?\z"
+CLEAN_TS_RE = r"^[0-9]{4}" + _CLEAN_TS_TAIL
+#: years 1971-9999 only: there the epoch is positive under any session
+#: offset up to ±14 h, so flooring to seconds equals the lenient path's
+#: truncation toward zero. Equal results still need a UTC session: the
+#: lenient path maps the wall clock through the session time zone, which
+#: shifts times inside a DST gap, and this path reads no zone.
+CLEAN_TS_EPOCH_RE = r"^(?:19(?:7[1-9]|[89][0-9])|[2-9][0-9]{3})" + _CLEAN_TS_TAIL
+
 I64_MIN = -(2**63)
 I64_MAX = 2**63 - 1
 U64_MAX = 2**64 - 1
@@ -50,6 +79,12 @@ def _decimal38(c: Column) -> Column:
     """
     t = trimmed(c)
     return F.when(t.rlike(INT_RE), t.try_cast(T.DecimalType(38, 0)))
+
+
+def _clean(c: Column, shape: str, to: str) -> Column:
+    """The clean half: a raw value of ``shape``, natively cast to ``to``
+    (NULL when the value does not have the shape or the cast fails)."""
+    return F.when(c.rlike(shape), c.try_cast(to))
 
 
 # ---------------------------------------------------------------------------
@@ -80,7 +115,7 @@ def parse_int64(c: Column) -> Column:
     (analyse.rs:128-144)."""
     d = _decimal38(c)
     out = F.when(d.between(I64_MIN, I64_MAX), d.cast("long"))
-    return F.when(~is_null_token(c), out)
+    return F.coalesce(_clean(c, CLEAN_INT_RE, "long"), F.when(~is_null_token(c), out))
 
 
 def parse_uint64(c: Column, as_decimal: bool = False) -> Column:
@@ -104,7 +139,12 @@ def parse_uint64(c: Column, as_decimal: bool = False) -> Column:
         # the default 1,000-row sample, later rows CAN exceed i64 — the
         # loss is counted in parse_errors and warned on (convert.py).
         out = F.when(d.between(0, I64_MAX), d.cast("long"))
-    return F.when(~is_null_token(c), out)
+    lenient = F.when(~is_null_token(c), out)
+    if as_decimal:
+        # no clean half: values past i64::MAX need the 38-digit parse
+        return lenient
+    # unsigned shape: "-0" and negatives are left to the lenient half
+    return F.coalesce(_clean(c, CLEAN_UINT_RE, "long"), lenient)
 
 
 # ---------------------------------------------------------------------------
@@ -117,7 +157,8 @@ def parse_float64(c: Column) -> Column:
     t = trimmed(c)
     d = F.when(t.rlike(FLOAT_RE), t.try_cast("double"))
     finite = d.isNotNull() & ~F.isnan(d) & (d != float("inf")) & (d != float("-inf"))
-    return F.when(~is_null_token(c) & finite, d)
+    lenient = F.when(~is_null_token(c) & finite, d)
+    return F.coalesce(_clean(c, CLEAN_FLOAT_RE, "double"), lenient)
 
 
 # ---------------------------------------------------------------------------
@@ -139,11 +180,24 @@ def parse_date(c: Column) -> Column:
         F.try_to_date(t, "d/M/yyyy"),
         F.try_to_date(t, "M/d/yyyy"),
     )
-    return F.when(~is_null_token(c), out)
+    return F.coalesce(_clean(c, CLEAN_DATE_RE, "date"), F.when(~is_null_token(c), out))
 
 
 # ---------------------------------------------------------------------------
 # P7 / P8 — timestamp text + epoch-number parse, to milliseconds
+
+
+def _clean_timestamp(c: Column, unit: str) -> Column:
+    """Clean half of the timestamp casts: the TIMESTAMP_NTZ of a dash
+    datetime, floored to ms by cutting the text after three fraction
+    digits (to whole seconds for ``unit="s"``, by cutting it after the
+    seconds). The year has four digits, so the cut is a floor; it reads
+    no time zone."""
+    if unit == "s":
+        return F.when(
+            c.rlike(CLEAN_TS_EPOCH_RE), F.substring(c, 1, 19).try_cast("timestamp_ntz")
+        )
+    return F.when(c.rlike(CLEAN_TS_RE), F.substring(c, 1, 23).try_cast("timestamp_ntz"))
 
 
 def parse_timestamp_ms(c: Column) -> Column:
@@ -158,7 +212,16 @@ def parse_timestamp_ms(c: Column) -> Column:
          windows → NULL (e.g. 5e9).
     Timezone-offset strings are NOT accepted (inference↔conversion
     asymmetry — utils.rs:87-94 has no %z formats).
+
+    Both halves read a datetime's wall clock in the session time zone
+    (UTC for a conversion).
     """
+    clean = F.unix_millis(_clean_timestamp(c, "ms").cast("timestamp"))
+    return F.coalesce(clean, _timestamp_ms_lenient(c))
+
+
+def _timestamp_ms_lenient(c: Column) -> Column:
+    """The lenient half of :func:`parse_timestamp_ms`."""
     t = trimmed(c)
 
     # --- 1. dash form with optional fraction --------------------------------
@@ -210,8 +273,14 @@ def parse_timestamp(c: Column, unit: str = "ms") -> Column:
     (µs precision — lossless, values only ever carry ms precision).
     A second-unit column floor-truncates to whole seconds
     (analyse.rs:201-204, integer division ms/1000).
+
+    Precondition: a UTC session time zone (every conversion,
+    ``get_spark`` and ``load_table`` pin it). The clean half reads no
+    zone; the lenient half maps the wall clock to an epoch and back in
+    the session zone, so under another zone the two halves differ for
+    wall-clock times inside a DST gap.
     """
-    ms = parse_timestamp_ms(c)
+    ms = _timestamp_ms_lenient(c)
     if unit == "s":
         # Rust i64 `/` truncates toward zero; double-division + cast('long')
         # reproduces that (values ≪ 2^53 so the division is exact enough)
@@ -220,7 +289,8 @@ def parse_timestamp(c: Column, unit: str = "ms") -> Column:
         us = F.try_multiply(ms, F.lit(1000))
     else:  # pragma: no cover
         raise ValueError(f"unknown timestamp unit: {unit}")
-    return F.timestamp_micros(us).cast(T.TimestampNTZType())
+    lenient = F.timestamp_micros(us).cast(T.TimestampNTZType())
+    return F.coalesce(_clean_timestamp(c, unit), lenient)
 
 
 # ---------------------------------------------------------------------------

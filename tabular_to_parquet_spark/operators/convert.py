@@ -102,15 +102,17 @@ def observed_typed_frame(
     The reference counts cast failures in global atomics; the Spark
     equivalent is ``observe()``: metric aggregates ride the SAME job
     as the write (no second pass). A cast failure is a value that is
-    not a null-token but came out NULL. Each cast is computed once —
-    the metric reads the aliased output column, not a re-evaluation.
+    not a null-token but came out NULL. Each cast is computed once:
+    the metric reads the aliased output column and tests it for NULL
+    first, so the null-token regex runs on the raw passthrough column
+    only for the values that came out NULL. String and binary casts
+    cannot fail and get no metric.
     """
     names = list(raw.columns)
     cols = [cast_expr(F.col(n), lt).alias(n) for n, lt in zip(names, types)]
     # string/binary casts are passthroughs — a non-null-token value can
     # NEVER come out NULL, so their error count is structurally zero:
-    # skip their raw passthrough and metric (the accounting aggregate
-    # re-trims every observed value, so this is real per-row work)
+    # skip their raw passthrough and metric
     fallible = [
         i for i, lt in enumerate(types) if lt.kind not in ("string", "binary")
     ]
@@ -126,8 +128,10 @@ def observed_typed_frame(
     # index-based metric aliases: immune to collisions with user columns
     obs = Observation("parse_errors")
     metrics = [F.count(F.lit(1)).alias("__rows")] + [
+        # output NULL first: And short-circuits, so the null-token regex
+        # runs only on the values that came out NULL
         F.sum(
-            (~is_null_token(F.col(f"__raw_{i}")) & F.col(names[i]).isNull()).cast(
+            (F.col(names[i]).isNull() & ~is_null_token(F.col(f"__raw_{i}"))).cast(
                 "long"
             )
         ).alias(f"__err_{i}")
@@ -142,10 +146,11 @@ def counted_typed_frame(
     raw: DataFrame, types: list[LogicalType], preserve_order: bool = False
 ):
     """Typed frame + row count only — the ``observe_errors=False``
-    path: the accounting aggregate re-trims every fallible value
-    (about 46% on top of scan + casts, sf0.1 lineitem at 4 cores), so
-    bulk callers that don't read ``parse_errors`` can skip it. The lone
-    count(1) metric is free by comparison."""
+    path: the accounting aggregate costs about a quarter on top of
+    scan + casts (warm job, 150k-row lineitem, 4 cores: 0.25 s over
+    0.28 s scan + 0.80 s casts), so bulk callers that don't read
+    ``parse_errors`` can skip it. The lone count(1) metric is free by
+    comparison."""
     names = list(raw.columns)
     staged = typed_frame(raw, types, preserve_order=preserve_order)
     if preserve_order:
@@ -255,9 +260,9 @@ def run_conversion(
 
     ``observe_errors=False`` skips the per-column parse-error
     accounting (``parse_errors`` reports zeros; ``rows`` stays exact).
-    The accounting rides the write job but re-trims every fallible
-    value — about 46% on top of scan + casts (sf0.1 lineitem, 4
-    cores) — so bulk callers that don't read the counters can opt out.
+    The accounting rides the write job but costs about a quarter on
+    top of scan + casts (see :func:`counted_typed_frame`), so bulk
+    callers that don't read the counters can opt out.
 
     A typed adapter passes its frame through unchanged (``types`` is
     ``None``); strict drop and input order are defined over string

@@ -11,9 +11,24 @@ Defaults chosen for the engine's workloads:
 
 from __future__ import annotations
 
+import logging
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
+
+#: a ``,spark.<key>=`` inside a value: a ','-separated entry that a ';'
+#: split folded into the value before it
+_FOLDED_ENTRY_RE = re.compile(r",\s*spark\.[^=,;]*=")
+
+
+def resolve_cpus() -> int:
+    """The engine's core count: ``$SPARK_GRAFT_CPUS`` when set, else
+    the host's CPU count (8 when unknown). :func:`get_spark` sizes
+    ``local[N]`` and the shuffle partitions from it."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
 def ensure_utc(spark: SparkSession) -> str | None:
@@ -75,7 +90,9 @@ def parse_extra_conf(env_conf: str) -> tuple[dict[str, str], list[str]]:
     Entries split on ';' when one is present, else ',' (r14 ADVICE:
     conf values like ``extraJavaOptions`` legitimately contain commas —
     spell those with ';'). Malformed (non-``k=v``) entries are returned
-    for loud reporting instead of being silently dropped."""
+    for loud reporting instead of being silently dropped. A ';' split
+    that leaves ``,spark.<key>=`` inside a value (','-separated entries
+    mixed with a ';') keeps the value as written and logs a warning."""
     sep = ";" if ";" in env_conf else ","
     confs: dict[str, str] = {}
     bad: list[str] = []
@@ -83,9 +100,26 @@ def parse_extra_conf(env_conf: str) -> tuple[dict[str, str], list[str]]:
         k, _, v = item.partition("=")
         if k and v:
             confs[k] = v
+            if sep == ";" and _FOLDED_ENTRY_RE.search(v):
+                _log.warning(
+                    "SPARK_GRAFT_EXTRA_CONF: %s=%r looks like ','-separated "
+                    "entries folded into one value by the ';' split; "
+                    "separate every entry with ';'",
+                    k,
+                    v,
+                )
         else:
             bad.append(item)
     return confs, bad
+
+
+def _env_extra_conf() -> dict[str, str]:
+    """The confs in ``$SPARK_GRAFT_EXTRA_CONF``; malformed entries are
+    logged as a warning and ignored."""
+    confs, bad = parse_extra_conf(os.environ.get("SPARK_GRAFT_EXTRA_CONF", ""))
+    if bad:
+        _log.warning("SPARK_GRAFT_EXTRA_CONF entries not k=v — IGNORED: %s", bad)
+    return confs
 
 
 def get_spark(
@@ -101,7 +135,7 @@ def get_spark(
     locally we default to the CPU count so tiny data isn't
     over-parallelized (AQE coalesces further at runtime).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    cpus = resolve_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -135,18 +169,7 @@ def get_spark(
     # bench runs remain comparable across rounds.  ';'-separated when
     # a ';' is present, else ','; malformed items are reported loudly
     # instead of silently dropped (r14 ADVICE — parse_extra_conf).
-    env_confs, env_bad = parse_extra_conf(
-        os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    )
-    if env_bad:
-        import sys
-
-        print(
-            f"[get_spark] SPARK_GRAFT_EXTRA_CONF entries not k=v — "
-            f"IGNORED: {env_bad}",
-            file=sys.stderr,
-        )
-    for k, v in env_confs.items():
+    for k, v in _env_extra_conf().items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import math
 import re
-from datetime import date, datetime, timezone
+from datetime import date, datetime
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -23,6 +23,8 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from tabular_to_parquet_spark.functions import parsers
+from tabular_to_parquet_spark.functions.nulls import WHITESPACE, is_null_token
+from tabular_to_parquet_spark.plans.inference import _is_null_token_py
 
 # ---------------------------------------------------------------------------
 # pure-Python twins (independent ports of the reference semantics)
@@ -90,31 +92,41 @@ def py_float64(v):
     return None if (math.isinf(x) or math.isnan(x)) else x
 
 
-def _mk_utc(y, mo, d, h=0, mi=0, s=0):
+_EPOCH_ORDINAL = date(1970, 1, 1).toordinal()
+#: one 400-year Gregorian cycle: shifting year 0 (valid for chrono's %Y,
+#: not for Python's date) by it keeps every calendar rule
+_CYCLE_DAYS = 146_097
+
+
+def _epoch_s(y, mo, d, h=0, mi=0, s=0):
+    """Seconds since 1970-01-01 00:00:00 (proleptic Gregorian, years
+    0-9999), None for an invalid date or time."""
+    cycles = 1 if y < 1 else 0
     try:
-        return datetime(y, mo, d, h, mi, s, tzinfo=timezone.utc)
+        day = datetime(y + 400 * cycles, mo, d, h, mi, s).toordinal()
     except ValueError:
         return None
+    days = day - cycles * _CYCLE_DAYS - _EPOCH_ORDINAL
+    return days * 86_400 + h * 3600 + mi * 60 + s
 
 
 def py_date(v):
+    """Date twin, as days since 1970-01-01."""
     if _is_null_token(v):
         return None
     t = v.strip()
     m = re.match(r"^([0-9]{4})-([0-9]{1,2})-([0-9]{1,2})$", t)
     if m:
-        dt = _mk_utc(int(m[1]), int(m[2]), int(m[3]))
-        if dt:
-            return dt.date()
+        secs = _epoch_s(int(m[1]), int(m[2]), int(m[3]))
+        if secs is not None:
+            return secs // 86_400
     m = re.match(r"^([0-9]{1,2})/([0-9]{1,2})/([0-9]{4})$", t)
     if m:
         # day-first beats month-first (utils.rs:72-75)
-        dt = _mk_utc(int(m[3]), int(m[2]), int(m[1]))
-        if dt:
-            return dt.date()
-        dt = _mk_utc(int(m[3]), int(m[1]), int(m[2]))
-        if dt:
-            return dt.date()
+        for mo, d in ((int(m[2]), int(m[1])), (int(m[1]), int(m[2]))):
+            secs = _epoch_s(int(m[3]), mo, d)
+            if secs is not None:
+                return secs // 86_400
     return None
 
 
@@ -125,18 +137,18 @@ def py_ts_ms(v):
     t = v.strip()
     m = TS_DASH_RE.match(t)
     if m:
-        dt = _mk_utc(*(int(m[i]) for i in range(1, 7)))
-        if dt:
+        secs = _epoch_s(*(int(m[i]) for i in range(1, 7)))
+        if secs is not None:
             frac = (m[8] or "")[:3].ljust(3, "0")
-            return int(dt.timestamp()) * 1000 + int(frac)
+            return secs * 1000 + int(frac)
         return None  # shape matched but invalid date → no fallthrough
     for rx, order in ((SLASH_DMY_RE, (3, 2, 1)), (SLASH_YMD_RE, (1, 2, 3))):
         m = rx.match(t)
         if m:
-            dt = _mk_utc(int(m[order[0]]), int(m[order[1]]), int(m[order[2]]),
-                         int(m[4]), int(m[5]), int(m[6]))
-            if dt:
-                return int(dt.timestamp()) * 1000
+            secs = _epoch_s(int(m[order[0]]), int(m[order[1]]), int(m[order[2]]),
+                            int(m[4]), int(m[5]), int(m[6]))
+            if secs is not None:
+                return secs * 1000
     n = _d38(t)
     if n is None:
         return None
@@ -150,6 +162,19 @@ def py_ts_ms(v):
         ms = n // 1_000_000
         return ms if ms <= I64_MAX else None
     return None
+
+
+def py_ts_us(v, unit):
+    """Twin of parse_timestamp's TIMESTAMP_NTZ, as epoch microseconds:
+    the epoch ms, truncated toward zero to whole seconds for unit "s"
+    (Rust i64 division, analyse.rs:201-204)."""
+    ms = py_ts_ms(v)
+    if ms is None:
+        return None
+    if unit == "s":
+        secs = abs(ms) // 1000
+        return (secs if ms >= 0 else -secs) * 1_000_000
+    return ms * 1000
 
 
 # ---------------------------------------------------------------------------
@@ -254,13 +279,147 @@ def test_float64_differential(spark, vals):
 @settings(**_SETTINGS)
 @given(vals=VALUES)
 def test_date_differential(spark, vals):
-    _diff(vals, _spark_parse(spark, parsers.parse_date, vals), py_date)
+    got = _spark_parse(spark, lambda c: F.unix_date(parsers.parse_date(c)), vals)
+    _diff(vals, got, py_date)
 
 
 @settings(**_SETTINGS)
 @given(vals=VALUES)
 def test_timestamp_ms_differential(spark, vals):
     _diff(vals, _spark_parse(spark, parsers.parse_timestamp_ms, vals), py_ts_ms)
+
+
+# ---------------------------------------------------------------------------
+# the clean-value fast path: values at and just past the clean shapes
+# (functions/parsers.py), so both halves of every cast are compared
+
+#: kind → (Spark builder, twin); dates and timestamps compare as epoch
+#: integers, because Python's date cannot hold year 0000
+_KINDS = {
+    "bool": (parsers.parse_bool, py_bool),
+    "int64": (parsers.parse_int64, py_int64),
+    "uint64": (parsers.parse_uint64, py_uint64_long),
+    "float64": (parsers.parse_float64, py_float64),
+    "date": (lambda c: F.unix_date(parsers.parse_date(c)), py_date),
+    "epoch_ms": (parsers.parse_timestamp_ms, py_ts_ms),
+    **{
+        f"ts_{u}": (
+            lambda c, u=u: F.unix_micros(parsers.parse_timestamp(c, u).cast("timestamp")),
+            lambda v, u=u: py_ts_us(v, u),
+        )
+        for u in ("s", "ms", "us", "ns")
+    },
+}
+
+#: ways a clean value stops being clean: a trailing line terminator
+#: (Java's ``$`` would still match), a control character, Unicode
+#: padding, another case
+_PERTURB = (
+    lambda v: v,
+    lambda v: v + "\n",
+    lambda v: "\x01" + v,
+    lambda v: "\xa0" + v + "\xa0",
+    lambda v: " " + v,
+    lambda v: v + "\u3000",
+    str.upper,
+)
+
+NEAR_CLEAN_BOUNDARIES = [
+    "5", "+5", "-5", "007", "-0", "+0", "0",
+    "9223372036854775807", "9223372036854775808", "-9223372036854775808",
+    "-9223372036854775809", "18446744073709551615", "18446744073709551616",
+    "1" * 19, "9" * 20, "0" * 40 + "5",
+    ".5", "3.", "-.5", "+3.e1", "1e309", "-1e309", "1e308", "1E-400", "2e-2",
+    "1" * 200, "1" * 201, "1" * 200 + ".5e99", "1" * 310,
+    "0000-01-01", "0000-02-29", "0001-02-29", "1900-02-29", "2023-02-29",
+    "2024-02-29", "2024-13-01", "2024-00-10", "2024-1-5", "9999-12-31",
+    "0000-01-01 00:00:00", "1969-12-31 23:59:59.5", "1969-12-31 23:59:59",
+    "1970-01-01 00:00:00.999999999", "1970-12-31 23:59:59.5",
+    "1971-01-01 00:00:00.5", "2024-01-01 12:00:60",
+    "2023-02-29 00:00:00", "2024-02-29T23:59:59.1234567",
+    "2024-01-01 12:34:56.12345678", "2024-01-01 12:34:56.123456789",
+    "2024-01-01 12:34:56.1234567890", "2024-01-01 12:34:56.",
+    "2024-01-01 24:00:00", "2024-01-01T12:34:56Z", "9999-12-31 23:59:59.999",
+    "true", "false", "on", "off", "yes", "no", "t", "f", "y", "n", "1", "0",
+]
+
+_digits = st.text("0123456789", min_size=1, max_size=22)
+_near_clean_core = st.one_of(
+    st.sampled_from(NEAR_CLEAN_BOUNDARIES),
+    st.builds(lambda sign, d: sign + d, st.sampled_from(["", "+", "-"]), _digits),
+    st.builds(
+        lambda sign, i, f, e: f"{sign}{i}.{f}{e}",
+        st.sampled_from(["", "+", "-"]),
+        st.text("0123456789", max_size=4),
+        st.text("0123456789", max_size=4),
+        st.sampled_from(["", "e5", "E-7", "e+308", "e309", "e-330"]),
+    ).filter(lambda v: any(ch.isdigit() for ch in v.split("e")[0].split("E")[0])),
+    st.builds(
+        lambda y, mo, d: f"{y:04d}-{mo:02d}-{d:02d}",
+        st.integers(0, 9999), st.integers(0, 13), st.integers(0, 31),
+    ),
+    st.builds(
+        lambda y, mo, d, sep, h, mi, sec, frac: (
+            f"{y:04d}-{mo:02d}-{d:02d}{sep}{h:02d}:{mi:02d}:{sec:02d}"
+            + (f".{frac}" if frac else "")
+        ),
+        st.integers(0, 9999), st.integers(1, 12), st.integers(1, 31),
+        st.sampled_from([" ", "T"]), st.integers(0, 24), st.integers(0, 60),
+        st.integers(0, 60), st.text("0123456789", max_size=10),
+    ),
+    st.sampled_from(sorted(TRUE_TOKENS | FALSE_TOKENS)),
+)
+NEAR_CLEAN = st.lists(
+    st.builds(lambda v, p: p(v), _near_clean_core, st.sampled_from(_PERTURB)),
+    min_size=40, max_size=150,
+)
+
+
+def _diff_all_kinds(spark, vals):
+    """One Spark job: every kind's cast of ``vals`` against its twin."""
+    df = spark.createDataFrame([(v,) for v in vals], "v string")
+    rows = df.select(*[b(F.col("v")).alias(k) for k, (b, _) in _KINDS.items()]).collect()
+    bad = [
+        (k, v, r[k], want(v))
+        for v, r in zip(vals, rows)
+        for k, (_, want) in _KINDS.items()
+        if r[k] != want(v)
+    ]
+    assert not bad, f"{len(bad)} diffs, first 5: {bad[:5]}"
+
+
+def test_near_clean_boundaries(spark):
+    vals = [p(v) for v in NEAR_CLEAN_BOUNDARIES for p in _PERTURB]
+    _diff_all_kinds(spark, vals + [None])
+
+
+@settings(**_SETTINGS)
+@given(vals=NEAR_CLEAN)
+def test_near_clean_differential(spark, vals):
+    _diff_all_kinds(spark, vals)
+
+
+def test_null_token_regex_matches_python(spark):
+    """``is_null_token``'s one regex agrees with the Python-side
+    inference test for every WHITESPACE character around each
+    mixed-case token, and for characters Python lower-cases oddly."""
+    words = [
+        case(t)
+        for t in sorted(NULL_TOKENS) + ["", "nul", "nana", "x"]
+        for case in (str.lower, str.upper, str.title, str.swapcase)
+    ] + ["nUlL", "N/a", "nA"]
+    vals = [
+        f"{lead}{w}{trail}"
+        for ws in WHITESPACE
+        for w in words
+        for lead, trail in ((ws, ""), ("", ws), (ws, ws), (ws + ws, " "))
+    ]
+    vals += ["\u212a", "\u0130", "na\u212a", "\u0130na", "NULL\u0130", "n\u0130l"]
+    vals += ["na\n", "\nNA", "\x1cna", "n a", "null null"]
+    df = spark.createDataFrame([(v,) for v in vals], "v string")
+    got = [r.o for r in df.select(is_null_token(F.col("v")).alias("o")).collect()]
+    bad = [(v, g) for v, g in zip(vals, got) if g != _is_null_token_py(v)]
+    assert not bad, f"{len(bad)} diffs, first 5: {bad[:5]}"
 
 
 @settings(**_SETTINGS)
@@ -336,3 +495,35 @@ def test_chunk_window_formula_covers_all_tokens(n, chunk, data):
         assert len(piece) > 0
         covered.update(piece)
     assert covered == set(range(n))
+
+
+def test_clean_timestamp_matches_lenient_ahead_of_utc(spark):
+    """East of UTC, a 1970 wall clock can have a negative epoch, where the
+    lenient second-unit cast truncates toward zero. The clean half must
+    leave such years to it, so a value and its space-padded copy (which
+    only the lenient half parses) cast alike in a zone with no DST."""
+    vals = [
+        f"{y}-{md} {hms}.5"
+        for y in (1970, 1971, 2024)
+        for md in ("01-01", "12-31")
+        for hms in ("00:00:00", "08:59:59", "23:59:59")
+    ]
+    df = spark.createDataFrame([(v, " " + v) for v in vals], "v string, p string")
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    try:
+        rows = df.select(
+            *[
+                parsers.parse_timestamp(F.col(c), unit).alias(f"{c}_{unit}")
+                for unit in ("s", "ms")
+                for c in ("v", "p")
+            ],
+            parsers.parse_timestamp_ms(F.col("v")).alias("v_epoch"),
+            parsers.parse_timestamp_ms(F.col("p")).alias("p_epoch"),
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+    for v, r in zip(vals, rows):
+        assert r["v_s"] == r["p_s"] is not None, v
+        assert r["v_ms"] == r["p_ms"] is not None, v
+        assert r["v_epoch"] == r["p_epoch"] is not None, v

@@ -100,10 +100,14 @@ def test_suggest_cells_production_floor():
     assert sim.suggest_cells(1_000_000_000, target_rows_per_cell=512) >= 1 << 20
 
 
-def test_parse_extra_conf_separators_and_malformed():
+def test_parse_extra_conf_separators_and_malformed(caplog, monkeypatch):
     # r14 ADVICE: ';' separator for comma-bearing values; malformed
     # entries surface instead of being silently dropped
-    from tabular_to_parquet_spark.session import parse_extra_conf
+    import logging
+
+    from tabular_to_parquet_spark.session import _env_extra_conf, parse_extra_conf
+
+    caplog.set_level(logging.WARNING, logger="tabular_to_parquet_spark.session")
 
     confs, bad = parse_extra_conf(
         "spark.sql.join.preferSortMergeJoin=false,"
@@ -124,6 +128,29 @@ def test_parse_extra_conf_separators_and_malformed():
     confs, bad = parse_extra_conf("novalue,k=v,=bare")
     assert confs == {"k": "v"} and bad == ["novalue", "=bare"]
     assert parse_extra_conf("") == ({}, [])
+    assert not caplog.records
+
+    # a ';' anywhere splits on ';' only: ','-separated entries fold
+    # into the value before them, kept as written but warned about
+    confs, bad = parse_extra_conf(
+        "spark.executor.extraJavaOptions=-Da=1;"
+        "spark.sql.shuffle.partitions=8,spark.io.compression.codec=zstd"
+    )
+    assert confs == {
+        "spark.executor.extraJavaOptions": "-Da=1",
+        "spark.sql.shuffle.partitions": "8,spark.io.compression.codec=zstd",
+    } and bad == []
+    (rec,) = caplog.records
+    assert rec.levelno == logging.WARNING
+    assert "spark.sql.shuffle.partitions" in rec.getMessage()
+    assert "spark.io.compression.codec=zstd" in rec.getMessage()
+    caplog.clear()
+
+    # get_spark's env read reports malformed entries through logging
+    monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONF", "novalue,k=v")
+    assert _env_extra_conf() == {"k": "v"}
+    (rec,) = caplog.records
+    assert rec.levelno == logging.WARNING and "novalue" in rec.getMessage()
 
 
 def test_gd_checkpoint_rounds_bit_identical(spark):

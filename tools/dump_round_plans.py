@@ -1,8 +1,10 @@
-"""Dump `.explain("formatted")` plans for the round-15 optimization
-targets into plans/r15/<query>_<tag>.txt (the judge's evidence files).
+"""Dump `.explain("formatted")` plans for one optimization round's
+targets into plans/r<round>/<query>_<tag>.txt (the round's plan
+evidence files).
 
-Usage: python tools/dump_r15_plans.py <tag> [name_regex]
-  tag: "before" or "after"
+Usage: python tools/dump_round_plans.py <round> <tag> [name_regex]
+  round: the round number, e.g. 15 (writes plans/r15/)
+  tag:   "before" or "after"
 
 Covers both catalog queries (by name) and the bench-only operator
 entries (dedup/similarity/text compositions from bench.py), so every
@@ -62,15 +64,18 @@ def bench_only_frames(spark):
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    name_re = re.compile(sys.argv[2]) if len(sys.argv) > 2 else None
+    if len(sys.argv) < 2 or not sys.argv[1].isdigit():
+        sys.exit(__doc__)
+    rnd = f"r{int(sys.argv[1]):02d}"
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    name_re = re.compile(sys.argv[3]) if len(sys.argv) > 3 else None
 
     import __spark_entry__ as entry_mod
     from tabular_to_parquet_spark.session import get_spark
 
-    spark = get_spark("dump-r15-plans")
+    spark = get_spark(f"dump-{rnd}-plans")
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    outdir = os.path.join(here, "plans", "r15")
+    outdir = os.path.join(here, "plans", rnd)
     os.makedirs(outdir, exist_ok=True)
 
     targets: dict[str, object] = {}
