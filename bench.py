@@ -416,16 +416,6 @@ def main() -> None:
     def _():
         _noop(dedup.semantic_dup_pairs(emb, threshold=0.4))
 
-    # -- conversion without parse-error accounting (observe opt-out) --------
-    @timed("convert_csv_noobserve", needs_csv=True)
-    def _():
-        convert_delimited_to_parquet(
-            spark,
-            _csv["file"],
-            os.path.join(work, "lineitem_noobs.parquet"),
-            observe_errors=False,
-        )
-
     # the Arrow-vectorized scorer (non-oracle scale path)
     @timed("semantic_dup_pairs_fast")
     def _():
@@ -592,9 +582,10 @@ def main() -> None:
     # counts (the 8-core total BEAT the 32-core total in r14's driver
     # runs).  This entry is the scaling-credible leg: the production
     # minhash signature+banding pipeline over the documents corpus
-    # replicated 32x (~160k docs, an sf3-equivalent text volume) on a
-    # FIXED 64-partition layout, so the task count is identical at
-    # every core count and wall tracks executor slots.  Measured idle
+    # replicated 32x (~160k docs, an sf3-equivalent text volume) and
+    # shuffled to 64 partitions.  Only that exchange stage has a fixed
+    # task count; the scan side before it still splits by the core
+    # count, so wall tracks executor slots on both.  Measured idle
     # (warm, min-of-3): ~2.8 s on local[32] vs ~6.6 s on local[8] —
     # ratio ~2.3 of the 4x core ratio; the residual is the fixed
     # scan+exchange+codegen floor (~1.2 s) every tiny-SF query shares.

@@ -21,7 +21,7 @@ import logging
 import os as _os
 import time
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -142,24 +142,6 @@ def observed_typed_frame(
     return typed, obs
 
 
-def counted_typed_frame(
-    raw: DataFrame, types: list[LogicalType], preserve_order: bool = False
-):
-    """Typed frame + row count only — the ``observe_errors=False``
-    path: the accounting aggregate costs about a quarter on top of
-    scan + casts (warm job, 150k-row lineitem, 4 cores: 0.25 s over
-    0.28 s scan + 0.80 s casts), so bulk callers that don't read
-    ``parse_errors`` can skip it. The lone count(1) metric is free by
-    comparison."""
-    names = list(raw.columns)
-    staged = typed_frame(raw, types, preserve_order=preserve_order)
-    if preserve_order:
-        staged = staged.sort(*_ORDER_KEY)
-    obs = Observation("row_count")
-    staged = staged.observe(obs, F.count(F.lit(1)).alias("__rows"))
-    return staged.select(*names), obs
-
-
 @dataclass
 class ConvertResult:
     output_path: str
@@ -172,7 +154,7 @@ class ConvertResult:
     seconds: float
     rows: int = 0
     #: per-column count of non-null input values that cast to NULL (O5)
-    parse_errors: dict[str, int] = None  # type: ignore[assignment]
+    parse_errors: dict[str, int] = field(default_factory=dict)
 
 
 def _input_bytes(path: str) -> int:
@@ -228,7 +210,6 @@ def run_conversion(
     preserve_order: bool = False,
     single_file: bool = False,
     strict_drop: bool = False,
-    observe_errors: bool = True,
 ) -> ConvertResult:
     """One input format (``adapter``) → zstd parquet: inference, the
     lenient-cast projection with parse-error accounting, and the write.
@@ -257,12 +238,6 @@ def run_conversion(
     keeps Spark's PERMISSIVE repair semantics (documented divergence).
     Known approximation: a file legitimately containing encoded U+FFFD,
     or invalid bytes confined to an extra (dropped) field, diverges.
-
-    ``observe_errors=False`` skips the per-column parse-error
-    accounting (``parse_errors`` reports zeros; ``rows`` stays exact).
-    The accounting rides the write job but costs about a quarter on
-    top of scan + casts (see :func:`counted_typed_frame`), so bulk
-    callers that don't read the counters can opt out.
 
     A typed adapter passes its frame through unchanged (``types`` is
     ``None``); strict drop and input order are defined over string
@@ -316,8 +291,7 @@ def run_conversion(
             if strict_drop:
                 frame = drop_replacement_char_rows(frame, names)
             # ordering (when requested) happens below the observation point
-            typed = observed_typed_frame if observe_errors else counted_typed_frame
-            out, obs = typed(frame, types, preserve_order=preserve_order)
+            out, obs = observed_typed_frame(frame, types, preserve_order=preserve_order)
 
         if single_file:  # the one-file contract must yield exactly one part
             tmp = output_path + "._spark_tmp"
@@ -371,7 +345,6 @@ def convert_delimited_to_parquet(
     single_file: bool = False,
     delimiter: str | None = None,
     strict_drop: bool = False,
-    observe_errors: bool = True,
 ) -> ConvertResult:
     """End-to-end delimited conversion (the product surface,
     main.rs:39-83): the delimiter is sniffed from the first file unless
@@ -384,7 +357,6 @@ def convert_delimited_to_parquet(
         preserve_order=preserve_order,
         single_file=single_file,
         strict_drop=strict_drop,
-        observe_errors=observe_errors,
     )
 
 

@@ -377,29 +377,29 @@ _I1_SHIP_DUCK = "strftime(l_shipdate, '%Y-%m-%d %H:%M:%S.%g')"
 
 
 def _q_i1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tabular_to_parquet_spark.plans.inference import counters_frame
+    from tabular_to_parquet_spark.plans.inference import counters_long
 
     li = load_table(spark, sf_dir, "lineitem")
     frames = []
     for label, snippet in _I1_COLS.items():
         snippet = snippet or _I1_SHIP_SPARK
         src = li.select(F.expr(snippet).alias("v"))
-        agg = counters_frame(src).select(
+        agg = counters_long(src).select(
             F.lit(label).alias("col_label"),
-            F.col("nonnull_0").alias("nonnull"),
-            F.col("bool_0").alias("bool_ok"),
-            F.col("date_0").alias("date_ok"),
-            F.col("ts_s_0").alias("ts_s"),
-            F.col("ts_ms_0").alias("ts_ms"),
-            F.col("ts_us_0").alias("ts_us"),
-            F.col("ts_ns_0").alias("ts_ns"),
-            F.col("f64_0").alias("f64_ok"),
-            F.col("i128_0").alias("i128_ok"),
-            F.col("neg_0").alias("negatives"),
-            F.col("fsyn_0").alias("float_syntax"),
-            F.col("min_0").try_cast("long").alias("min_i"),
-            F.col("max_0").try_cast("long").alias("max_i"),
-            F.col("len_0").cast("long").alias("max_len"),
+            "nonnull",
+            F.col("bool").alias("bool_ok"),
+            F.col("date").alias("date_ok"),
+            "ts_s",
+            "ts_ms",
+            "ts_us",
+            "ts_ns",
+            F.col("f64").alias("f64_ok"),
+            F.col("i128").alias("i128_ok"),
+            F.col("neg").alias("negatives"),
+            F.col("fsyn").alias("float_syntax"),
+            F.col("min").try_cast("long").alias("min_i"),
+            F.col("max").try_cast("long").alias("max_i"),
+            F.col("len").cast("long").alias("max_len"),
         )
         frames.append(agg)
     out = frames[0]

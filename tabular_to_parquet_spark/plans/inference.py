@@ -52,7 +52,7 @@ I128_MAX = 2**127 - 1
 MAX_INFERENCE_ROWS = 1000
 
 _INT_RE = re.compile(INT_RE)
-_FLOAT_RE = re.compile(r"^[+-]?(inf(inity)?|nan|([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0-9]+)?)$", re.I)
+_FLOAT_RE = re.compile(FLOAT_RE)
 _BOOL_TOKENS = {t: True for t in BOOL_TRUE_TOKENS} | {t: False for t in BOOL_FALSE_TOKENS}
 
 # rfc3339: 'T'/'t' separator, offset Z or ±HH:MM (chrono parse_from_rfc3339)
@@ -277,15 +277,12 @@ def infer_from_rows(n_cols: int, rows: list[list[str]]) -> list[LogicalType]:
     return [decide_type(s) for s in stats]
 
 
-def infer_schema(
-    path: str, delimiter: str, full_scan: bool = False
-) -> tuple[list[str], list[LogicalType]]:
-    """Driver-side inference (the default path). Returns (names, types)."""
+def infer_schema(path: str, delimiter: str) -> tuple[list[str], list[LogicalType]]:
+    """Driver-side inference over the first :data:`MAX_INFERENCE_ROWS`
+    data rows (the default path). Returns (names, types)."""
     from tabular_to_parquet_spark.sources.text import read_sample_rows, sanitize_names
 
-    header, rows = read_sample_rows(
-        path, delimiter, None if full_scan else MAX_INFERENCE_ROWS
-    )
+    header, rows = read_sample_rows(path, delimiter, MAX_INFERENCE_ROWS)
     names = sanitize_names(header)
     return names, infer_from_rows(len(names), rows)
 
@@ -303,7 +300,7 @@ _SLASH_YMD_SPARK = r"^\d{4}/\d{1,2}/\d{1,2} \d{1,2}:\d{1,2}:\d{1,2}$"
 _EPOCH_SPARK = r"^[+-]?[0-9]+$"
 
 
-def _value_exprs(col_name: str, i: int) -> list:
+def _value_exprs(col_name: str) -> list:
     """Per-row intermediates for one column (the expensive regex /
     try_to_timestamp logic), as projection columns. Splitting these out
     of the aggregate keeps the Aggregate's codegen tiny — the giant
@@ -369,82 +366,65 @@ def _value_exprs(col_name: str, i: int) -> list:
     i128_ok = d38.isNotNull()
 
     return [
-        nn.alias(f"_nn_{i}"),
-        bool_ok.alias(f"_bool_{i}"),
-        date_ok.alias(f"_date_{i}"),
-        ts_unit.alias(f"_unit_{i}"),
-        f64_ok.alias(f"_f64_{i}"),
-        i128_ok.alias(f"_i128_{i}"),
-        (i128_ok & (d38 < 0)).alias(f"_neg_{i}"),
-        (f64_ok & t.rlike(r"[.eE]")).alias(f"_fsyn_{i}"),
-        d38.alias(f"_d38_{i}"),
-        F.length(t).alias(f"_len_{i}"),
+        nn.alias("_nn"),
+        bool_ok.alias("_bool"),
+        date_ok.alias("_date"),
+        ts_unit.alias("_unit"),
+        f64_ok.alias("_f64"),
+        i128_ok.alias("_i128"),
+        (i128_ok & (d38 < 0)).alias("_neg"),
+        (f64_ok & t.rlike(r"[.eE]")).alias("_fsyn"),
+        d38.alias("_d38"),
+        F.length(t).alias("_len"),
     ]
 
 
-def _agg_exprs(i: int) -> list:
-    """The 14 counters for one column, aggregating the `_value_exprs`
+def _agg_exprs() -> list:
+    """The 14 counters of a column, aggregating the `_value_exprs`
     intermediates (trivial sums/min/max — tiny codegen)."""
-    nn = F.col(f"_nn_{i}")
-    unit = F.col(f"_unit_{i}")
-    d38 = F.col(f"_d38_{i}")
+    nn = F.col("_nn")
+    unit = F.col("_unit")
+    d38 = F.col("_d38")
 
     def cnt(pred):
         return F.sum(F.when(nn & pred, 1).otherwise(0))
 
     return [
-        cnt(F.lit(True)).alias(f"nonnull_{i}"),
-        cnt(F.col(f"_bool_{i}")).alias(f"bool_{i}"),
-        cnt(F.col(f"_date_{i}")).alias(f"date_{i}"),
-        cnt(unit == "s").alias(f"ts_s_{i}"),
-        cnt(unit == "ms").alias(f"ts_ms_{i}"),
-        cnt(unit == "us").alias(f"ts_us_{i}"),
-        cnt(unit == "ns").alias(f"ts_ns_{i}"),
-        cnt(F.col(f"_f64_{i}")).alias(f"f64_{i}"),
-        cnt(F.col(f"_i128_{i}")).alias(f"i128_{i}"),
-        cnt(F.col(f"_neg_{i}")).alias(f"neg_{i}"),
-        cnt(F.col(f"_fsyn_{i}")).alias(f"fsyn_{i}"),
-        F.min(F.when(nn, d38)).alias(f"min_{i}"),
-        F.max(F.when(nn, d38)).alias(f"max_{i}"),
-        F.max(F.when(nn, F.col(f"_len_{i}"))).alias(f"len_{i}"),
+        cnt(F.lit(True)).alias("nonnull"),
+        cnt(F.col("_bool")).alias("bool"),
+        cnt(F.col("_date")).alias("date"),
+        cnt(unit == "s").alias("ts_s"),
+        cnt(unit == "ms").alias("ts_ms"),
+        cnt(unit == "us").alias("ts_us"),
+        cnt(unit == "ns").alias("ts_ns"),
+        cnt(F.col("_f64")).alias("f64"),
+        cnt(F.col("_i128")).alias("i128"),
+        cnt(F.col("_neg")).alias("neg"),
+        cnt(F.col("_fsyn")).alias("fsyn"),
+        F.min(F.when(nn, d38)).alias("min"),
+        F.max(F.when(nn, d38)).alias("max"),
+        F.max(F.when(nn, F.col("_len"))).alias("len"),
     ]
-
-
-def counters_frame(df: DataFrame) -> DataFrame:
-    """I1 as one Project (per-value logic) + one Aggregate (counters)
-    over all columns of a string-typed DataFrame.
-
-    Wide format (``nonnull_0`` … ``len_N``) — fine for a handful of
-    columns (the i1 parity query uses it per-column); for full tables
-    prefer :func:`counters_long`, whose codegen size is
-    column-count-independent."""
-    proj = df.select(
-        *[e for i, n in enumerate(df.columns) for e in _value_exprs(n, i)]
-    )
-    return proj.agg(
-        *[e for i in range(len(df.columns)) for e in _agg_exprs(i)]
-    )
 
 
 def counters_long(df: DataFrame) -> DataFrame:
     """I1 in LONG format: one output row per column.
 
     The per-value expression tree (regexes, timestamp probes) is the
-    expensive part of this plan — and in the wide layout it is
-    codegen-REPLICATED once per column, so first-run Janino compile
-    grows linearly with column count (~15 s cold for 11 columns at
-    sf0.1). Here the columns are unpivoted to ``(col_idx, v)`` rows
-    first (posexplode — same stage, no shuffle), so the tree compiles
-    exactly ONCE regardless of width, and the aggregate is 14 counters
-    grouped by ``col_idx`` (map-side partial agg; N tiny rows to the
-    driver). Total per-value work is identical (rows × columns
-    evaluations either way).
+    expensive part of this plan. Laid out one column per counter set,
+    it would be codegen-replicated once per column, so first-run Janino
+    compile would grow linearly with column count. Here the columns
+    are unpivoted to ``(col_idx, v)`` rows first (posexplode — same
+    stage, no shuffle), so the tree compiles exactly ONCE regardless
+    of width, and the aggregate is 14 counters grouped by ``col_idx``
+    (map-side partial agg; N tiny rows to the driver). Total
+    per-value work is rows × columns evaluations either way.
     """
     stacked = df.select(
         F.posexplode(F.array(*[F.col(c) for c in df.columns])).alias("col_idx", "v")
     )
-    proj = stacked.select("col_idx", *_value_exprs("v", 0))
-    return proj.groupBy("col_idx").agg(*_agg_exprs(0))
+    proj = stacked.select("col_idx", *_value_exprs("v"))
+    return proj.groupBy("col_idx").agg(*_agg_exprs())
 
 
 def infer_schema_distributed(df: DataFrame) -> list[LogicalType]:
@@ -459,20 +439,20 @@ def infer_schema_distributed(df: DataFrame) -> list[LogicalType]:
     for i in range(len(df.columns)):
         row = rows.get(i, {})
         s = ColumnStats(
-            nonnull=row.get("nonnull_0") or 0,
-            bool_ok=row.get("bool_0") or 0,
-            date_ok=row.get("date_0") or 0,
-            ts_s=row.get("ts_s_0") or 0,
-            ts_ms=row.get("ts_ms_0") or 0,
-            ts_us=row.get("ts_us_0") or 0,
-            ts_ns=row.get("ts_ns_0") or 0,
-            f64_ok=row.get("f64_0") or 0,
-            i128_ok=row.get("i128_0") or 0,
-            negatives=row.get("neg_0") or 0,
-            float_syntax_seen=bool(row.get("fsyn_0") or 0),
-            min_i128=int(row["min_0"]) if row.get("min_0") is not None else I128_MAX,
-            max_i128=int(row["max_0"]) if row.get("max_0") is not None else I128_MIN,
-            max_len=row.get("len_0") or 0,
+            nonnull=row.get("nonnull") or 0,
+            bool_ok=row.get("bool") or 0,
+            date_ok=row.get("date") or 0,
+            ts_s=row.get("ts_s") or 0,
+            ts_ms=row.get("ts_ms") or 0,
+            ts_us=row.get("ts_us") or 0,
+            ts_ns=row.get("ts_ns") or 0,
+            f64_ok=row.get("f64") or 0,
+            i128_ok=row.get("i128") or 0,
+            negatives=row.get("neg") or 0,
+            float_syntax_seen=bool(row.get("fsyn") or 0),
+            min_i128=int(row["min"]) if row.get("min") is not None else I128_MAX,
+            max_i128=int(row["max"]) if row.get("max") is not None else I128_MIN,
+            max_len=row.get("len") or 0,
         )
         out.append(decide_type(s))
     return out

@@ -27,32 +27,9 @@ _FOLDED_ENTRY_RE = re.compile(r",\s*spark\.[^=,;]*=")
 def resolve_cpus() -> int:
     """The engine's core count: ``$SPARK_GRAFT_CPUS`` when set, else
     the host's CPU count (8 when unknown). :func:`get_spark` sizes
-    ``local[N]`` and the shuffle partitions from it."""
+    ``local[N]`` and the shuffle partitions from it, and so do the
+    table loaders for a caller-provided session."""
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-
-
-def ensure_utc(spark: SparkSession) -> str | None:
-    """Pin a caller-provided session to UTC at runtime.
-
-    The epoch-integer timestamp path (parsers.parse_timestamp_ms) goes
-    through unix_timestamp/cast, which is session-timezone-sensitive;
-    under a non-UTC session epoch values would shift by the zone offset
-    while text timestamps round-trip — internally inconsistent columns.
-    Sessions built by :func:`get_spark` are already UTC; this covers
-    driver-harness or user sessions.
-
-    Returns the PRIOR timezone string when the session had to be
-    re-pinned (``None`` when it was already UTC). The conversion run
-    scopes its own pin (``operators.convert.run_conversion``); callers
-    that hand back a LAZY DataFrame must leave the pin in place — the
-    conf is read at action time, so un-pinning would shift the frame's
-    epoch casts.
-    """
-    prior = spark.conf.get("spark.sql.session.timeZone", "")
-    if prior != "UTC":
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        return prior or None
-    return None
 
 
 def warm_codegen(*frames) -> float:

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tabular_to_parquet_spark.session import resolve_cpus
+
 TABLE_NAMES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -72,7 +74,7 @@ def _ensure_session_confs(spark: SparkSession) -> None:
         # size shuffles to the machine instead of the 200 default —
         # the small-SF harness otherwise pays 200-task overhead per
         # shuffle (AQE may be off in a caller-provided session)
-        cpus = os.cpu_count() or 8
+        cpus = resolve_cpus()
         if int(spark.conf.get("spark.sql.shuffle.partitions")) > cpus * 2:
             spark.conf.set("spark.sql.shuffle.partitions", str(cpus))
     except Exception:  # pragma: no cover - never settable-failure in 4.x

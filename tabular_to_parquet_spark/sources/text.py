@@ -59,13 +59,14 @@ def read_header(path: str, delimiter: str) -> list[str]:
 
 
 def read_sample_rows(
-    path: str, delimiter: str, max_rows: int | None = 1000
+    path: str, delimiter: str, max_rows: int = 1000
 ) -> tuple[list[str], list[list[str]]]:
-    """(header, first ``max_rows`` data rows) in file order.
-
-    ``max_rows=None`` reads the whole file (--infer-full-schema,
-    reference main.rs:25-26). Unreadable rows are skipped, like the
-    reference's inference loop (schema.rs:317-320).
+    """(header, first ``max_rows`` data rows) in file order — the
+    default sample inference (reference schema.rs:11). Whole-file
+    inference (--infer-full-schema) is Spark-side instead
+    (:func:`~tabular_to_parquet_spark.plans.inference.infer_schema_distributed`).
+    Unreadable rows are skipped, like the reference's inference loop
+    (schema.rs:317-320).
     """
     rows: list[list[str]] = []
     with open_text(path) as fh:
@@ -80,7 +81,7 @@ def read_sample_rows(
             if any("�" in field for field in rec):
                 continue
             rows.append(rec)
-            if max_rows is not None and len(rows) >= max_rows:
+            if len(rows) >= max_rows:
                 break
     return header, rows
 
@@ -106,6 +107,25 @@ def sanitize_names(names: list[str]) -> list[str]:
     return out
 
 
+def delimited_reader(reader, delimiter: str, columns: list[str]):
+    """The string-typed delimited scan definition, applied to a batch
+    ``spark.read`` or a streaming ``spark.readStream``: every column
+    StringType, header line skipped, RFC 4180 quoting, PERMISSIVE.
+    Call ``.csv(path)`` on the result."""
+    schema = T.StructType(
+        [T.StructField(name, T.StringType(), True) for name in columns]
+    )
+    return reader.schema(schema).options(
+        header=True,  # skip line 1; names come from `schema`
+        delimiter=delimiter,
+        quote='"',
+        escape='"',  # RFC 4180 doubled quotes, like the csv crate
+        multiLine=False,
+        mode="PERMISSIVE",
+        emptyValue="",
+    )
+
+
 def read_delimited_as_strings(
     spark: SparkSession,
     path: str,
@@ -118,20 +138,7 @@ def read_delimited_as_strings(
     (functions/parsers.py), so Catalyst sees one scan → one projection
     and can pipeline the whole thing in a single codegen stage.
     """
-    schema = T.StructType(
-        [T.StructField(name, T.StringType(), True) for name in columns]
-    )
-    return (
-        spark.read.schema(schema)
-        .option("header", True)  # skip line 1; names come from `schema`
-        .option("delimiter", delimiter)
-        .option("quote", '"')
-        .option("escape", '"')  # RFC 4180 doubled quotes, like the csv crate
-        .option("multiLine", False)
-        .option("mode", "PERMISSIVE")
-        .option("emptyValue", "")
-        .csv(path)
-    )
+    return delimited_reader(spark.read, delimiter, columns).csv(path)
 
 
 def delimited_adapter(

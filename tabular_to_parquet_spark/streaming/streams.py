@@ -6,9 +6,10 @@ event analytics a streaming surface:
 
 - ``stream_convert_directory`` — the CSV→Parquet pipeline as a file
   stream: new delimited files landing in a directory are converted
-  continuously with the SAME cast expressions as the batch path
-  (exactly-once per file via checkpointing). This is the shape a
-  100 TB/day ingest takes: partition-parallel, no state, no shuffle.
+  continuously with the SAME scan options and cast expressions as the
+  batch path (exactly-once per file via checkpointing). This is the
+  shape a 100 TB/day ingest takes: partition-parallel, no state, no
+  shuffle.
 
 - ``windowed_event_stats`` — event-time tumbling-window aggregation
   with a watermark for late data; deterministic aggregates only
@@ -19,10 +20,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from tabular_to_parquet_spark.operators.convert import typed_frame
 from tabular_to_parquet_spark.plans.logical_types import LogicalType
+from tabular_to_parquet_spark.sources.text import delimited_reader
 
 
 def stream_convert_directory(
@@ -40,16 +41,7 @@ def stream_convert_directory(
     file) — streaming requires a fixed schema. Returns the started
     StreamingQuery; callers stop it or await termination.
     """
-    schema = T.StructType([T.StructField(n, T.StringType(), True) for n in columns])
-    raw = (
-        spark.readStream.schema(schema)
-        .option("header", True)
-        .option("delimiter", delimiter)
-        .option("quote", '"')
-        .option("escape", '"')
-        .option("mode", "PERMISSIVE")
-        .csv(input_dir)
-    )
+    raw = delimited_reader(spark.readStream, delimiter, columns).csv(input_dir)
     typed = typed_frame(raw, types)
     return (
         typed.writeStream.format("parquet")

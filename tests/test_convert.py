@@ -4,6 +4,7 @@ beyond): CSV → inferred schema → typed parquet, verified with DuckDB."""
 from __future__ import annotations
 
 import datetime
+import logging
 import subprocess
 import sys
 
@@ -319,23 +320,33 @@ def test_strict_full_inference_skips_invalid_utf8(spark, tmp_path):
     assert got == sum(i * 10 for i in range(100) if i % 10)
 
 
-def test_observe_errors_opt_out(spark, tmp_path):
-    # observe_errors=False: identical typed output and exact row count,
-    # parse_errors all zero (the accounting was skipped)
-    src = tmp_path / "noobs.csv"
-    src.write_text("i,f\n" + "\n".join(f"{i},{i}.5" for i in range(50)) + "\nbad,9.5\n")
-    out_a = tmp_path / "a.parquet"
-    out_b = tmp_path / "b.parquet"
-    res_a = convert_delimited_to_parquet(spark, str(src), str(out_a))
-    res_b = convert_delimited_to_parquet(
-        spark, str(src), str(out_b), observe_errors=False
+def test_sample_inferred_uint64_overflow_warns(spark, tmp_path, caplog):
+    # the first 1,000 rows fit i64, so the sample picks the LongType
+    # uint64 lowering; the 100 later values above i64 max cast to NULL
+    big = 2**63 + 5
+    src = tmp_path / "u.csv"
+    src.write_text(
+        "k,u\n"
+        + "".join(f"{i},{i}\n" for i in range(1100))
+        + "".join(f"{i},{big + i}\n" for i in range(1100, 1200))
     )
-    assert res_b.rows == res_a.rows == 51
-    assert res_a.parse_errors == {"i": 1, "f": 0}
-    assert res_b.parse_errors == {"i": 0, "f": 0}
-    a = sorted(map(repr, spark.read.parquet(str(out_a)).collect()))
-    b = sorted(map(repr, spark.read.parquet(str(out_b)).collect()))
-    assert a == b
+    out = tmp_path / "u.parquet"
+    logger = "tabular_to_parquet_spark.operators.convert"
+    with caplog.at_level(logging.WARNING, logger=logger):
+        res = convert_delimited_to_parquet(spark, str(src), str(out))
+    u = res.types[1]
+    assert (u.kind, u.uint_exceeds_i64) == ("uint64", False)
+    assert res.rows == 1200
+    assert res.parse_errors == {"k": 0, "u": 100}
+    warnings = [
+        r for r in caplog.records if r.name == logger and r.levelno == logging.WARNING
+    ]
+    assert len(warnings) == 1
+    assert "column 'u': 100 value(s)" in warnings[0].getMessage()
+    nulled = duckdb.sql(
+        f"SELECT min(k), count(*) FROM '{out}/*.parquet' WHERE u IS NULL"
+    ).fetchone()
+    assert nulled == (1100, 100)
 
 
 def test_sink_storage_contract(spark, tmp_path):

@@ -5,7 +5,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tabular_to_parquet_spark.operators.convert import typed_frame
 from tabular_to_parquet_spark.plans.inference import infer_schema
+from tabular_to_parquet_spark.sources.text import read_delimited_as_strings
 from tabular_to_parquet_spark.streaming import (
     stream_convert_directory,
     windowed_event_stats,
@@ -17,8 +19,12 @@ SF = "/root/testdata/sf0.001"
 def test_stream_convert_directory(spark, tmp_path):
     in_dir = tmp_path / "in"
     in_dir.mkdir()
-    (in_dir / "a.csv").write_text("i,f\n1,1.5\n2,2.5\n")
-    (in_dir / "b.csv").write_text("i,f\n3,3.5\nNA,null\n")
+    # a quoted delimiter, a doubled quote, null tokens and two ragged
+    # rows (one short, one long)
+    (in_dir / "a.csv").write_text('i,f,s\n1,1.5,plain\n2,2.5,"x,y"\n')
+    (in_dir / "b.csv").write_text(
+        'i,f,s\n3,3.5,"say ""hi"""\nNA,null,z\n4,4.5\n5,5.5,w,extra\n'
+    )
 
     names, types = infer_schema(str(in_dir / "a.csv"), ",")
     q = stream_convert_directory(
@@ -27,9 +33,20 @@ def test_stream_convert_directory(spark, tmp_path):
     )
     q.awaitTermination(120)
     out = spark.read.parquet(str(tmp_path / "out"))
-    rows = sorted([tuple(r) for r in out.collect()], key=lambda t: (t[0] is None, t[0]))
-    assert rows == [(1, 1.5), (2, 2.5), (3, 3.5), (None, None)]
-    assert [f.dataType.simpleString() for f in out.schema.fields] == ["bigint", "double"]
+
+    def rows(df):
+        return sorted([tuple(r) for r in df.collect()], key=lambda t: (t[0] is None, t[0]))
+
+    assert rows(out) == [
+        (1, 1.5, "plain"), (2, 2.5, "x,y"), (3, 3.5, 'say "hi"'),
+        (4, 4.5, None), (5, 5.5, "w"), (None, None, "z"),
+    ]
+    assert [f.dataType.simpleString() for f in out.schema.fields] == [
+        "bigint", "double", "string",
+    ]
+    # the stream and the batch conversion share one scan definition
+    batch = typed_frame(read_delimited_as_strings(spark, str(in_dir), ",", names), types)
+    assert rows(out) == rows(batch)
 
 
 def test_windowed_event_stats_matches_batch(spark):

@@ -463,7 +463,7 @@ def main() -> int:
     import pandas as pd
 
     from pyspark.sql import functions as F
-    from tabular_to_parquet_spark.session import ensure_utc, get_spark
+    from tabular_to_parquet_spark.session import get_spark
     from tabular_to_parquet_spark.sources.tar_source import (
         read_tar_csv_as_strings,
         read_tar_csv_header,
@@ -475,7 +475,6 @@ def main() -> int:
     )
 
     spark = get_spark("archive-fuzz")
-    ensure_utc(spark)
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
