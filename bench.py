@@ -296,10 +296,6 @@ def main() -> None:
     def _():
         _noop(dedup.minhash_pairs(docs, threshold=0.5))
 
-    @timed("minhash_pairs_fast")
-    def _():
-        _noop(dedup.minhash_pairs(docs, threshold=0.5, fast=True))
-
     # warm re-run of the identical plan: first-run wall is dominated by
     # one-time Janino codegen (amortized at scale); this is the number
     # that extrapolates to a long-running cluster
@@ -307,23 +303,9 @@ def main() -> None:
     def _():
         _noop(dedup.minhash_pairs(docs, threshold=0.5))
 
-    # iterative-caller mode: signatures persisted across the self-join
-    # sides, released afterwards (the documented cache contract)
-    @timed("minhash_pairs_cached")
-    def _():
-        out = dedup.minhash_pairs(docs, threshold=0.5, cache_signatures=True)
-        _noop(out)
-        dedup.unpersist_cache(out)
-
     @timed("simhash_pairs")
     def _():
         _noop(dedup.simhash_pairs(docs, max_hamming=3))
-
-    @timed("simhash_pairs_cached")
-    def _():
-        out = dedup.simhash_pairs(docs, max_hamming=3, cache_signatures=True)
-        _noop(out)
-        dedup.unpersist_cache(out)
 
     # -- similarity search --------------------------------------------------
     @timed("knn_bruteforce")
@@ -620,7 +602,7 @@ def main() -> None:
     # host-normalized per r11 verdict item 1; contention-normalized by
     # max(sha, spark-noop) canary ratio per r12 verdict item 1): any
     # query >1.5x the min of its trailing 3 comparable (idle, same-sf,
-    # canary-bearing) committed snapshots, after rescaling history to
+    # same-cpus, canary-bearing) committed snapshots, after rescaling history to
     # today's host state. Flags from non-idle or subset runs are
     # ADVISORY — the r12 driver run at load1 19 shipped 3 hard flags
     # that were pure co-tenant contention; only an idle full-suite run
@@ -644,10 +626,12 @@ def main() -> None:
             _hist, timings, sf=_sf(), current_canary=canary_sha,
             current_noop=canary_noop,
             current_noop_protocol="warmed_min3",
+            current_cpus=eff_cpus,
         )
         flagmeta = _bh.flag_meta(
             _hist, sf=_sf(), current_canary=canary_sha,
             current_noop_protocol="warmed_min3",
+            current_cpus=eff_cpus,
         )
         if regressions:
             kind = "ADVISORY (non-idle/subset run)" if advisory_run else \
@@ -660,8 +644,7 @@ def main() -> None:
         elif flagmeta.get("bootstrap"):
             print(
                 "[bench] regression flag in bootstrap: no canary-bearing "
-                "comparable snapshot yet (pre-r12 history is "
-                "host-drift-confounded; r11 verdict item 1)",
+                f"comparable snapshot at cpus={eff_cpus} and this sf yet",
                 file=sys.stderr,
             )
     except Exception as exc:  # missing history file etc. — never fatal

@@ -135,18 +135,6 @@ def main(argv: list[str] | None = None) -> int:
         ap.print_help()
         print("\nerror: no input provided", file=sys.stderr)
         return 1
-    if args.preserve_order and args.format != "delimited":
-        # the reference's input-order guarantee is defined over
-        # delimited text lines (conversion.rs:177-189); pretending it
-        # holds for container formats would be a silent lie — refuse
-        # rather than ignore
-        print(
-            "error: --preserve-order is only supported for delimited "
-            "input; row order for container formats is not part of the "
-            "reference contract",
-            file=sys.stderr,
-        )
-        return 1
     if args.format == "fixed-width" and not args.fixed_width_spec:
         print("error: --format fixed-width requires --fixed-width-spec", file=sys.stderr)
         return 1
@@ -162,27 +150,25 @@ def main(argv: list[str] | None = None) -> int:
         input_path = args.input
         output_path = args.output or derive_output_path(args.input)
 
-    from tabular_to_parquet_spark.operators.convert import run_conversion
+    from tabular_to_parquet_spark.operators.convert import OptionRefused, run_conversion
     from tabular_to_parquet_spark.session import get_spark
 
     spark = get_spark("tabular_to_parquet_cli")
     adapter = adapters[args.format](spark, input_path, args)
-    if args.strict_drop and adapter.typed:
-        print(
-            f"error: --strict-drop applies to string-typed input; this "
-            f"{args.format} input has typed columns, which pass through",
-            file=sys.stderr,
+    try:
+        res = run_conversion(
+            spark,
+            adapter,
+            output_path,
+            infer_full=args.infer_full_schema,
+            preserve_order=args.preserve_order,
+            single_file=args.single_file,
+            strict_drop=args.strict_drop,
         )
+    except OptionRefused as exc:
+        flag = "--" + exc.option.replace("_", "-")
+        print(f"error: {flag} {exc.reason} ({args.format} input)", file=sys.stderr)
         return 1
-    res = run_conversion(
-        spark,
-        adapter,
-        output_path,
-        infer_full=args.infer_full_schema,
-        preserve_order=args.preserve_order,
-        single_file=args.single_file,
-        strict_drop=args.strict_drop,
-    )
     if res.types is None:
         schema_desc = ", ".join(res.columns) + " (typed passthrough)"
     else:

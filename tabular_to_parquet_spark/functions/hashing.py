@@ -12,9 +12,8 @@ non-negative BIGINT in both engines:
 - Spark:  ``conv(substr(md5(x), 1, 15), 16, 10)::long``
 - DuckDB: ``('0x' || substr(md5(x), 1, 15))::BIGINT``
 
-This is an engine-parity tool, not a speed claim: at 100 TB you would
-swap in `xxhash64` (one fused JVM op) via the ``fast=`` switch — the
-operator semantics don't change, only the fingerprint values.
+:func:`md5_i64_sql` is the one DuckDB spelling; every oracle builds
+its md5-derived integers through it.
 """
 
 from __future__ import annotations
@@ -43,9 +42,3 @@ def md5_i64_sql(expr: str, seed: str | None = None) -> str:
         expr = f"('{seed}#' || {expr})"
     return f"(('0x' || substr(md5({expr}), 1, {HEX_CHARS}))::BIGINT)"
 
-
-def fast_i64(c: Column, seed: str | None = None) -> Column:
-    """The 100 TB-scale variant: xxhash64, single JVM op, no oracle."""
-    if seed is not None:
-        c = F.concat(F.lit(f"{seed}#"), c)
-    return F.xxhash64(c)

@@ -23,6 +23,7 @@ import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -80,17 +81,31 @@ def _order_key_cols() -> list[Column]:
 _ORDER_KEY = ["__ord_file", "__ord_block", "__row_idx"]
 
 
-def typed_frame(
-    raw: DataFrame, types: list[LogicalType], preserve_order: bool = False
-) -> DataFrame:
+def typed_frame(raw: DataFrame, types: list[LogicalType]) -> DataFrame:
     """String-typed frame → typed frame via one cast projection."""
-    cols = [
-        cast_expr(F.col(name), lt).alias(name)
-        for name, lt in zip(raw.columns, types)
-    ]
-    if preserve_order:
-        return raw.select(*cols, *_order_key_cols())
-    return raw.select(*cols)
+    return raw.select(
+        *[cast_expr(F.col(name), lt).alias(name) for name, lt in zip(raw.columns, types)]
+    )
+
+
+def _has_file_metadata(frame: DataFrame) -> bool:
+    """Whether ``frame`` is a file scan exposing the ``_metadata`` columns
+    the input-order key reads. Resolving the column analyzes the plan
+    only; no job runs."""
+    try:
+        frame.select("_metadata.file_path")
+    except AnalysisException:
+        return False
+    return True
+
+
+class OptionRefused(ValueError):
+    """:func:`run_conversion` cannot honour ``option`` for this source."""
+
+    def __init__(self, option: str, reason: str):
+        super().__init__(f"{option} {reason}")
+        self.option = option
+        self.reason = reason
 
 
 def observed_typed_frame(
@@ -241,12 +256,22 @@ def run_conversion(
 
     A typed adapter passes its frame through unchanged (``types`` is
     ``None``); strict drop and input order are defined over string
-    rows only, so it refuses both.
+    rows only, so it refuses both. Input order also needs the frame to
+    be a file scan: rows that come out of a Python reader (tar and xlsx
+    members, for example) carry no file position, so
+    ``preserve_order`` refuses them.
+    Both refusals raise :class:`OptionRefused` before any job runs.
     """
-    if adapter.typed and (strict_drop or preserve_order):
-        raise ValueError(
-            "strict_drop and preserve_order apply to string-typed sources; "
-            "this source passes typed columns through"
+    if adapter.typed and strict_drop:
+        raise OptionRefused(
+            "strict_drop",
+            "applies to string-typed input; this source's typed columns pass through",
+        )
+    if preserve_order and (adapter.typed or not _has_file_metadata(adapter.frame)):
+        raise OptionRefused(
+            "preserve_order",
+            "needs a string-typed file scan that records each row's file "
+            "position; this source has none",
         )
     t0 = time.monotonic()
     names, frame = adapter.columns, adapter.frame

@@ -9,7 +9,7 @@ Five families, each with an explicit 100 TB story:
                    doc_id shuffle, map-side combined); LSH banding
                    turns the quadratic pair search into an equi-join
                    on (band, band_key). THE scale path for near-dup
-                   at 100 TB; ``fast=True`` → xxhash64 base.
+                   at 100 TB.
 - **simhash**    — 32-bit signature via codegen'd conditional SUMs;
                    banded self-join + hamming filter for pairs.
 - **n-gram Jaccard** — exact pairwise similarity inside blocking
@@ -22,8 +22,9 @@ Five families, each with an explicit 100 TB story:
                    buckets or a supplied candidate pair set.
 
 Hashing is md5-derived (functions/hashing.py) so the DuckDB oracle
-reproduces every signature bit-for-bit; swap ``fast=True`` paths to
-xxhash64 on a real cluster.
+reproduces every signature bit-for-bit. The MinHash family (md5
+shingle base, affine permutations, md5 band keys, agreement score) is
+defined once here and once in SQL (parity/extensions.py).
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from tabular_to_parquet_spark.functions.hashing import fast_i64, md5_i64
+from tabular_to_parquet_spark.functions.hashing import md5_i64
 from tabular_to_parquet_spark.operators.text_analysis import (
     normalized_text,
     tokens,
@@ -109,52 +110,8 @@ def _affine(h: Column, a: int, b: int, c: int) -> Column:
     return (F.lit(a) * lo + F.lit(b) * hi + F.lit(c)) % F.lit(MINHASH_P61)
 
 
-def minhash_signature(text: Column, k: int = MINHASH_K) -> Column:
-    """k-component MinHash signature as a single projection (Column
-    API twin of :func:`minhash_frame` — identical values).
-
-    One md5 base hash per shingle, k cheap affine permutations.
-    Empty shingle set → component = NULL (never collides with real
-    hashes because band keys include NULL-ness via md5 of the concat).
-    """
-    # NB: one-arg lambdas only — PySpark binds extra lambda params to the
-    # array index, so `lambda s, j=j:` silently breaks. Closure factory:
-    bases = F.transform(word_shingles(text), lambda s: md5_i64(s))
-
-    def perm(a: int, b: int, c: int):
-        return lambda h: _affine(h, a, b, c)
-
-    return F.array(
-        *[
-            F.array_min(F.transform(bases, perm(a, b, c)))
-            for a, b, c in minhash_params(k)
-        ]
-    )
-
-
-def minhash_bands(sig: Column, bands: int = MINHASH_BANDS, rows: int = MINHASH_ROWS) -> Column:
-    """Band keys: md5 of the '|'-joined signature slice per band."""
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.element_at(sig, b * rows + r + 1).cast("string")
-                        for r in range(rows)
-                    ],
-                )
-            )
-            for b in range(bands)
-        ]
-    )
-
-
 def minhash_frame(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    fast: bool = False,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Per-doc MinHash signatures via explode + hash-aggregate.
 
@@ -164,13 +121,8 @@ def minhash_frame(
     permutation minima as plain MIN aggregates — whole-stage codegen
     end to end. The groupBy shuffle is tiny: map-side partial agg
     reduces each doc to one k-component row per partition.
-
-    ``fast=True`` swaps the md5 base for ``xxhash64`` (single fused
-    JVM op, no hex/conv detour) — the 100 TB default. Signatures then
-    differ from the DuckDB-reproducible md5 ones (same statistics, no
-    oracle), so the parity catalog pins ``fast=False``.
     """
-    comps = _minhash_components(df, text_col, id_col, fast=fast)
+    comps = _minhash_components(df, text_col, id_col)
     return comps.select(
         F.col(id_col),
         F.array(*[F.col(f"_mh{j}") for j in range(MINHASH_K)]).alias("sig"),
@@ -178,24 +130,17 @@ def minhash_frame(
 
 
 def _minhash_components(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    fast: bool = False,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Signatures as K separate columns ``_mh0.._mhK-1`` (the join-side
     layout: per-component columns keep the pair scoring in whole-stage
-    codegen, where an array would force interpreted lambdas)."""
+    codegen, where an array would force interpreted lambdas). An empty
+    shingle set (fewer than 3 tokens) gives NULL components."""
     exploded = df.select(
         F.col(id_col),
         F.explode_outer(word_shingles(F.col(text_col))).alias("_shingle"),
     )
-    base = (
-        fast_i64(F.col("_shingle")).bitwiseAND(F.lit((1 << 60) - 1))
-        if fast
-        else md5_i64(F.col("_shingle"))
-    )
-    hashed = exploded.select(F.col(id_col), base.alias("_h"))
+    hashed = exploded.select(F.col(id_col), md5_i64(F.col("_shingle")).alias("_h"))
     aggs = [
         F.min(_affine(F.col("_h"), a, b, c)).alias(f"_mh{j}")
         for j, (a, b, c) in enumerate(minhash_params())
@@ -204,16 +149,14 @@ def _minhash_components(
 
 
 def minhash_banded(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    fast: bool = False,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """LSH-banded signature rows: (id, _mh0.._mhK-1, band, band_key) —
-    BANDS rows per doc. The join-side layout shared by
+    BANDS rows per doc; a band key is the md5 of its '|'-joined
+    component slice. The join-side layout shared by
     :func:`minhash_pairs` and the persisted band index
     (pipeline.build_minhash_band_index)."""
-    comps = _minhash_components(df, text_col, id_col, fast=fast)
+    comps = _minhash_components(df, text_col, id_col)
     band_keys = F.array(
         *[
             F.md5(
@@ -370,12 +313,25 @@ def banding_calibration(
     )
 
 
-def unpersist_cache(result: DataFrame) -> None:
-    """Release the signature cache attached by ``cache_signatures=True``
-    (no-op for frames built without one)."""
-    cached = getattr(result, "_signature_cache", None)
-    if cached is not None:
-        cached.unpersist()
+def _band_join(
+    left: DataFrame, right: DataFrame, cond: Column | None = None
+) -> tuple[DataFrame, Column]:
+    """Equi-join of two :func:`minhash_banded` frames on (band,
+    band_key), aliased ``a`` and ``b``, plus ``cond`` when given; and
+    the estimated Jaccard of a joined row — K per-component equality
+    sums over K (whole-stage codegen, where a ``zip_with`` lambda over
+    signature arrays would be interpreted)."""
+    a, b = left.alias("a"), right.alias("b")
+    on = (F.col("a.band") == F.col("b.band")) & (
+        F.col("a.band_key") == F.col("b.band_key")
+    )
+    if cond is not None:
+        on = on & cond
+    n_eq = None
+    for j in range(MINHASH_K):
+        term = F.col(f"a._mh{j}").eqNullSafe(F.col(f"b._mh{j}")).cast("int")
+        n_eq = term if n_eq is None else n_eq + term
+    return a.join(b, on), n_eq.cast("double") / F.lit(float(MINHASH_K))
 
 
 def minhash_pairs(
@@ -383,8 +339,6 @@ def minhash_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    fast: bool = False,
-    cache_signatures: bool = False,
 ) -> DataFrame:
     """Candidate near-dup pairs via LSH banding, scored by signature
     agreement (estimated Jaccard).
@@ -393,36 +347,17 @@ def minhash_pairs(
     projection; ``explode`` only over BANDS (4) rows per doc; the pair
     generation is an equi-join on (band index, band key) — a plain
     shuffle join on a short key, skew-safe under AQE. No all-pairs
-    product anywhere. Signature agreement is scored as K per-component
-    equality sums (whole-stage codegen) rather than an interpreted
-    ``zip_with`` lambda over signature arrays.
-
-    By default the self-join recomputes the signature subplan on each
-    side — the right trade for one-shot queries (no storage pinned on a
-    shared cluster). Iterative callers that materialize the result more
-    than once should pass ``cache_signatures=True`` and release the
-    cache afterwards with :func:`unpersist_cache` (the persisted frame
-    rides on the result as ``_signature_cache``).
+    product anywhere. The self-join recomputes the signature subplan
+    on each side, so no storage is pinned on a shared cluster.
     """
-    banded = minhash_banded(df, text_col, id_col, fast=fast)
-    if cache_signatures:
-        banded = banded.persist()
-    a, b = banded.alias("a"), banded.alias("b")
-    n_eq = None
-    for j in range(MINHASH_K):
-        term = F.col(f"a._mh{j}").eqNullSafe(F.col(f"b._mh{j}")).cast("int")
-        n_eq = term if n_eq is None else n_eq + term
-    est = n_eq.cast("double") / F.lit(float(MINHASH_K))
+    banded = minhash_banded(df, text_col, id_col)
+    joined, est = _band_join(
+        banded, banded, F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    )
     # est is computed BEFORE the pair-dedup so the dedup shuffle carries
     # (long, long, double) rows, not two 16-component signature arrays
-    out = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
+    return (
+        joined.select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
             est.alias("est_jaccard"),
@@ -430,9 +365,6 @@ def minhash_pairs(
         .filter(F.col("est_jaccard") >= threshold)
         .dropDuplicates(["id_a", "id_b"])
     )
-    if cache_signatures:
-        out._signature_cache = banded
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -497,21 +429,14 @@ def simhash_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    cache_signatures: bool = False,
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash) ≤ 3 via 8-bit band join.
 
     Pigeonhole: ≤3 differing bits across 4 bands ⇒ at least one band
     identical, so the band equi-join finds every qualifying pair —
     exact result, LSH-join cost.
-
-    ``cache_signatures`` follows the :func:`minhash_pairs` contract:
-    off by default (no storage pinned); when on, release with
-    :func:`unpersist_cache`.
     """
     sims = simhash_frame(df, text_col, id_col)
-    if cache_signatures:
-        sims = sims.persist()
     band_width = SIMHASH_BITS // SIMHASH_BANDS
     banded = sims.select(
         F.col(id_col),
@@ -529,7 +454,7 @@ def simhash_pairs(
     )
     a, b = banded.alias("a"), banded.alias("b")
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    out = (
+    return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -548,9 +473,6 @@ def simhash_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
     )
-    if cache_signatures:
-        out._signature_cache = sims
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -128,15 +128,13 @@ def cms_sql(depth: int = CMS_DEPTH, width: int = CMS_WIDTH) -> dict[str, str]:
     Returns {'grid': <j-range relation>, 'bucket': <fn(tok_expr, j_expr)>}
     building blocks for oracles.
     """
-    from tabular_to_parquet_spark.functions.hashing import HEX_CHARS
+    from tabular_to_parquet_spark.functions.hashing import md5_i64_sql
 
     js = ", ".join(str(j) for j in range(depth))
 
     def bucket(tok_expr: str, j_expr: str) -> str:
-        return (
-            f"((('0x' || substr(md5('cms' || {j_expr} || '#' || {tok_expr}), "
-            f"1, {HEX_CHARS}))::BIGINT) % {width})"
-        )
+        h = md5_i64_sql(f"'cms' || {j_expr} || '#' || {tok_expr}")
+        return f"({h} % {width})"
 
     return {"js": f"(SELECT unnest([{js}]) AS j)", "bucket": bucket}
 
@@ -182,11 +180,9 @@ def hll_registers(df: DataFrame, key_col: str) -> DataFrame:
 
 def hll_sql(key_expr: str) -> str:
     """DuckDB relation computing the identical register table."""
-    from tabular_to_parquet_spark.functions.hashing import HEX_CHARS
+    from tabular_to_parquet_spark.functions.hashing import md5_i64_sql
 
-    h = (
-        f"(('0x' || substr(md5('hll#' || {key_expr}), 1, {HEX_CHARS}))::BIGINT)"
-    )
+    h = md5_i64_sql(f"'hll#' || {key_expr}")
     return f"""(
     WITH hh AS (SELECT {h} AS h FROM __HLL_SRC__),
     wb AS (

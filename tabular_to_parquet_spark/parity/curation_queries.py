@@ -1239,20 +1239,16 @@ def _q_banding_calibration(spark, sf_dir):
 def _d21_oracle() -> str:
     from tabular_to_parquet_spark.operators import dedup
     from tabular_to_parquet_spark.parity.extensions import (
-        _BANDS,
-        _md5i,
-        _MH_COMPONENTS,
+        _MH_CAND_CTE,
         _MH_EQ,
-        _mh_band_key,
+        _mh_banded_cte,
+        _mh_sigs_cte,
         _shingles,
         _TOKS,
     )
 
     grades = ", ".join(str(g) for g in dedup.CALIBRATION_GRADES)
     half = dedup.MINHASH_K // 2
-    band_case = " ".join(
-        f"WHEN {b} THEN {_mh_band_key(b)}" for b in range(_BANDS)
-    )
     return f"""
 WITH grades AS (SELECT unnest([{grades}]) AS g),
 basedocs AS (
@@ -1275,23 +1271,9 @@ planted AS MATERIALIZED (
     SELECT doc_id, text FROM basedocs
     UNION ALL SELECT doc_id, text FROM variants
 ),
-sigs AS MATERIALIZED (
-    SELECT doc_id, {_MH_COMPONENTS}
-    FROM (SELECT doc_id,
-                 list_transform({_shingles(_TOKS)}, s -> {_md5i('s')}) AS bases
-          FROM planted)
-),
-banded AS (
-    SELECT sigs.*, band,
-           (CASE band {band_case} END) AS band_key
-    FROM sigs, (SELECT unnest(range(0, {_BANDS})) AS band)
-),
-cand AS (
-    SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-    FROM banded a JOIN banded b
-      ON a.band = b.band AND a.band_key = b.band_key
-         AND a.doc_id < b.doc_id
-),
+{_mh_sigs_cte("planted", materialized=True)},
+{_mh_banded_cte()},
+{_MH_CAND_CTE},
 scored_cand AS (
     SELECT id_a, id_b, ({_MH_EQ}) AS matches
     FROM cand JOIN sigs a ON a.doc_id = id_a JOIN sigs b ON b.doc_id = id_b

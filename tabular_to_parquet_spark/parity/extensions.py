@@ -19,7 +19,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tabular_to_parquet_spark.functions.hashing import HEX_CHARS
+from tabular_to_parquet_spark.functions.hashing import md5_i64_sql
 from tabular_to_parquet_spark.operators import dedup, multimodal, similarity
 from tabular_to_parquet_spark.operators import text_analysis as ta
 from tabular_to_parquet_spark.parity.catalog import CATALOG, register
@@ -60,12 +60,6 @@ _TOKS = "list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '')"
 _TOKS_LC = "list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), x -> x != '')"
 #: fingerprint normalization (ta.normalized_text)
 _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
-
-
-def _md5i(expr: str, seed: str | None = None) -> str:
-    if seed is not None:
-        expr = f"('{seed}#' || {expr})"
-    return f"(('0x' || substr(md5({expr}), 1, {HEX_CHARS}))::BIGINT)"
 
 
 def _shingles(toks: str, w: int = 3) -> str:
@@ -161,7 +155,7 @@ def _q_fingerprint(spark, sf_dir):
 
 
 register("x02_fingerprint", f"""
-SELECT doc_id, md5({_NORM}) AS fp_md5, {_md5i(_NORM)} AS fp_i64 FROM documents
+SELECT doc_id, md5({_NORM}) AS fp_md5, {md5_i64_sql(_NORM)} AS fp_i64 FROM documents
 """)(_q_fingerprint)
 
 
@@ -229,7 +223,7 @@ def _q_winnow(spark, sf_dir):
 register("x07_winnow_fingerprints", f"""
 WITH grams AS (
     SELECT doc_id, i AS pos,
-           {_md5i(f'substr(norm, i, {ta.WINNOW_K})')} AS h
+           {md5_i64_sql(f'substr(norm, i, {ta.WINNOW_K})')} AS h
     FROM (SELECT doc_id, {_NORM} AS norm FROM documents),
          LATERAL (SELECT unnest(range(1, length(norm) - {ta.WINNOW_K - 2})) AS i)
     WHERE length(norm) >= {ta.WINNOW_K}
@@ -386,7 +380,7 @@ def _q_feature_hashing(spark, sf_dir):
 
 
 register("x16_feature_hashing", f"""
-SELECT doc_id, CAST({_md5i('t')} % {_X16_DIMS} AS BIGINT) AS dim,
+SELECT doc_id, CAST({md5_i64_sql('t')} % {_X16_DIMS} AS BIGINT) AS dim,
        CAST(COUNT(*) AS BIGINT) AS n
 FROM documents, LATERAL (SELECT unnest({_TOKS_LC}) AS t)
 GROUP BY 1, 2
@@ -557,12 +551,51 @@ _MH_COMPONENTS = ", ".join(
     f"% {dedup.MINHASH_P61})) AS mh_{j}"
     for j, (a, b, c) in enumerate(dedup.minhash_params())
 )
-_SIG_CTE = f"""
-sigs AS (
+
+
+def _mh_sigs_cte(rel: str, name: str = "sigs", materialized: bool = False) -> str:
+    """Signature CTE ``name(doc_id, mh_0..mh_K-1)`` over any
+    ``rel(doc_id, text)`` relation (dedup._minhash_components)."""
+    mat = " MATERIALIZED" if materialized else ""
+    return f"""{name} AS{mat} (
     SELECT doc_id, {_MH_COMPONENTS}
-    FROM (SELECT doc_id, list_transform({_shingles(_TOKS)}, s -> {_md5i('s')}) AS bases
-          FROM documents)
+    FROM (SELECT doc_id, list_transform({_shingles(_TOKS)}, s -> {md5_i64_sql('s')}) AS bases
+          FROM {rel})
 )"""
+
+
+def _mh_banded_cte(sigs: str = "sigs", name: str = "banded") -> str:
+    """BANDS rows per signature with the md5 band key of each
+    component slice (dedup.minhash_banded)."""
+    keys = " ".join(
+        f"WHEN {b} THEN md5(concat_ws('|', "
+        + ", ".join(f"mh_{b * _ROWS + r}::VARCHAR" for r in range(_ROWS))
+        + "))"
+        for b in range(_BANDS)
+    )
+    return f"""{name} AS (
+    SELECT {sigs}.*, band,
+           (CASE band {keys} END) AS band_key
+    FROM {sigs}, (SELECT unnest(range(0, {_BANDS})) AS band)
+)"""
+
+
+#: candidate pairs of a ``banded`` CTE: one shared band key, id_a < id_b
+_MH_CAND_CTE = """cand AS (
+    SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+    FROM banded a JOIN banded b
+      ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
+)"""
+
+#: signature agreement of rows aliased a and b (dedup._band_join):
+#: matching components, and that count over K as the Jaccard estimate
+_MH_EQ = " + ".join(
+    f"(CASE WHEN a.mh_{j} IS NOT DISTINCT FROM b.mh_{j} THEN 1 ELSE 0 END)"
+    for j in range(_K)
+)
+_MH_EST = f"(({_MH_EQ})::DOUBLE / {float(_K)})"
+
+_SIG_CTE = "\n" + _mh_sigs_cte("documents")
 _SIG_MD5 = "md5(concat_ws('|', " + ", ".join(f"mh_{j}::VARCHAR" for j in range(_K)) + "))"
 
 
@@ -590,31 +623,13 @@ def _q_minhash_pairs(spark, sf_dir):
     return dedup.minhash_pairs(_docs(spark, sf_dir), threshold=0.5)
 
 
-def _mh_band_key(b: int) -> str:
-    cols = ", ".join(f"mh_{b * _ROWS + r}::VARCHAR" for r in range(_ROWS))
-    return f"md5(concat_ws('|', {cols}))"
-
-
-_MH_EQ = " + ".join(
-    f"(CASE WHEN a.mh_{j} IS NOT DISTINCT FROM b.mh_{j} THEN 1 ELSE 0 END)"
-    for j in range(_K)
-)
-
 register("d04_minhash_pairs", f"""
 WITH {_SIG_CTE},
-banded AS (
-    SELECT sigs.*, band,
-           (CASE band {' '.join(f'WHEN {b} THEN {_mh_band_key(b)}' for b in range(_BANDS))} END) AS band_key
-    FROM sigs, (SELECT unnest(range(0, {_BANDS})) AS band)
-),
-cand AS (
-    SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-    FROM banded a JOIN banded b
-      ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-)
-SELECT id_a, id_b, (({_MH_EQ})::DOUBLE / {float(_K)}) AS est_jaccard
+{_mh_banded_cte()},
+{_MH_CAND_CTE}
+SELECT id_a, id_b, {_MH_EST} AS est_jaccard
 FROM cand JOIN sigs a ON a.doc_id = id_a JOIN sigs b ON b.doc_id = id_b
-WHERE (({_MH_EQ})::DOUBLE / {float(_K)}) >= 0.5
+WHERE {_MH_EST} >= 0.5
 """)(_q_minhash_pairs)
 
 
@@ -634,7 +649,7 @@ CAST(COALESCE(list_sum(list_transform(range(0, {_SH_BITS}), i ->
 _SIMHASH_CTE = f"""
 sims AS (
     SELECT doc_id, {_SIMHASH_EXPR} AS simhash
-    FROM (SELECT doc_id, list_transform({_TOKS}, t -> {_md5i('t', 'sh')}) AS hashes
+    FROM (SELECT doc_id, list_transform({_TOKS}, t -> {md5_i64_sql('t', 'sh')}) AS hashes
           FROM documents)
 )"""
 
@@ -1162,8 +1177,6 @@ def _q_stream_decontaminated_ingest(spark, sf_dir):
 
 
 def _st3_oracle() -> str:
-    from tabular_to_parquet_spark.functions.hashing import md5_i64_sql
-
     return f"""
 WITH fp AS (SELECT doc_id, md5({_NORM}) AS fp FROM documents),
 batch AS (SELECT * FROM fp WHERE doc_id % 5 = 0),
@@ -7734,8 +7747,6 @@ def _q_rendezvous_shards(spark, sf_dir):
 
 
 def _pl34_oracle() -> str:
-    from tabular_to_parquet_spark.functions.hashing import md5_i64_sql
-
     w = md5_i64_sql("CAST(doc_id AS VARCHAR)", seed=None).replace(
         "md5(", "md5('hrw' || s || '#' || ", 1
     )

@@ -319,40 +319,13 @@ _PL10_IDX = "pl10_band_idx"
 _PL10_THRESHOLD = 0.5
 
 
-def _sig_sql(rel: str) -> str:
-    """Signature CTE body over relation ``rel(doc_id, text)`` — the
-    same affine-permutation construction as extensions._SIG_CTE."""
-    from tabular_to_parquet_spark.operators import dedup
-    from tabular_to_parquet_spark.parity.extensions import _TOKS, _shingles
-
-    comps = ", ".join(
-        f"list_min(list_transform(bases, h -> "
-        f"({a} * (h & {dedup.MINHASH_LO_MASK}) + {b} * (h >> 30) + {c}) "
-        f"% {dedup.MINHASH_P61})) AS mh_{j}"
-        for j, (a, b, c) in enumerate(dedup.minhash_params())
-    )
-    md5i = "(('0x' || substr(md5(s), 1, 15))::BIGINT)"
-    return (
-        f"SELECT doc_id, {comps} FROM "
-        f"(SELECT doc_id, list_transform({_shingles(_TOKS)}, s -> {md5i}) AS bases"
-        f" FROM {rel})"
-    )
-
-
 def _pl10_sql() -> str:
-    from tabular_to_parquet_spark.operators import dedup
-
-    bands, rows, k = dedup.MINHASH_BANDS, dedup.MINHASH_ROWS, dedup.MINHASH_K
-
-    def band_key(b: int) -> str:
-        cols = ", ".join(f"mh_{b * rows + r}::VARCHAR" for r in range(rows))
-        return f"md5(concat_ws('|', {cols}))"
-
-    case = " ".join(f"WHEN {b} THEN {band_key(b)}" for b in range(bands))
-    eq = " + ".join(
-        f"(CASE WHEN a.mh_{j} IS NOT DISTINCT FROM b.mh_{j} THEN 1 ELSE 0 END)"
-        for j in range(k)
+    from tabular_to_parquet_spark.parity.extensions import (
+        _MH_EST,
+        _mh_banded_cte,
+        _mh_sigs_cte,
     )
+
     return f"""
 WITH fp AS (SELECT doc_id, md5({_NORM}) AS fp FROM documents),
 keepers AS (SELECT fp, MIN(doc_id) AS doc_id FROM fp
@@ -360,16 +333,14 @@ keepers AS (SELECT fp, MIN(doc_id) AS doc_id FROM fp
 batchdocs AS (SELECT d.doc_id, d.text FROM documents d
               JOIN keepers k ON d.doc_id = k.doc_id),
 corpdocs AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0),
-sigs_b AS ({_sig_sql('batchdocs')}),
-sigs_c AS ({_sig_sql('corpdocs')}),
-banded_b AS (SELECT sigs_b.*, band, (CASE band {case} END) AS band_key
-             FROM sigs_b, (SELECT unnest(range(0, {bands})) AS band)),
-banded_c AS (SELECT sigs_c.*, band, (CASE band {case} END) AS band_key
-             FROM sigs_c, (SELECT unnest(range(0, {bands})) AS band)),
+{_mh_sigs_cte("batchdocs", "sigs_b")},
+{_mh_sigs_cte("corpdocs", "sigs_c")},
+{_mh_banded_cte("sigs_b", "banded_b")},
+{_mh_banded_cte("sigs_c", "banded_c")},
 matched AS (SELECT DISTINCT a.doc_id
             FROM banded_b a JOIN banded_c b
               ON a.band = b.band AND a.band_key = b.band_key
-            WHERE (({eq})::DOUBLE / {float(k)}) >= {_PL10_THRESHOLD})
+            WHERE {_MH_EST} >= {_PL10_THRESHOLD})
 SELECT k.doc_id FROM keepers k LEFT JOIN matched m ON k.doc_id = m.doc_id
 WHERE m.doc_id IS NULL
 """

@@ -18,9 +18,10 @@ bh = importlib.util.module_from_spec(_SPEC)
 _SPEC.loader.exec_module(bh)
 
 
-def _snap(commit, idle=True, sf=0.1, canary=None, noop=None, **queries):
+def _snap(commit, idle=True, sf=0.1, canary=None, noop=None, cpus=None,
+          **queries):
     return {"commit": commit, "date": "2026-08-01T00:00:00+00:00",
-            "idle": idle, "sf": sf, "reps": 3,
+            "idle": idle, "sf": sf, "cpus": cpus, "reps": 3,
             "canary_sha": canary, "canary_noop": noop,
             "noop_proto": "",
             "queries": {k: float(v) for k, v in queries.items()}}
@@ -54,6 +55,37 @@ def test_flag_ignores_non_idle_and_other_sf():
         _snap("c", q1=1.0),
     ]
     assert bh.flag_regressions(snaps, {"q1": 1.2}) == {}
+
+
+def test_flag_compares_equal_core_counts_only():
+    # 32-core history is no baseline for a 4-core run, however slow
+    # the 4-core numbers look against it
+    snaps = [_snap(c, canary=0.1, cpus=32, q1=0.5) for c in "abc"]
+    assert bh.flag_regressions(
+        snaps, {"q1": 5.0}, current_canary=0.1, current_cpus=4
+    ) == {}
+    meta = bh.flag_meta(snaps, current_canary=0.1, current_cpus=4)
+    assert meta["n_comparable_snapshots"] == 0 and meta["bootstrap"]
+    # the same history still flags a 32-core run
+    assert "q1" in bh.flag_regressions(
+        snaps, {"q1": 5.0}, current_canary=0.1, current_cpus=32
+    )
+
+
+def test_unstamped_snapshot_is_no_baseline_for_stamped_run():
+    snaps = [_snap("old", canary=0.1, q1=0.5), _snap("new", canary=0.1, cpus=4, q1=2.0)]
+    assert bh.flag_regressions(
+        snaps, {"q1": 2.2}, current_canary=0.1, current_cpus=4
+    ) == {}
+    meta = bh.flag_meta(snaps, current_canary=0.1, current_cpus=4)
+    assert meta["n_comparable_snapshots"] == 1
+
+
+def test_csv_roundtrip_with_cpus(tmp_path):
+    snaps = [_snap("a", cpus=32, q1=1.0), _snap("b", cpus=4, q1=1.1)]
+    p = str(tmp_path / "hist.csv")
+    bh.write_csv(snaps, p)
+    assert bh.read_csv(p) == snaps
 
 
 def test_flag_new_query_has_no_baseline():

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime
 import logging
+import os
 import subprocess
 import sys
 
@@ -204,6 +205,31 @@ def test_preserve_order_multi_file_roundtrip(spark, tmp_path):
         (i, "b") for i in range(2000, 2500)
     ] + [(5, "c")]
     assert got == want
+
+
+def test_preserve_order_jsonl_library_and_cli_agree(spark, tmp_path):
+    # jsonl is a string-typed file scan, so input order is defined for
+    # it: the library keeps file order and the CLI no longer refuses it
+    from tabular_to_parquet_spark.operators.convert import run_conversion
+    from tabular_to_parquet_spark.sources.json_lines import json_adapter
+
+    src = tmp_path / "in.jsonl"
+    src.write_text("".join(f'{{"i": {i}}}\n' for i in range(300, 0, -1)))
+    out = tmp_path / "lib.parquet"
+    run_conversion(spark, json_adapter(spark, str(src)), str(out),
+                   preserve_order=True, single_file=True)
+    want = [(i,) for i in range(300, 0, -1)]
+    assert duckdb.sql(f"SELECT i FROM '{out}'").fetchall() == want
+    cli_out = tmp_path / "cli.parquet"
+    proc = subprocess.run(
+        [sys.executable, "-m", "tabular_to_parquet_spark.cli", str(src),
+         "--format", "jsonl", "--preserve-order", "--single-file",
+         "--output", str(cli_out)],
+        capture_output=True, text=True, timeout=600,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert duckdb.sql(f"SELECT i FROM '{cli_out}'").fetchall() == want
 
 
 def _convert_delimited(spark, tmp_path, out):

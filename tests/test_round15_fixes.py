@@ -154,38 +154,47 @@ def test_parse_extra_conf_separators_and_malformed(caplog, monkeypatch):
 
 
 def test_gd_checkpoint_rounds_bit_identical(spark):
-    # r14 verdict item 7: the opt-in plan-truncation knob must not
-    # change a single emitted value, in either sentinel mode
-    from tabular_to_parquet_spark.operators.pipeline import gd_linear_regressor
+    # above GD_LAZY_MAX_ROUNDS the carried state is checkpointed; that
+    # must not change a single emitted value, in either sentinel mode
+    from tabular_to_parquet_spark.operators.pipeline import (
+        GD_LAZY_MAX_ROUNDS,
+        gd_linear_regressor,
+    )
 
     df = spark.createDataFrame(
         [(3, 7, 40), (5, 11, 62), (-2, 4, -8), (7, 1, 55)],
         "x0 long, x1 long, y long",
     )
+    lazy_max = GD_LAZY_MAX_ROUNDS
     for sent in (True, False):
-        base = gd_linear_regressor(
-            df, ["x0", "x1"], rounds=7, sentinel=sent
+        lazy = gd_linear_regressor(
+            df, ["x0", "x1"], rounds=lazy_max, sentinel=sent
         ).collect()
         ck = gd_linear_regressor(
-            df, ["x0", "x1"], rounds=7, sentinel=sent, checkpoint_rounds=2
+            df, ["x0", "x1"], rounds=lazy_max + 1, sentinel=sent
         ).collect()
-        assert sorted(map(tuple, base)) == sorted(map(tuple, ck))
+        assert len(ck) == lazy_max + 1
+        head = [r for r in ck if r["round"] <= lazy_max]
+        assert sorted(map(tuple, head)) == sorted(map(tuple, lazy))
 
 
 def test_gd_checkpoint_rounds_truncates_static_plan(spark):
-    # the knob's whole point: the carried state reads a materialized
-    # 1-row RDD (plan size O(rounds*N)), not a rounds^2 nested tree
+    # the checkpoint's whole point: above the lazy cap the carried
+    # state reads a materialized 1-row RDD instead of a tree that
+    # doubles every round (the lazy rounds=12 plan ran the driver out
+    # of memory, so only its size at the cap is built here)
     from tabular_to_parquet_spark.operators.pipeline import gd_linear_regressor
 
-    df = spark.createDataFrame([(3, 7), (5, 11)], "x0 long, y long")
-    base = gd_linear_regressor(df, ["x0"], rounds=6)
-    ck = gd_linear_regressor(df, ["x0"], rounds=6, checkpoint_rounds=2)
-    plan_base = base._jdf.queryExecution().analyzed().toString()
-    plan_ck = ck._jdf.queryExecution().analyzed().toString()
-    # measured at rounds=6: 120 Aggregate nodes -> 6 (the checkpointed
-    # 1-row state appears as a LogicalRDD scan)
+    # a range-derived input, so the only LogicalRDD is the checkpoint
+    df = spark.range(2).select(
+        (F.col("id") * 2 + 3).alias("x0"), (F.col("id") * 4 + 7).alias("y")
+    )
+    plan_lazy = gd_linear_regressor(df, ["x0"], rounds=8)._jdf.queryExecution().analyzed().toString()
+    plan_ck = gd_linear_regressor(df, ["x0"], rounds=10)._jdf.queryExecution().analyzed().toString()
+    # measured: 502 Aggregate nodes at lazy rounds=8, 26 at rounds=10
+    assert "LogicalRDD" not in plan_lazy
     assert "LogicalRDD" in plan_ck
-    assert plan_ck.count("Aggregate") < plan_base.count("Aggregate") / 4
+    assert plan_ck.count("Aggregate") < plan_lazy.count("Aggregate") / 4
 
 
 def test_bench_stamps_effective_cpus_and_runs_scale_probe():

@@ -87,3 +87,22 @@ def test_sample_rows_cap_and_order(tmp_path):
     buf = open(p, "rb").read()
     sampled = ts.sample_rows(buf, ",", limit=20)
     assert [r[0] for r in sampled] == [str(i) for i in range(20)]
+
+
+def test_preserve_order_refused_for_tar(spark, tmp_path):
+    # tar rows come out of a Python reader with no file position, so
+    # the input-order key cannot resolve: the library refuses up front
+    # (an OptionRefused ValueError) instead of failing inside the job
+    import pytest
+
+    from tabular_to_parquet_spark.operators.convert import OptionRefused
+
+    d = tmp_path / "arch"
+    d.mkdir()
+    _make_tar(d / "a.tar", {"m1.csv": [["k", "v"], ["1", "x"], ["2", "y"]]})
+    out = tmp_path / "out.parquet"
+    with pytest.raises(ValueError, match="preserve_order") as exc:
+        run_conversion(spark, ts.tar_adapter(spark, str(d)), str(out), preserve_order=True)
+    assert isinstance(exc.value, OptionRefused)
+    assert exc.value.option == "preserve_order"
+    assert not out.exists()

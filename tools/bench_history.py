@@ -38,6 +38,11 @@ snapshot carries the current noop protocol, protocol-mismatched
 snapshots are never baselines; until one exists, the flag reports a
 protocol bootstrap with an empty set.
 
+Core-count rule: a snapshot is comparable only when its effective
+``cpus`` stamp (bench.py's ``local[N]``) equals the current run's. A
+4-core run judged against 32-core history flags scheduling width, not
+code; a snapshot without a stamp is no baseline for a run that has one.
+
 Usage:
     python tools/bench_history.py            # rebuild BENCH_HISTORY.csv
     python tools/bench_history.py --check    # rebuild + flag current
@@ -54,14 +59,15 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CSV_PATH = os.path.join(REPO, "BENCH_HISTORY.csv")
-FIELDS = ["commit", "date", "idle", "sf", "reps", "canary_sha",
+FIELDS = ["commit", "date", "idle", "sf", "cpus", "reps", "canary_sha",
           "canary_noop", "noop_proto", "query", "sec"]
 
 
 def load_history(repo: str = REPO) -> list[dict]:
     """All committed BENCH_LOCAL.json snapshots, oldest first.
 
-    Each snapshot: {commit, date, idle, sf, reps, queries: {name: sec}}
+    Each snapshot: {commit, date, idle, sf, cpus, reps, canary stamps,
+    queries: {name: sec}}
     (sec = the committed min-of-reps).  Unparseable blobs are skipped.
     """
     out = subprocess.run(
@@ -92,12 +98,14 @@ def load_history(repo: str = REPO) -> list[dict]:
         c_sha = payload.get("canary_sha256_sec")
         c_noop = payload.get("canary_spark_noop_sec")
         noop_proto = payload.get("canary_noop_protocol") or ""
+        cpus = payload.get("cpus")
         snaps.append(
             {
                 "commit": sha,
                 "date": date,
                 "idle": bool(payload.get("idle_at_start", False)),
                 "sf": float(payload.get("sf", 0.1)),
+                "cpus": int(cpus) if cpus else None,
                 "reps": int(payload.get("reps", 1)),
                 "canary_sha": float(c_sha) if c_sha else None,
                 "canary_noop": float(c_noop) if c_noop else None,
@@ -116,6 +124,7 @@ def write_csv(snaps: list[dict], path: str = CSV_PATH) -> None:
             for q in sorted(s["queries"]):
                 w.writerow(
                     [s["commit"], s["date"], int(s["idle"]), s["sf"],
+                     "" if s.get("cpus") is None else s["cpus"],
                      s["reps"],
                      "" if s.get("canary_sha") is None else s["canary_sha"],
                      "" if s.get("canary_noop") is None else s["canary_noop"],
@@ -134,15 +143,17 @@ def read_csv(path: str = CSV_PATH) -> list[dict]:
         for row in csv.DictReader(fh):
             s = by_commit.get(row["commit"])
             if s is None:
-                # canary columns absent (pre-r12 CSV) or empty → None
+                # canary/cpus columns absent (older CSV) or empty → None
                 c_sha = row.get("canary_sha") or None
                 c_noop = row.get("canary_noop") or None
                 noop_proto = row.get("noop_proto") or ""
+                cpus = row.get("cpus") or None
                 s = {
                     "commit": row["commit"],
                     "date": row["date"],
                     "idle": row["idle"] == "1",
                     "sf": float(row["sf"]),
+                    "cpus": int(cpus) if cpus else None,
                     "reps": int(row["reps"]),
                     "canary_sha": float(c_sha) if c_sha else None,
                     "canary_noop": float(c_noop) if c_noop else None,
@@ -155,6 +166,14 @@ def read_csv(path: str = CSV_PATH) -> list[dict]:
     return snaps
 
 
+def _comparable(snaps: list[dict], sf: float, cpus: int | None) -> list[dict]:
+    """Idle snapshots at the same sf and the same effective core count."""
+    return [
+        s for s in snaps
+        if s["idle"] and s["sf"] == sf and s.get("cpus") == cpus
+    ]
+
+
 def flag_regressions(
     snaps: list[dict],
     current: dict[str, float],
@@ -164,9 +183,11 @@ def flag_regressions(
     current_canary: float | None = None,
     current_noop: float | None = None,
     current_noop_protocol: str | None = None,
+    current_cpus: int | None = None,
 ) -> dict[str, dict]:
     """Queries in ``current`` slower than factor × the min of their
-    last ``window`` comparable (idle, same-sf) snapshots.
+    last ``window`` comparable (idle, same-sf, same-``cpus``)
+    snapshots.
 
     With ``current_canary`` (this run's sha256 canary seconds) each
     historical time is rescaled to today's host speed —
@@ -196,7 +217,7 @@ def flag_regressions(
         # a strict > 0 gate keeps _rescale division-safe (r13 ADVICE)
         return isinstance(v, (int, float)) and v > 0
 
-    comparable = [s for s in snaps if s["idle"] and s["sf"] == sf]
+    comparable = _comparable(snaps, sf, current_cpus)
     normalized = current_canary is not None and any(
         _pos(s.get("canary_sha")) for s in comparable
     )
@@ -265,10 +286,11 @@ def flag_meta(
     sf: float = 0.1,
     current_canary: float | None = None,
     current_noop_protocol: str | None = None,
+    current_cpus: int | None = None,
 ) -> dict:
     """Context for a flag_regressions result: was it normalized, and
     how many canary-bearing comparable snapshots back the baseline."""
-    comparable = [s for s in snaps if s["idle"] and s["sf"] == sf]
+    comparable = _comparable(snaps, sf, current_cpus)
     n_canary = sum(1 for s in comparable if s.get("canary_sha"))
     meta = {
         "normalized": current_canary is not None and n_canary > 0,
@@ -311,11 +333,13 @@ def main() -> int:
                                    current_noop=cur.get(
                                        "canary_spark_noop_sec"),
                                    current_noop_protocol=cur.get(
-                                       "canary_noop_protocol"))
+                                       "canary_noop_protocol"),
+                                   current_cpus=cur.get("cpus"))
         meta = flag_meta(hist, sf=float(cur.get("sf", 0.1)),
                          current_canary=canary,
                          current_noop_protocol=cur.get(
-                             "canary_noop_protocol"))
+                             "canary_noop_protocol"),
+                         current_cpus=cur.get("cpus"))
         print(json.dumps({"regressions": flagged, "meta": meta}, indent=2))
         return 1 if flagged else 0
     return 0
