@@ -155,8 +155,14 @@ def minhash_banded(
     BANDS rows per doc; a band key is the md5 of its '|'-joined
     component slice. The join-side layout shared by
     :func:`minhash_pairs` and the persisted band index
-    (pipeline.build_minhash_band_index)."""
-    comps = _minhash_components(df, text_col, id_col)
+    (pipeline.build_minhash_band_index).
+
+    Docs with an empty shingle set (NULL signature) get no rows: their
+    band keys would all be md5('') and their NULL components would
+    agree null-safely, pairing every two short docs at 1.0."""
+    comps = _minhash_components(df, text_col, id_col).where(
+        F.col("_mh0").isNotNull()
+    )
     band_keys = F.array(
         *[
             F.md5(

@@ -486,36 +486,15 @@ def _q_stream_hll(spark, sf_dir):
     re-derives it value-for-value).  Final merge aggregates <=3*64
     partial rows — O(1) in corpus size."""
     import os
-    import tempfile
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from tabular_to_parquet_spark.parity.extensions import _fixture_pdf
+    from tabular_to_parquet_spark.parity.extensions import _micro_batch_dir
     from tabular_to_parquet_spark.streaming.streams import stream_hll
 
-    events = _fixture_pdf(
-        load_table(spark, sf_dir, "events")
-        .select("event_id", "user_id")
-        .orderBy("event_id")
-    )
-    tmp = tempfile.mkdtemp(prefix="st11_hll_")
-    in_dir = os.path.join(tmp, "in")
-    os.makedirs(in_dir)
-    third = max(1, len(events) // 3)
-    waves = (
-        events.iloc[:third],
-        events.iloc[third : 2 * third],
-        events.iloc[2 * third :],
-    )
-    for i, wave in enumerate(waves):
-        if wave.empty:
-            continue
-        path = os.path.join(in_dir, f"w{i}.parquet")
-        pq.write_table(pa.Table.from_pandas(wave, preserve_index=False), path)
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    events = load_table(spark, sf_dir, "events").select("event_id", "user_id")
+    tmp = _micro_batch_dir(events.orderBy("event_id"), 3, "st11_hll_")
     q = stream_hll(
-        spark, in_dir, os.path.join(tmp, "out"), os.path.join(tmp, "ckpt")
+        spark, os.path.join(tmp, "in"), os.path.join(tmp, "out"),
+        os.path.join(tmp, "ckpt"),
     )
     q.awaitTermination()
     return (
@@ -648,13 +627,9 @@ def _q_stream_pareto(spark, sf_dir):
     appended survivors must equal the one-shot corpus skyline
     exactly."""
     import os
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from tabular_to_parquet_spark.operators.ordering import pareto_frontier_2d
-    from tabular_to_parquet_spark.parity.extensions import _fixture_pdf
+    from tabular_to_parquet_spark.parity.extensions import _micro_batch_dir
     from tabular_to_parquet_spark.streaming.streams import stream_pareto
 
     base = _docs(spark, sf_dir).select(
@@ -664,21 +639,10 @@ def _q_stream_pareto(spark, sf_dir):
         .cast("long")
         .alias("n_types"),
     )
-    pdf = _fixture_pdf(base.orderBy("doc_id"))
-    tmp = tempfile.mkdtemp(prefix="st12_sky_")
-    in_dir = os.path.join(tmp, "in")
-    os.makedirs(in_dir)
-    third = max(1, len(pdf) // 3)
-    waves = (pdf.iloc[:third], pdf.iloc[third : 2 * third], pdf.iloc[2 * third :])
-    for i, wave in enumerate(waves):
-        if wave.empty:
-            continue
-        path = os.path.join(in_dir, f"w{i}.parquet")
-        pq.write_table(pa.Table.from_pandas(wave, preserve_index=False), path)
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    tmp = _micro_batch_dir(base.orderBy("doc_id"), 3, "st12_sky_")
     q = stream_pareto(
         spark,
-        in_dir,
+        os.path.join(tmp, "in"),
         os.path.join(tmp, "out"),
         os.path.join(tmp, "ckpt"),
         "len_chars",

@@ -51,6 +51,39 @@ def _fixture_pdf(df: DataFrame, cap: int = _FIXTURE_ROW_CAP):
     return pdf
 
 
+def _micro_batch_dir(df: DataFrame, waves: int, prefix: str) -> str:
+    """Write ``df`` (materialized through :func:`_fixture_pdf`, in its
+    row order) as ``waves`` single-file parquet micro-batches
+    (consecutive row slices of ``len // waves`` rows, the last taking
+    the rest; empty slices skipped) under ``<tmp>/in`` and return the
+    fresh temp dir ``<tmp>``, where callers put ``out`` and ``ckpt``.
+
+    FileStreamSource orders micro-batches by file MTIME, and the waves
+    land within the same clock tick — so mtimes are pinned strictly
+    ascending, or wave order (hence e.g. which dup survives st2's
+    ingest) would be nondeterministic across runs."""
+    import os
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pdf = _fixture_pdf(df)
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    in_dir = os.path.join(tmp, "in")
+    os.makedirs(in_dir)
+    size = max(1, len(pdf) // waves)
+    for i in range(waves):
+        stop = None if i == waves - 1 else (i + 1) * size
+        wave = pdf.iloc[i * size:stop]
+        if wave.empty:
+            continue
+        path = os.path.join(in_dir, f"w{i}.parquet")
+        pq.write_table(pa.Table.from_pandas(wave, preserve_index=False), path)
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    return tmp
+
+
 # ---------------------------------------------------------------------------
 # shared DuckDB fragments — literal transcriptions of the Spark builders
 
@@ -565,7 +598,7 @@ def _mh_sigs_cte(rel: str, name: str = "sigs", materialized: bool = False) -> st
 
 
 def _mh_banded_cte(sigs: str = "sigs", name: str = "banded") -> str:
-    """BANDS rows per signature with the md5 band key of each
+    """BANDS rows per non-NULL signature with the md5 band key of each
     component slice (dedup.minhash_banded)."""
     keys = " ".join(
         f"WHEN {b} THEN md5(concat_ws('|', "
@@ -577,6 +610,7 @@ def _mh_banded_cte(sigs: str = "sigs", name: str = "banded") -> str:
     SELECT {sigs}.*, band,
            (CASE band {keys} END) AS band_key
     FROM {sigs}, (SELECT unnest(range(0, {_BANDS})) AS band)
+    WHERE {sigs}.mh_0 IS NOT NULL
 )"""
 
 
@@ -1080,10 +1114,6 @@ def _q_stream_dedup_ingest(spark, sf_dir):
     survivors' fingerprints for the next batch. The drained output
     equals the one-shot pl09/pl07 result — same oracle."""
     import os
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from tabular_to_parquet_spark.operators.pipeline import build_fingerprint_index
     from tabular_to_parquet_spark.streaming.streams import stream_dedup_ingest
@@ -1092,25 +1122,10 @@ def _q_stream_dedup_ingest(spark, sf_dir):
     corpus = docs.where(F.col("doc_id") % 5 != 0)
     build_fingerprint_index(corpus, "st2_fp_idx")
 
-    batch = _fixture_pdf(
-        docs.where(F.col("doc_id") % 5 == 0)
-        .select("doc_id", "text")
-        .orderBy("doc_id")
-    )
-    mid = len(batch) // 2
-    tmp = tempfile.mkdtemp(prefix="st2_ingest_")
-    in_dir = os.path.join(tmp, "in")
-    os.makedirs(in_dir)
-    for i, wave in enumerate((batch.iloc[:mid], batch.iloc[mid:])):
-        path = os.path.join(in_dir, f"w{i}.parquet")
-        pq.write_table(pa.Table.from_pandas(wave, preserve_index=False), path)
-        # FileStreamSource orders micro-batches by file MTIME, and both
-        # waves land within the same clock tick — pin strictly
-        # ascending mtimes or wave order (hence which dup survives)
-        # is nondeterministic across runs.
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    batch = docs.where(F.col("doc_id") % 5 == 0).select("doc_id", "text")
+    tmp = _micro_batch_dir(batch.orderBy("doc_id"), 2, "st2_ingest_")
     q = stream_dedup_ingest(
-        spark, in_dir, "st2_fp_idx",
+        spark, os.path.join(tmp, "in"), "st2_fp_idx",
         os.path.join(tmp, "out"), os.path.join(tmp, "ckpt"),
     )
     q.awaitTermination()
@@ -1137,10 +1152,6 @@ def _q_stream_decontaminated_ingest(spark, sf_dir):
     non-streaming oracle (survivors minus contaminated) matches the
     per-batch index-append semantics exactly."""
     import os
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from tabular_to_parquet_spark.operators.pipeline import build_fingerprint_index
     from tabular_to_parquet_spark.streaming.streams import stream_dedup_ingest
@@ -1150,25 +1161,10 @@ def _q_stream_decontaminated_ingest(spark, sf_dir):
     eval_df = docs.where(F.col("doc_id") % 97 == 0).select("doc_id", "text")
     build_fingerprint_index(corpus, "st3_fp_idx")
 
-    batch = _fixture_pdf(
-        docs.where(F.col("doc_id") % 5 == 0)
-        .select("doc_id", "text")
-        .orderBy("doc_id")
-    )
-    mid = len(batch) // 2
-    tmp = tempfile.mkdtemp(prefix="st3_ingest_")
-    in_dir = os.path.join(tmp, "in")
-    os.makedirs(in_dir)
-    for i, wave in enumerate((batch.iloc[:mid], batch.iloc[mid:])):
-        path = os.path.join(in_dir, f"w{i}.parquet")
-        pq.write_table(pa.Table.from_pandas(wave, preserve_index=False), path)
-        # FileStreamSource orders micro-batches by file MTIME, and both
-        # waves land within the same clock tick — pin strictly
-        # ascending mtimes or wave order (hence which dup survives)
-        # is nondeterministic across runs.
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    batch = docs.where(F.col("doc_id") % 5 == 0).select("doc_id", "text")
+    tmp = _micro_batch_dir(batch.orderBy("doc_id"), 2, "st3_ingest_")
     q = stream_dedup_ingest(
-        spark, in_dir, "st3_fp_idx",
+        spark, os.path.join(tmp, "in"), "st3_fp_idx",
         os.path.join(tmp, "out"), os.path.join(tmp, "ckpt"),
         eval_df=eval_df, decontaminate_n=4,
     )
@@ -7533,29 +7529,14 @@ def _q_stream_countmin(spark, sf_dir):
     as (j, bucket); the final merge aggregates ≤ 3·depth·width partial
     rows — O(1) in corpus size."""
     import os
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from tabular_to_parquet_spark.streaming.streams import stream_countmin
 
-    docs = _fixture_pdf(
-        _docs(spark, sf_dir).select("doc_id", "text").orderBy("doc_id")
-    )
-    tmp = tempfile.mkdtemp(prefix="st10_cms_")
-    in_dir = os.path.join(tmp, "in")
-    os.makedirs(in_dir)
-    third = max(1, len(docs) // 3)
-    waves = (docs.iloc[:third], docs.iloc[third:2 * third], docs.iloc[2 * third:])
-    for i, wave in enumerate(waves):
-        if wave.empty:
-            continue
-        path = os.path.join(in_dir, f"w{i}.parquet")
-        pq.write_table(pa.Table.from_pandas(wave, preserve_index=False), path)
-        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    tmp = _micro_batch_dir(docs.orderBy("doc_id"), 3, "st10_cms_")
     q = stream_countmin(
-        spark, in_dir, os.path.join(tmp, "out"), os.path.join(tmp, "ckpt")
+        spark, os.path.join(tmp, "in"), os.path.join(tmp, "out"),
+        os.path.join(tmp, "ckpt"),
     )
     q.awaitTermination()
     return (

@@ -11,9 +11,21 @@ event analytics a streaming surface:
   shape a 100 TB/day ingest takes: partition-parallel, no state, no
   shuffle.
 
-- ``windowed_event_stats`` — event-time tumbling-window aggregation
-  with a watermark for late data; deterministic aggregates only
-  (counts and integer-floored cents) so results are oracle-checkable.
+The other operators run on one of two harness shapes:
+
+- the drained memory sink (:func:`_drain_to_memory`): the streaming
+  plan runs under ``availableNow`` until the input is consumed, and the
+  memory table is returned — ``sessionize_stream``,
+  ``windowed_event_stats``, ``stream_click_purchase_join``,
+  ``stream_dedup_within_watermark``, ``stream_static_enrich`` and
+  ``hopping_window_stats_stream``. Each reproduces a batch ``*_frame``
+  twin (or its oracle) exactly on static input.
+- the checkpointed ``foreachBatch`` file stream
+  (:func:`_file_micro_batches`): parquet files landing in a directory
+  arrive one file per micro-batch, and a per-batch function appends to
+  an output directory — ``stream_dedup_ingest``, ``stream_countmin``,
+  ``stream_hll`` and ``stream_pareto``. These return the started query;
+  callers await it.
 """
 
 from __future__ import annotations
@@ -23,6 +35,7 @@ from pyspark.sql import functions as F
 
 from tabular_to_parquet_spark.operators.convert import typed_frame
 from tabular_to_parquet_spark.plans.logical_types import LogicalType
+from tabular_to_parquet_spark.sources.tables import load_events_stream
 from tabular_to_parquet_spark.sources.text import delimited_reader
 
 
@@ -53,6 +66,48 @@ def stream_convert_directory(
     )
 
 
+def _drain_to_memory(frame: DataFrame, query_name: str, output_mode: str):
+    """Run the streaming ``frame`` to completion into the memory sink
+    ``query_name`` (read it back with ``spark.table(query_name)``) and
+    return the stopped query, whose ``recentProgress`` stays readable.
+
+    ``availableNow`` + ``processAllAvailable`` make the drain
+    deterministic on static input while exercising the true streaming
+    engine (state store, watermarks, event-time windows)."""
+    q = (
+        frame.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    return q
+
+
+def _file_micro_batches(
+    spark: SparkSession, input_dir: str, checkpoint_dir: str, process_batch
+):
+    """Start a checkpointed ``foreachBatch`` stream over the parquet
+    files in ``input_dir`` and return the started query
+    (``availableNow`` trigger).
+
+    Exactly one file per micro-batch: the file source orders files by
+    mtime, so callers that pin mtimes get a fixed batch sequence (the
+    st2/st3 dedup survivors depend on it)."""
+    schema = spark.read.parquet(input_dir).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(input_dir)
+        .writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def stream_dedup_ingest(
     spark: SparkSession,
     input_dir: str,
@@ -62,7 +117,6 @@ def stream_dedup_ingest(
     text_col: str = "text",
     id_col: str = "doc_id",
     buckets: int = 64,
-    max_files_per_trigger: int | None = 1,
     eval_df: DataFrame | None = None,
     decontaminate_n: int = 4,
 ):
@@ -96,8 +150,6 @@ def stream_dedup_ingest(
     )
     from tabular_to_parquet_spark.operators.text_analysis import normalized_text
 
-    schema = spark.read.parquet(input_dir).schema
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         kept = dedup_against_bucketed(
             spark, batch_df, index_table, text_col, id_col
@@ -121,16 +173,7 @@ def stream_dedup_ingest(
         finally:
             kept.unpersist()
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.parquet(input_dir)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _file_micro_batches(spark, input_dir, checkpoint_dir, process_batch)
 
 
 def windowed_event_stats_frame(events: DataFrame, window: str = "5 minutes") -> DataFrame:
@@ -212,8 +255,8 @@ def collect_state_metrics(query) -> dict:
     live state (rows still held — e.g. still-open sessions);
     numRowsUpdated / numRowsRemoved accumulate across micro-batches.
     At 100 TB/day this is the signal that decides state-store sizing
-    (RocksDB vs heap) and watermark tuning — surfaced here so callers
-    see it without scraping the Spark UI.
+    (state-store provider and executor memory) and watermark tuning —
+    surfaced here so callers see it without scraping the Spark UI.
     """
     import json as _json
 
@@ -239,7 +282,7 @@ def collect_state_metrics(query) -> dict:
     return metrics
 
 
-#: output/state schemas for the stateful streaming sessionizer
+#: output/state schemas of :func:`sessionize_stream`
 _SESSION_OUT = (
     "user_id long, session_start timestamp, session_end timestamp, "
     "n_events long, value_cents long"
@@ -271,8 +314,6 @@ def sessionize_stream(
 
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from tabular_to_parquet_spark.sources.tables import load_events_stream
 
     gap_us = gap_minutes * 60_000_000
 
@@ -336,17 +377,9 @@ def sessionize_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
+    q = _drain_to_memory(sessions, query_name, "append")
     if metrics_out is not None:
         metrics_out.update(collect_state_metrics(q))
-    q.stop()
     return spark.table(query_name)
 
 
@@ -358,25 +391,10 @@ def windowed_event_stats(
 ) -> DataFrame:
     """Run the windowed aggregation as a real streaming query over the
     parquet directory (file micro-batches), drain it to completion into
-    a memory sink, and return the result table.
-
-    `availableNow` + `processAllAvailable` make this deterministic on
-    static input while exercising the true streaming engine (state
-    store, watermarks, event-time windows).
-    """
-    from tabular_to_parquet_spark.sources.tables import load_events_stream
-
+    a memory sink, and return the result table."""
     stream = load_events_stream(spark, events_path)
     agg = windowed_event_stats_frame(stream, window)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    _drain_to_memory(agg, query_name, "complete")
     return spark.table(query_name)
 
 
@@ -434,8 +452,6 @@ def stream_click_purchase_join(
     the watermark horizon), not the full history.  On a cluster the
     state store shards by the join key across executors; the same
     plan runs unchanged against Kafka sources."""
-    from tabular_to_parquet_spark.sources.tables import load_events_stream
-
     stream = load_events_stream(spark, events_path)
     clicks = stream.filter(F.col("event_type") == "click").withWatermark(
         "ts", watermark
@@ -444,160 +460,7 @@ def stream_click_purchase_join(
         "ts", watermark
     )
     j = click_purchase_join_frame(clicks, purchases, within_minutes)
-    q = (
-        j.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table(query_name)
-
-
-def sessionize_stream_tws(
-    spark: SparkSession,
-    events_path: str,
-    gap_minutes: int = 240,
-    watermark: str = "10 minutes",
-    query_name: str = "sessionize_tws",
-) -> DataFrame:
-    """Sessionization on Spark 4's ``transformWithStateInPandas`` —
-    the successor API to ``applyInPandasWithState`` (typed state
-    handles, first-class timers, TTL).  Same contract as
-    :func:`sessionize_stream`: closed sessions emit as they close; a
-    session already unreachable behind the watermark emits
-    immediately; otherwise it stays in the ValueState with an
-    event-time timer at its close time.
-
-    DEPLOYMENT GATE: the transformWithState Python worker speaks a
-    protobuf protocol to the JVM state server, so it requires the
-    ``protobuf`` package at runtime (driver AND worker PYTHONPATH)
-    plus the RocksDB state store (pinned below — TWS keeps each state
-    variable in its own column family, which the default HDFS-backed
-    store rejects).  The test env satisfies protobuf via the vendored
-    google-cloud-sdk runtime (tests/conftest.py shim), and the
-    equivalence test asserts TWS output == sessionize_stream exactly.
-    ev04 (applyInPandasWithState) remains the oracle-gated stateful
-    sessionizer.
-
-    State-store story at scale: per-user ValueState is O(1) per key,
-    sharded by the grouping key across executors; timers replace the
-    per-batch timeout bookkeeping of the old API."""
-    import math
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from tabular_to_parquet_spark.sources.tables import load_events_stream
-
-    gap_us = gap_minutes * 60_000_000
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._sess = handle.getValueState(
-                "sess", "start_us long, end_us long, n long, cents long"
-            )
-
-        def _emit(self, user_id, rows):
-            out = pd.DataFrame(
-                rows,
-                columns=["user_id", "start_us", "end_us", "n_events", "value_cents"],
-            )
-            return pd.DataFrame(
-                {
-                    "user_id": out["user_id"],
-                    "session_start": pd.to_datetime(out["start_us"], unit="us"),
-                    "session_end": pd.to_datetime(out["end_us"], unit="us"),
-                    "n_events": out["n_events"],
-                    "value_cents": out["value_cents"],
-                }
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            evs = [pdf[["ts", "value"]] for pdf in rows]
-            emitted = []
-            if evs:
-                ev = pd.concat(evs).sort_values("ts")
-                times = ev["ts"].astype("datetime64[us]").astype("int64").tolist()
-                cents = [math.floor(v * 100) for v in ev["value"]]
-                held = self._sess.get() if self._sess.exists() else None
-                if held is not None:
-                    start, end, n, c = held
-                else:
-                    start = end = None
-                    n = c = 0
-                for t_us, cent in zip(times, cents):
-                    if start is None:
-                        start, end, n, c = t_us, t_us, 1, cent
-                    elif t_us - end > gap_us:
-                        emitted.append((user_id, start, end, n, c))
-                        start, end, n, c = t_us, t_us, 1, cent
-                    else:
-                        end, n, c = t_us, n + 1, c + cent
-                close_ms = end // 1000 + gap_us // 1000
-                wm_ms = timerValues.getCurrentWatermarkInMs()
-                if close_ms < wm_ms:
-                    emitted.append((user_id, start, end, n, c))
-                    self._sess.clear()
-                else:
-                    self._sess.update((start, end, n, c))
-                    self._handle.registerTimer(max(close_ms, wm_ms + 1))
-            if emitted:
-                yield self._emit(user_id, emitted)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            (user_id,) = key
-            if self._sess.exists():
-                start, end, n, c = self._sess.get()
-                # fresh activity may have re-armed a later timer; only
-                # flush if this expiry really covers the held session
-                if end // 1000 + gap_us // 1000 <= expiredTimerInfo.getExpiryTimeInMs():
-                    self._sess.clear()
-                    yield self._emit(user_id, [(user_id, start, end, n, c)])
-
-        def close(self) -> None:
-            pass
-
-    stream = load_events_stream(spark, events_path).withWatermark("ts", watermark)
-    sessions = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionProcessor(),
-        outputStructType=_SESSION_OUT,
-        outputMode="append",
-        timeMode="eventTime",
-    )
-    # transformWithState stores each state variable in its own column
-    # family — only the RocksDB provider supports that (the default
-    # HDFS-backed store raises multipleColumnFamiliesNotSupported), so
-    # pin it for this query and restore the session conf after.
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    _ROCKSDB = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prior_provider = spark.conf.get(_PROVIDER_KEY, None)
-    spark.conf.set(_PROVIDER_KEY, _ROCKSDB)
-    try:
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        if prior_provider is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, prior_provider)
+    _drain_to_memory(j, query_name, "append")
     return spark.table(query_name)
 
 
@@ -619,8 +482,6 @@ def stream_dedup_within_watermark(
     bounded by (watermark window × key rate), the standard first stage
     in front of any streaming aggregation fed by an at-least-once
     source (Kafka with producer retries)."""
-    from tabular_to_parquet_spark.sources.tables import load_events_stream
-
     s1 = load_events_stream(spark, events_path)
     s2 = load_events_stream(spark, events_path)
     dup = s1.unionByName(s2).withWatermark("ts", watermark)
@@ -631,15 +492,7 @@ def stream_dedup_within_watermark(
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("value_cents"),
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    _drain_to_memory(out, query_name, "append")
     return spark.table(query_name)
 
 
@@ -678,19 +531,9 @@ def stream_static_enrich(
     """The enrichment as a real streaming query: file micro-batches,
     complete-mode global agg (no watermark needed — the aggregate is
     not windowed), drained into a memory sink."""
-    from tabular_to_parquet_spark.sources.tables import load_events_stream
-
     stream = load_events_stream(spark, events_path)
     agg = stream_static_enrich_frame(stream, dim)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    _drain_to_memory(agg, query_name, "complete")
     return spark.table(query_name)
 
 
@@ -727,19 +570,9 @@ def hopping_window_stats_stream(
     watermark finalizes windows older than (max event time − delay).
     Complete-mode drain on static input reproduces the batch result
     exactly (same Expand → hash-agg plan under the micro-batcher)."""
-    from tabular_to_parquet_spark.sources.tables import load_events_stream
-
     stream = load_events_stream(spark, events_path).withWatermark("ts", watermark)
     agg = hopping_window_stats_frame(stream)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    _drain_to_memory(agg, query_name, "complete")
     return spark.table(query_name)
 
 
@@ -749,7 +582,6 @@ def stream_countmin(
     output_dir: str,
     checkpoint_dir: str,
     text_col: str = "text",
-    max_files_per_trigger: int | None = 1,
 ):
     """Streaming count-min sketch build: each micro-batch folds its own
     token counts into a depth×width partial grid (operators/sketches)
@@ -774,22 +606,11 @@ def stream_countmin(
     """
     from tabular_to_parquet_spark.operators import sketches as sk
 
-    schema = spark.read.parquet(input_dir).schema
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         partial = sk.cms_build(sk.token_counts(batch_df, text_col))
         partial.write.mode("append").parquet(output_dir)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.parquet(input_dir)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _file_micro_batches(spark, input_dir, checkpoint_dir, process_batch)
 
 
 def stream_hll(
@@ -798,7 +619,6 @@ def stream_hll(
     output_dir: str,
     checkpoint_dir: str,
     key_col: str = "user_id",
-    max_files_per_trigger: int | None = 1,
 ):
     """Streaming HLL register build: each micro-batch appends its own
     <=64-row partial register table (operators/sketches.hll_registers);
@@ -814,23 +634,12 @@ def stream_hll(
     state is the 64-row grid, never the key set."""
     from tabular_to_parquet_spark.operators import sketches as sk
 
-    schema = spark.read.parquet(input_dir).schema
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         sk.hll_registers(batch_df, key_col).write.mode("append").parquet(
             output_dir
         )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.parquet(input_dir)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _file_micro_batches(spark, input_dir, checkpoint_dir, process_batch)
 
 
 def stream_pareto(
@@ -840,7 +649,6 @@ def stream_pareto(
     checkpoint_dir: str,
     x_col: str,
     y_col: str,
-    max_files_per_trigger: int | None = 1,
 ):
     """Streaming 2-D Pareto frontier: each micro-batch appends its own
     LOCAL skyline (ordering.pareto_frontier_2d over the batch); the
@@ -856,11 +664,7 @@ def stream_pareto(
     Per micro-batch cost: two partitioned window passes over the batch
     only; appended state is the per-batch frontier (for any real
     metric pair, orders of magnitude below the batch)."""
-    from pyspark.sql import functions as F
-
     from tabular_to_parquet_spark.operators.ordering import pareto_frontier_2d
-
-    schema = spark.read.parquet(input_dir).schema
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         local = pareto_frontier_2d(
@@ -869,13 +673,4 @@ def stream_pareto(
         )
         local.write.mode("append").parquet(output_dir)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.parquet(input_dir)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _file_micro_batches(spark, input_dir, checkpoint_dir, process_batch)

@@ -1,36 +1,6 @@
 from __future__ import annotations
 
-import os
-import sys
-
 import pytest
-
-# protobuf shim (r10 verdict item 4): this container has no installed
-# google.protobuf and no network, but the google-cloud-sdk image layer
-# vendors a pure-path protobuf runtime (6.32.0) under its appengine
-# platform dir. Expose it to BOTH the driver (sys.path) and the Python
-# workers (PYTHONPATH, read at worker fork) so the
-# transformWithStateInPandas equivalence test can run instead of
-# skipping. Harmless wherever protobuf is properly installed or the
-# SDK path is absent.
-_VENDORED_PROTOBUF = "/usr/lib/google-cloud-sdk/platform/google_appengine"
-try:  # pragma: no cover - trivially environment-dependent
-    import google.protobuf  # noqa: F401
-except ImportError:
-    if os.path.isdir(os.path.join(_VENDORED_PROTOBUF, "google", "protobuf")):
-        sys.path.insert(0, _VENDORED_PROTOBUF)
-        os.environ["PYTHONPATH"] = (
-            _VENDORED_PROTOBUF + os.pathsep + os.environ.get("PYTHONPATH", "")
-        )
-        # The SDK runtime is 6.32.0-dev; pyspark 4.1's StateMessage_pb2
-        # gencode stamps 6.33.0, one minor ahead, and protobuf's check
-        # refuses older runtimes outright. Wire compatibility holds at
-        # one minor (protobuf's own cross-version guarantee), the flag
-        # is protobuf's official escape hatch, and the TWS test asserts
-        # full output equivalence against applyInPandasWithState — a
-        # genuine incompatibility would fail the assert, not pass
-        # silently.
-        os.environ["TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK"] = "true"
 
 from tabular_to_parquet_spark.session import get_spark
 

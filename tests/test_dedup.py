@@ -67,8 +67,8 @@ def test_minhash_near_duplicates(spark):
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
-#: near-duplicates (1, 2, 5), unrelated text (3, 6) and a two-token
-#: document (4) whose shingle set is empty
+#: near-duplicates (1, 2, 5), unrelated text (3, 6) and two short
+#: documents (4, 7) whose shingle sets are empty
 _CROSS_ENGINE_DOCS = [
     (1, "the quick brown fox jumps over the lazy dog near the river bank today"),
     (2, "the quick brown fox jumps over the lazy dog near the river bank tonight"),
@@ -76,7 +76,9 @@ _CROSS_ENGINE_DOCS = [
     (4, "short text"),
     (5, "a quick brown fox jumps over the lazy dog near the river bank today"),
     (6, "stock prices fell sharply after the central bank raised interest rates"),
+    (7, "x"),
 ]
+_SHORT_DOCS = {4, 7}
 
 
 def test_minhash_spark_matches_duckdb_oracle(spark):
@@ -102,10 +104,13 @@ def test_minhash_spark_matches_duckdb_oracle(spark):
         f"SELECT doc_id, {comps}, band, band_key FROM banded ORDER BY ALL"
     ).fetchall()
     spark_banded = sorted(tuple(r) for r in dedup.minhash_banded(df).collect())
-    assert len(spark_banded) == len(_CROSS_ENGINE_DOCS) * dedup.MINHASH_BANDS
+    n_shingled = len(_CROSS_ENGINE_DOCS) - len(_SHORT_DOCS)
+    assert len(spark_banded) == n_shingled * dedup.MINHASH_BANDS
     assert spark_banded == oracle_banded
-    # the empty shingle set gives NULL components on both sides
-    assert all(v is None for r in spark_banded if r[0] == 4 for v in r[1:-2])
+    # the empty shingle set keeps its NULL signature row (d03) but gets
+    # no band rows, so two short docs never pair on agreeing NULLs
+    sigs = {r.doc_id: r.sig for r in dedup.minhash_frame(df).collect()}
+    assert all(v is None for d in _SHORT_DOCS for v in sigs[d])
 
     oracle_pairs = con.sql(
         f"{CATALOG['d04_minhash_pairs'].oracle} ORDER BY ALL"
@@ -113,6 +118,8 @@ def test_minhash_spark_matches_duckdb_oracle(spark):
     spark_pairs = sorted(tuple(r) for r in dedup.minhash_pairs(df).collect())
     assert spark_pairs == oracle_pairs
     assert (1, 2) in {(a, b) for a, b, _ in spark_pairs}
+    for pairs in (spark_pairs, oracle_pairs):
+        assert not _SHORT_DOCS & {d for a, b, _ in pairs for d in (a, b)}
 
 
 def test_simhash_deterministic_and_near(spark):
@@ -176,6 +183,7 @@ def _persisted_ids(spark):
 
 def test_pair_queries_leave_no_persisted_blocks(spark, docs):
     """VERDICT r2 #4: the one-shot pair queries must not pin storage."""
+    docs.count()  # the module's cached fixture is not a new block
     base = _persisted_ids(spark)
     dedup.minhash_pairs(docs).count()
     dedup.simhash_pairs(docs).count()
@@ -188,6 +196,7 @@ def test_warm_codegen_runs_tiny_slice_plans(spark, docs):
     side effects: no persisted blocks, results unchanged."""
     from tabular_to_parquet_spark.session import warm_codegen
 
+    docs.count()  # the module's cached fixture is not a new block
     base = _persisted_ids(spark)
     secs = warm_codegen(
         dedup.minhash_pairs(docs.limit(50)),

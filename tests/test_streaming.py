@@ -182,30 +182,6 @@ def test_click_purchase_join_interval_bounds(spark):
     ]
 
 
-def test_sessionize_tws_matches_apply_in_pandas(spark, tmp_path):
-    """transformWithStateInPandas twin == applyInPandasWithState
-    output (requires protobuf for the TWS state protocol — skipped
-    where absent; see streams.sessionize_stream_tws deployment gate).
-
-    Closed r11: the google-cloud-sdk image layer vendors a pure-path
-    protobuf runtime (6.32.0) that conftest.py exposes on sys.path +
-    PYTHONPATH, with protobuf's official version-check escape hatch
-    for the one-minor gencode gap (pyspark stamps 6.33.0) — safe
-    because THIS assert is a full output-equivalence check against
-    the applyInPandasWithState oracle path. RocksDB state store is
-    pinned inside sessionize_stream_tws (TWS column families)."""
-    pytest.importorskip("google.protobuf")
-    from tabular_to_parquet_spark.streaming.streams import (
-        sessionize_stream,
-        sessionize_stream_tws,
-    )
-
-    path = "/root/testdata/sf0.001/events.parquet"
-    a = sessionize_stream(spark, path, query_name="tws_ref").collect()
-    b = sessionize_stream_tws(spark, path, query_name="tws_new").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
 def test_watermark_finalization_and_late_merge_semantics(spark, tmp_path):
     """Watermark semantics pinned as they ACTUALLY are (probed on this
     engine): the watermark drives append-mode FINALIZATION and state
@@ -314,44 +290,53 @@ def test_python_stream_source_replays_in_micro_batches(spark):
     assert n_batches >= 3, f"expected >=3 data micro-batches, saw {n_batches}"
 
 
-def test_protobuf_statemessage_roundtrip_canary():
-    """Canary for the vendored-protobuf shim (conftest.py): the TWS
-    state protocol runs a 6.32 runtime against pyspark's 6.33-stamped
-    gencode behind TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK.  Pin
-    the actual contract — serialize→parse of representative
-    StateMessage requests/responses is byte-faithful — so a future
-    pyspark gencode bump that really breaks wire compatibility fails
-    HERE, loudly, instead of obscurely inside the TWS equivalence
-    test (r11 verdict item 7)."""
-    pytest.importorskip("google.protobuf")
-    from pyspark.sql.streaming.proto import StateMessage_pb2 as sm
 
-    # a ValueState update request, the hot-path TWS message shape
-    req = sm.StateRequest()
-    req.version = 2
-    call = req.stateVariableRequest.valueStateCall
-    call.stateName = "session_state"
-    call.valueStateUpdate.value = b"\x00\x01payload\xff"
-    wire = req.SerializeToString()
-    back = sm.StateRequest()
-    back.ParseFromString(wire)
-    assert back.version == 2
-    assert back.stateVariableRequest.valueStateCall.stateName == "session_state"
-    assert (back.stateVariableRequest.valueStateCall.valueStateUpdate.value
-            == b"\x00\x01payload\xff")
-    assert back.SerializeToString() == wire
+#: streaming catalog queries whose only other gate is the full sf0.01
+#: parity sweep
+_STREAMING_QUERIES = [
+    "st3_stream_decontaminated_ingest",
+    "st4_stream_click_purchase_join",
+    "st5_stream_dedup_within_watermark",
+    "st6_stream_static_enrich",
+    "ev09_hopping_window_streaming",
+    "st11_stream_hll",
+    "st12_stream_pareto",
+]
 
-    # an implicit-grouping-key request (sent per input group)
-    key_req = sm.StateRequest()
-    key_req.implicitGroupingKeyRequest.setImplicitKey.key = b"user-42"
-    back2 = sm.StateRequest()
-    back2.ParseFromString(key_req.SerializeToString())
-    assert back2.implicitGroupingKeyRequest.setImplicitKey.key == b"user-42"
 
-    # a response with a status code and inline value
-    resp = sm.StateResponse()
-    resp.statusCode = 0
-    resp.value = b"state-bytes"
-    back3 = sm.StateResponse()
-    back3.ParseFromString(resp.SerializeToString())
-    assert back3.statusCode == 0 and back3.value == b"state-bytes"
+@pytest.fixture(scope="module")
+def parity_compare():
+    """DuckDB views over SF, and tools/check_parity.py's normalize."""
+    import importlib.util
+    import pathlib
+
+    import duckdb
+
+    from tabular_to_parquet_spark.sources.tables import TABLE_NAMES
+
+    tool = pathlib.Path(__file__).resolve().parents[1] / "tools" / "check_parity.py"
+    spec = importlib.util.spec_from_file_location("check_parity", tool)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    return con, mod.normalize
+
+
+@pytest.mark.parametrize("name", _STREAMING_QUERIES)
+def test_streaming_query_matches_oracle(spark, parity_compare, name):
+    """The catalog's Spark side equals its DuckDB oracle at sf0.001,
+    compared as tools/check_parity.py compares them."""
+    import pandas as pd
+
+    import __spark_entry__ as entry_mod
+
+    con, normalize = parity_compare
+    got = entry_mod.queries()[name](spark, SF).toPandas()
+    want = con.sql(entry_mod.oracle_sql()[name]).df()
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(
+        normalize(got), normalize(want),
+        check_dtype=False, check_exact=True,
+    )
