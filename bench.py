@@ -339,15 +339,10 @@ def main() -> None:
             )
         )
 
-    # -- winnowing fingerprints (rolling hash + window-min) ------------------
+    # -- winnowing fingerprints (per-doc rolling hash + deque min) -----------
     @timed("winnow_fingerprints")
     def _():
         _noop(ta.winnow_fingerprints(docs))
-
-    # the shuffle-free mapInPandas twin (same output, zero Exchange)
-    @timed("winnow_rolling")
-    def _():
-        _noop(ta.winnow_fingerprints_rolling(docs))
 
     # -- per-user sessionization (lag + running-sum windows) -----------------
     @timed("sessionize")

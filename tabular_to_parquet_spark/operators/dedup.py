@@ -750,8 +750,10 @@ def dup_clusters_fixpoint(
     the standard distributed connected-components loop; O(diameter)
     rounds, each fully parallel). ``localCheckpoint`` truncates the
     per-round lineage so late rounds don't replay the whole chain.
-    ``max_iters`` bounds adversarial chains; dup graphs converge in a
-    handful of rounds."""
+    ``max_iters`` bounds adversarial chains: a label moves one hop per
+    round, so a chain of n documents needs n rounds. If a label still
+    changes in the last allowed round this raises instead of returning
+    a partial closure."""
     edges = _undirected(pairs).localCheckpoint()
     labels = ids.select(
         F.col(id_col), F.col(id_col).alias("cluster_id")
@@ -767,6 +769,11 @@ def dup_clusters_fixpoint(
         labels = nxt
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"dup_clusters_fixpoint did not converge within "
+            f"max_iters={max_iters}; raise max_iters for this graph"
+        )
     return labels
 
 

@@ -675,27 +675,19 @@ def ivf_cell_vectorized(
     return pandas_udf("int")(_cell_impl)(vec)
 
 
-def gram_matrix_fast(
+def gram_matrix(
     emb: DataFrame,
     vec_col: str = "embedding",
     scale: float = 1048576.0,
 ) -> DataFrame:
-    """The one-pass 100 TB path for the s10 gram matrix: each
-    partition accumulates its own G = fᵀf over the FIXED-POINT
-    coordinates with a numpy matmul (``mapInArrow`` — the vectors are
-    already Arrow when they cross from the JVM; no explode, no
-    per-coordinate rows), emits one 2080-row upper-triangle partial,
-    and one bounded (i, j) agg merges the partials. The corpus
-    crosses the wire ONCE as vectors instead of 64× as exploded
-    coordinates.
-
-    Exactness discipline: per numpy BATCH the int64 matmul is safe
-    (|f| ≤ 2²⁰ ⟹ a 65k-row batch's cell ≤ 2⁵⁶); batches then
-    accumulate into arbitrary-precision PYTHON ints, the partial
-    ships the cell as a decimal STRING, and the merge sums
-    DECIMAL(38,0) — so the result equals the exact explode form
-    bit-for-bit at any corpus size (registered against the SAME
-    oracle as s10; equality also test-pinned)."""
+    """s10's gram matrix over f = floor(v·2²⁰): per upper-triangle
+    (i, j) the vector count, Σf_i, Σf_j and Σf_i·f_j as a DECIMAL(38,0)
+    digit string (covariance = (n·Σxy − Σx·Σy)/n²). Each partition
+    accumulates G = fᵀf with a numpy matmul (``mapInArrow``: the corpus
+    crosses the wire once, as vectors) and one bounded (i, j) agg merges
+    the 2080-row partials. Exact at any size: int64 per numpy batch
+    (|f| ≤ 2²⁰ ⟹ a 65k-row batch's cell ≤ 2⁵⁶), python ints across
+    batches, decimal strings and a DECIMAL(38,0) sum across partitions."""
     from pyspark.sql import types as T
 
     out_schema = T.StructType([
@@ -752,24 +744,19 @@ def gram_matrix_fast(
     )
 
 
-def nearest_centroid_confusion_fast(
+def nearest_centroid_confusion(
     emb: DataFrame,
     vec_col: str = "embedding",
     label_col: str = "label",
     scale: float = 1048576.0,
 ) -> DataFrame:
-    """The one-pass 100 TB path for s05's prototype eval: instead of
-    exploding every vector into 64 coordinate rows and joining the
-    centroid table (corpus×64 rows through an exchange), the BOUNDED
-    centroid table (|labels|·64 entries, from the same exact integer
-    sums as s04) is collected and closed over, and a ``mapInArrow``
-    stage classifies each Arrow batch with numpy — per candidate
-    centroid the per-dim fixed-point terms floor((v−c)²·2²⁰) are
-    IDENTICAL IEEE double ops to the expression form, summed in int64
-    (≤ 64·2⁴²), so the argmin (tie → lowest centroid label, which is
-    numpy's first-minimum when candidates are sorted) is bit-equal.
-    Emits per-partition confusion partials; one bounded agg merges.
-    Registered against the SAME oracle as s05."""
+    """s05's confusion matrix (label, assigned, n_vecs) of nearest label
+    centroid classification. The BOUNDED centroid table (|labels|·64
+    entries, s04's exact integer sums) is collected and closed over; a
+    ``mapInArrow`` stage classifies each batch with numpy — per-dim
+    terms floor((v−c)²·2²⁰) summed in int64 (≤ 64·2⁴²), argmin's first
+    minimum = the lowest label, as candidates are label-sorted — and
+    one bounded agg merges the per-partition partials."""
     import numpy as np
 
     from pyspark.sql import types as T
@@ -842,25 +829,21 @@ def nearest_centroid_confusion_fast(
     )
 
 
-def kmeans_fixed_fast(
+def kmeans_fixed(
     emb: DataFrame,
     k: int = 8,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     scale: float = 1048576.0,
 ) -> DataFrame:
-    """The one-pass-per-round 100 TB path for s08's fixed-point
-    k-means: each Lloyd round is ONE ``mapInArrow`` sweep that
-    assigns a batch with an int64 numpy matmul (the ‖f‖²−2f·c+‖c‖²
-    decomposition is exact integer arithmetic, ≤2⁴⁷; np.argmin's
-    first-minimum IS the lowest-cid tie rule when centroid rows are
-    cid-ordered) and accumulates per-(cid, dim) coordinate sums —
-    int64 per batch, python-int across batches, DECIMAL(38,0) across
-    partitions — then a bounded k·dim merge yields the next round's
-    centroids (collected: 512 rows, the legitimate driver round-trip).
-    Two rounds, like s08; empty clusters drop exactly as the join
-    form drops them. Output identical to s08: (cid, dim,
-    centroid_fixed, n_members), registered against the SAME oracle."""
+    """s08's bit-deterministic Lloyd k-means over f = floor(v·2²⁰): the
+    ``k`` lowest ids seed it, two FIXED assign → update rounds run, and
+    it returns (cid, dim, centroid_fixed, n_members) per live cluster
+    (empty clusters drop out). Each round is ONE ``mapInArrow`` sweep:
+    an exact int64 ‖f‖²−2f·c+‖c‖² matmul (≤2⁴⁷) assigns, np.argmin's
+    first minimum is the lowest-cid tie rule, and per-(cid, dim) sums
+    go int64 → python int → DECIMAL(38,0); the bounded k·dim centroid
+    table is the one driver round-trip per round."""
     import numpy as np
 
     from pyspark.sql import types as T
@@ -1005,11 +988,25 @@ def pq_codebooks_fixed(
     ]
 
 
+def _pq_dist(sl: Column, cw: list[int]) -> Column:
+    """Exact squared L2 between a float slice, fixed-pointed per
+    element, and one integer codeword: an ``aggregate(zip_with(...))``
+    fold in the 2^20 domain (diff < 2^22, squared x16 < 2^48 —
+    int64-safe)."""
+    g = F.array(*[F.lit(v).cast("long") for v in cw])
+    diffs = F.zip_with(
+        sl,
+        g,
+        lambda x, y: F.floor(x.cast("double") * F.lit(PQ_SCALE)).cast("long")
+        - y,
+    )
+    return F.aggregate(diffs, F.lit(0).cast("long"), lambda acc, d: acc + d * d)
+
+
 def product_quantize(
     emb: DataFrame,
     subspaces: int = PQ_SUBSPACES,
     codes: int = PQ_CODES,
-    keep_cols: tuple[str, ...] = (),
     dim: int = EMBED_DIM,
 ) -> DataFrame:
     """Assign every vector its PQ code per subspace and price the
@@ -1018,35 +1015,23 @@ def product_quantize(
     per-dim affine codes to codebook geometry).
 
     One projection, zero shuffles, zero UDFs: per subspace the
-    distance to each codeword is an ``aggregate(zip_with(...))`` fold
-    over the 16-element slice in the 2^20 fixed-point domain
-    (diff < 2^22, squared x16 < 2^48 — int64-safe), and the argmin is
-    the struct-array-min trick (ties -> lowest code, the kmeans_fixed
-    rule).  The codewords enter as integer literals from
-    :func:`pq_codebooks_fixed`."""
+    distance to each codeword is one :func:`_pq_dist` fold over the
+    16-element slice, and the argmin is the struct-array-min trick
+    (ties -> lowest code, the kmeans_fixed rule).  The codewords enter
+    as integer literals from :func:`pq_codebooks_fixed`."""
     sub = dim // subspaces
     books = pq_codebooks_fixed(subspaces, codes, dim)
-    out_cols: list[Column] = [F.col("vec_id")] + [F.col(c) for c in keep_cols]
+    out_cols: list[Column] = [F.col("vec_id")]
     code_cols: list[Column] = []
     err_total: Column | None = None
     for s, book in enumerate(books):
         sl = F.slice(F.col("embedding"), s * sub + 1, sub)
         cands = []
         for c, cw in enumerate(book):
-            g = F.array(*[F.lit(v).cast("long") for v in cw])
-            diffs = F.zip_with(
-                sl,
-                g,
-                lambda x, y: F.floor(x.cast("double") * F.lit(PQ_SCALE)).cast(
-                    "long"
-                )
-                - y,
-            )
-            dist = F.aggregate(
-                diffs, F.lit(0).cast("long"), lambda acc, d: acc + d * d
-            )
             cands.append(
-                F.struct(dist.alias("d"), F.lit(c).cast("long").alias("c"))
+                F.struct(
+                    _pq_dist(sl, cw).alias("d"), F.lit(c).cast("long").alias("c")
+                )
             )
         best = F.array_min(F.array(*cands))
         code = best.getField("c").alias(f"code_s{s}")
@@ -1162,7 +1147,6 @@ def knn_ivf_pq(
     k: int = 5,
     probes: int = IVF_PROBES,
     anchors: list[list[float]] | None = None,
-    fast: bool = False,
     subspaces: int = PQ_SUBSPACES,
     codes: int = PQ_CODES,
     dim: int = EMBED_DIM,
@@ -1179,42 +1163,19 @@ def knn_ivf_pq(
     folds as product_quantize (query floats floored once, codewords
     are integer literals), so the ADC distance — an APPROXIMATION of
     the true distance — is itself computed exactly and cross-engine
-    hashable.  Plan: corpus projection (cell + codes, one pass),
-    bounded query-set broadcast (cell-exploded probes + the 32 LUT
-    columns), one equi-join on cell, one per-query rank window."""
+    hashable.  Plan: one :func:`pq_cell_codes` sweep over the corpus
+    (cell + codes), bounded query-set broadcast (cell-exploded probes
+    + the 32 LUT columns), one equi-join on cell, one per-query rank
+    window."""
     anchors = anchors or ivf_anchors()
     sub = dim // subspaces
     books = pq_codebooks_fixed(subspaces, codes, dim)
-    if fast:
-        # one mapInArrow sweep; bit-equal by the twin contract
-        corpus = pq_cell_codes_fast(emb, anchors, subspaces, codes, dim)
-    else:
-        corpus = product_quantize(
-            emb.withColumn("_cell", ivf_cell(F.col("embedding"), anchors)),
-            subspaces,
-            codes,
-            keep_cols=("_cell",),
-            dim=dim,
-        )
-    corpus = corpus.withColumn("_cell", F.col("_cell").cast("long"))
+    corpus = pq_cell_codes(emb, anchors, subspaces, codes, dim)
     lut_cols = []
     for s, book in enumerate(books):
         sl = F.slice(F.col("embedding"), s * sub + 1, sub)
         for c, cw in enumerate(book):
-            g = F.array(*[F.lit(v).cast("long") for v in cw])
-            diffs = F.zip_with(
-                sl,
-                g,
-                lambda x, y: F.floor(x.cast("double") * F.lit(PQ_SCALE)).cast(
-                    "long"
-                )
-                - y,
-            )
-            lut_cols.append(
-                F.aggregate(
-                    diffs, F.lit(0).cast("long"), lambda acc, d: acc + d * d
-                ).alias(f"lut_{s}_{c}")
-            )
+            lut_cols.append(_pq_dist(sl, cw).alias(f"lut_{s}_{c}"))
     qside = queries.select(
         F.col("vec_id").alias("query_id"),
         F.explode(
@@ -1224,7 +1185,6 @@ def knn_ivf_pq(
     ).withColumn("_cell", F.col("_cell_raw").cast("long")).drop("_cell_raw")
     dist = None
     for s in range(subspaces):
-        term = F.lit(0).cast("long")
         expr = None
         for c in range(codes):
             cond = F.col(f"code_s{s}") == c
@@ -1248,19 +1208,17 @@ def knn_ivf_pq(
     )
 
 
-def pq_cell_codes_fast(
+def pq_cell_codes(
     emb: DataFrame,
     anchors: list[list[float]] | None = None,
     subspaces: int = PQ_SUBSPACES,
     codes: int = PQ_CODES,
     dim: int = EMBED_DIM,
 ) -> DataFrame:
-    """The one-pass 100 TB corpus side for IVF-ADC: ONE ``mapInArrow``
-    sweep emits (vec_id, cell, PQ codes) — the corpus crosses the JVM
-    boundary once as Arrow vectors instead of evaluating 16 float-dot
-    folds + 32 fixed-point folds as interpreted expressions per row.
-
-    Bit-equality with the expression form (the twin contract):
+    """The PQ corpus coder behind IVF-ADC (s13) and the SDC cascade
+    (d20): ONE ``mapInArrow`` sweep emits (vec_id, _cell, code_s*), so
+    many anchors cost batch numpy, not unrolled per-anchor expressions.
+    The values equal :func:`ivf_cell` and :func:`product_quantize`:
     - cell scores repeat the EXACT sequential left-to-right double
       fold of dedup.dot_product (a dim-loop of elementwise adds — not
       numpy's pairwise sum), so every IEEE intermediate matches;
@@ -1358,7 +1316,6 @@ def pq_dedup_cascade(
     subspaces: int = PQ_SUBSPACES,
     codes: int = PQ_CODES,
     dim: int = EMBED_DIM,
-    fast: bool = False,
 ) -> DataFrame:
     """The production two-stage near-dup pattern with a PQ prefilter:
     candidate pairs inside an IVF cell are scored by SDC — four
@@ -1372,35 +1329,13 @@ def pq_dedup_cascade(
     Scale shape: cell-blocked self-join (the d09 discipline — never
     all-pairs), SDC is a per-row projection over the code columns, and
     the exact verify re-joins the vectors ONLY for survivors.  At
-    100 TB the survivor set is the filter's whole point.
-
-    ``fast=True`` codes the corpus via :func:`pq_cell_codes_fast`
-    (one mapInArrow sweep) instead of the expression form — REQUIRED
-    once ``anchors`` is large (e.g. ``suggest_cells``-scaled at 100x
-    corpus): hundreds of anchors as unrolled literal dot products blow
-    up Catalyst planning (the NEXT.md dead end).  Bit-identical output
-    by the certified twin contract (pq_fuzz: expression and mapInArrow
-    corpus coding agree exactly across 5k random geometries)."""
+    100 TB the survivor set is the filter's whole point.  The corpus
+    is coded by one :func:`pq_cell_codes` sweep, so a large
+    (``suggest_cells``-scaled) anchor set costs batch matmuls, not
+    unrolled literal dot products in the plan."""
     anchors = anchors or ivf_anchors()
-    if fast:
-        corpus = pq_cell_codes_fast(emb, anchors, subspaces, codes, dim)
-    else:
-        corpus = product_quantize(
-            emb.withColumn("_cell", ivf_cell(F.col("embedding"), anchors)),
-            subspaces,
-            codes,
-            keep_cols=("_cell",),
-            dim=dim,
-        )
+    corpus = pq_cell_codes(emb, anchors, subspaces, codes, dim)
     tables = pq_sdc_tables(subspaces, codes, dim)
-    # NOTE (r14): a shared .repartition("_cell") exchange (the s06 /
-    # d09 fix) was tried here and REVERTED: with the oracle's fixed 16
-    # cells it caps the pair-scoring stage at 16 tasks (measured 7.2 →
-    # 12.5 s at sf0.1), while the planner's broadcast keeps scoring on
-    # the scan's full parallelism.  The double PQ-coding this leaves is
-    # an oracle-form artifact only — the 100 TB path is fast=True with
-    # suggest_cells-scaled anchors, where the cell count (not 16)
-    # provides the parallelism and no side can be broadcast anyway.
     a, b = corpus.alias("a"), corpus.alias("b")
     pairs = a.join(
         b,

@@ -1,7 +1,8 @@
 """Text-analysis operators for training-data pipelines (SURVEY.md §7.4).
 
 All hot-path logic is built-in Spark SQL expressions (codegen'd,
-shuffle-free per-row transforms); the only aggregations are standard
+shuffle-free per-row transforms) except winnowing, a per-document
+``mapInPandas`` pass; the only aggregations are standard
 hash-aggregates with map-side partial combine. Every operator here is
 a pure projection or aggregation — at 100 TB they scale linearly with
 input splits and never shuffle except for the explicit groupBys.
@@ -252,72 +253,22 @@ WINNOW_K = 8
 WINNOW_W = 16
 
 
-def winnow_fingerprints(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Rolling-hash document fingerprints via winnowing: hash every
-    char k-gram, slide a w-hash window, keep each window's minimum;
-    the distinct minima are the doc's fingerprint set.
-
-    Plan shape: explode char positions (linear, partition-parallel) →
-    one md5 per k-gram → windowed MIN over (doc, pos) → distinct.
-    The only shuffle is the per-doc sort for the window frame; at
-    100 TB pre-partition the corpus by doc so the sort is local.
-    Guarantee: any shared substring of length ≥ w+k-1 between two docs
-    yields at least one shared fingerprint.
-    """
-    from pyspark.sql import Window as W
-
-    norm = normalized_text(F.col(text_col))
-    base = df.select(F.col(id_col), norm.alias("_norm")).filter(
-        F.length("_norm") >= WINNOW_K
-    )
-    pos = base.select(
-        F.col(id_col),
-        F.col("_norm"),
-        F.explode(
-            F.sequence(F.lit(1), F.length("_norm") - (WINNOW_K - 1))
-        ).alias("_pos"),
-    )
-    hashed = pos.select(
-        F.col(id_col),
-        F.col("_pos"),
-        md5_i64(F.expr(f"substring(_norm, _pos, {WINNOW_K})")).alias("_h"),
-        # the last full-window start is known from the document length
-        # (explode emits the complete 1..len-k+1 sequence), so carrying
-        # it as a projection replaces a second full-frame MAX window
-        # over every per-doc partition (r14; value-identical)
-        (F.length("_norm") - (WINNOW_K - 1)).cast("int").alias("_max_pos"),
-    )
-    w = (
-        W.partitionBy(id_col)
-        .orderBy("_pos")
-        .rowsBetween(W.currentRow, WINNOW_W - 1)
-    )
-    mins = hashed.select(
-        F.col(id_col),
-        F.min("_h").over(w).alias("fingerprint"),
-        F.col("_pos"),
-        F.col("_max_pos"),
-    )
-    # keep full windows only: positions past (n_grams - w + 1) would
-    # emit partial-window minima
-    full = mins.filter(F.col("_pos") <= F.col("_max_pos") - (WINNOW_W - 1))
-    return full.select(id_col, "fingerprint").distinct()
-
-
-def winnow_fingerprints_rolling(
+def winnow_fingerprints(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Same output as :func:`winnow_fingerprints`, computed per-document
-    inside Arrow batches (``mapInPandas`` + a monotonic-deque rolling
-    minimum) instead of a per-char-position explode.
+    """Rolling-hash document fingerprints via winnowing: hash every
+    char k-gram of the normalized text, slide a w-hash window, keep
+    each full window's minimum; the distinct minima are the doc's
+    fingerprint set. Guarantee: any shared substring of length
+    ≥ w+k-1 between two docs yields at least one shared fingerprint.
 
-    The scale trade: the expression path shuffles ~one row per character
-    for the window sort; this path shuffles NOTHING — each doc's
-    fingerprint set is emitted already-distinct from the partition that
-    holds the doc. The cost is Python/Arrow transfer of the text column
-    (once) and a per-doc O(n) loop. Prefer this when docs are long
-    (shuffle volume dominates); the expression path stays as the
-    whole-stage-codegen / oracle twin.
+    Each doc is winnowed inside the Arrow batch that holds it
+    (``mapInPandas`` + a monotonic-deque rolling minimum, O(n) per
+    doc), so the plan has NO shuffle: the fingerprint set leaves the
+    partition already distinct. The normalization repeats
+    :func:`normalized_text` (lowercase, ASCII-whitespace runs to one
+    space, trim spaces) and the hash is :func:`md5_i64`'s 60-bit md5
+    prefix, so x07's DuckDB oracle reproduces the set exactly.
     """
     import pandas as pd
 

@@ -910,7 +910,8 @@ register("x43_bpe_merge_learning", _x43_oracle())(_q_bpe_learn)
 def _q_knn_ivf_pq(spark, sf_dir):
     """similarity.knn_ivf_pq over the standard query workload
     (vec_id % 50 = 0): top-5 by exact fixed-point ADC distance, ties
-    to the lowest neighbor id."""
+    to the lowest neighbor id. The corpus side is one mapInArrow
+    sweep (similarity.pq_cell_codes: cell + PQ codes)."""
     from tabular_to_parquet_spark.operators import similarity
 
     emb = _emb(spark, sf_dir)
@@ -1065,23 +1066,8 @@ FROM lineitem WHERE l_orderkey < 250000
 """)(_q_xlsx_string_inference)
 
 
-def _q_knn_ivf_pq_fast(spark, sf_dir):
-    """The mapInArrow twin of s13 (the s05/s08/s10 recipe applied to
-    the ADC corpus side): one Arrow sweep computes cell + PQ codes —
-    sequential-fold float scores and exact int64 ‖f‖²−2fG+‖g‖²
-    distances, bit-equal to the expression form — then the identical
-    probe join and rank.  Registered against the SAME oracle as s13:
-    the twin's claim IS exact equality."""
-    from tabular_to_parquet_spark.operators import similarity
-
-    emb = _emb(spark, sf_dir)
-    return similarity.knn_ivf_pq(
-        emb, emb.filter(F.expr("vec_id % 50 = 0")), k=5, fast=True
-    )
-
-
 register("s13_knn_ivf_pq_fast", _CATALOG["s13_knn_ivf_pq"].oracle)(
-    _q_knn_ivf_pq_fast
+    _q_knn_ivf_pq
 )
 
 

@@ -274,17 +274,9 @@ SELECT DISTINCT doc_id, fingerprint
 FROM mins WHERE pos <= max_pos - {ta.WINNOW_W - 1}
 """)(_q_winnow)
 
-_WINNOW_ORACLE = CATALOG["x07_winnow_fingerprints"].oracle
-
-
-def _q_winnow_rolling(spark, sf_dir):
-    """Rolling-hash mapInPandas winnowing — must produce the exact same
-    fingerprint set as the expression path (x07), with ZERO shuffle:
-    each doc is winnowed inside the Arrow batch that holds it."""
-    return ta.winnow_fingerprints_rolling(_docs(spark, sf_dir))
-
-
-register("x10_winnow_rolling", _WINNOW_ORACLE)(_q_winnow_rolling)
+register("x10_winnow_rolling", CATALOG["x07_winnow_fingerprints"].oracle)(
+    _q_winnow
+)
 
 
 def _q_top_tokens(spark, sf_dir):
@@ -3421,51 +3413,10 @@ GROUP BY label, dim
 
 def _q_nearest_centroid(spark, sf_dir):
     """Classify every embedding to its nearest label centroid
-    (squared-L2 in fixed point) and report the confusion matrix —
-    the standard prototype-quality eval for an embedding space.
-
-    Determinism: centroids come from s04's exact integer sums
-    (converted back by one division); per-dimension squared
-    differences are fixed-pointed per element and integer-summed, so
-    the argmin — tie-broken by label — is bit-stable.  Scale shape:
-    the centroid table is 64·|labels| rows (broadcast); the exploded
-    join is linear in corpus·|labels| with one hash-agg on
-    (vec_id, clabel) and a bounded per-vector window."""
-    from pyspark.sql import Window as W
-
-    emb = _emb(spark, sf_dir)
-    ex = emb.select(
-        "vec_id", "label", F.posexplode("embedding").alias("dim", "v")
-    ).select(
-        "vec_id",
-        "label",
-        F.col("dim").cast("long").alias("dim"),
-        F.col("v").cast("double").alias("v"),
-    )
-    cent = ex.groupBy(F.col("label").alias("clabel"), "dim").agg(
-        F.expr(
-            "sum(cast(floor(v * 1048576.0) as long)) div count(1)"
-        ).alias("c_fixed")
-    ).select(
-        "clabel", "dim",
-        (F.col("c_fixed").cast("double") / F.lit(1048576.0)).alias("c"),
-    )
-    d = F.col("v") - F.col("c")
-    term = F.floor(d * d * F.lit(1048576.0)).cast("long")
-    dists = (
-        ex.join(F.broadcast(cent), "dim")
-        .groupBy("vec_id", "label", "clabel")
-        .agg(F.sum(term).alias("dist_fixed"))
-    )
-    w = W.partitionBy("vec_id").orderBy("dist_fixed", "clabel")
-    assigned = (
-        dists.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-    )
-    return assigned.groupBy(
-        F.col("label").cast("long").alias("label"),
-        F.col("clabel").cast("long").alias("assigned"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_vecs"))
+    (squared-L2 in fixed point, ties to the lowest label) and report
+    the confusion matrix — the standard prototype-quality eval for an
+    embedding space (similarity.nearest_centroid_confusion)."""
+    return similarity.nearest_centroid_confusion(_emb(spark, sf_dir))
 
 
 register("s05_nearest_centroid_confusion", """
@@ -6891,7 +6842,7 @@ def _q_filter_funnel(spark, sf_dir):
 def _pl33_oracle() -> str:
     d10 = CATALOG["d10_dup_clusters"].oracle
     return f"""
-WITH labels AS ({d10}),
+WITH labels AS MATERIALIZED ({d10}),
 d AS (
     SELECT doc_id, lang,
            len({_TOKS}) AS ntok,
@@ -7330,71 +7281,12 @@ GROUP BY doc_id
 
 
 def _q_kmeans_fixed(spark, sf_dir):
-    """Lloyd's k-means over the embedding space, bit-deterministic:
-    coordinates fixed-pointed once (floor(v·2^20), s04's discipline),
-    every distance and centroid thereafter pure BIGINT — so the
-    assignment argmin (tie: lowest cid) and the integer-mean update
-    are order-independent and reproduce exactly in any engine. Seeds
-    are the 8 lowest vec_ids; two assign→update rounds (the g01/g03
-    iterative shape, unrolled — rounds are FIXED, not data-dependent).
-    Output: final per-cluster centroid components + member counts.
-
-    Scale: each round is ex⋈broadcast(centroids) (centroid table is
-    k·64 rows at ANY corpus size) → one (vec_id,cid) hash-agg → one
-    bounded (cid,dim) agg; per-row work is k·64 multiplies. Magnitudes
-    are audited: |f| ≤ 2²⁰ ⟹ per-dim diff² ≤ 2⁴², Σ over 64 dims
-    ≤ 2⁴⁸ — no overflow at any k or corpus size. This is the missing
-    layer between s03's FIXED anchors (IVF cells) and d09's cell
-    blocking: learned cells, same join geometry."""
-    from pyspark.sql import Window as W
-
-    emb = _emb(spark, sf_dir)
-    ex = emb.select(
-        "vec_id", F.posexplode("embedding").alias("dim", "v")
-    ).select(
-        "vec_id",
-        F.col("dim").cast("long").alias("dim"),
-        F.floor(F.col("v").cast("double") * F.lit(1048576.0)).cast("long").alias("f"),
-    )
-    seeds = (
-        emb.select("vec_id").orderBy("vec_id").limit(8)
-        .select(
-            "vec_id",
-            (F.row_number().over(W.orderBy("vec_id")) - 1).cast("long").alias("cid"),
-        )
-    )
-    c0 = ex.join(F.broadcast(seeds), "vec_id").select(
-        "cid", "dim", F.col("f").alias("c")
-    )
-
-    def assign(cent):
-        d = F.col("f") - F.col("c")
-        w = W.partitionBy("vec_id").orderBy("dist", "cid")
-        return (
-            ex.join(F.broadcast(cent), "dim")
-            .groupBy("vec_id", "cid")
-            .agg(F.sum(d * d).alias("dist"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "cid")
-        )
-
-    def update(assigned):
-        return (
-            ex.join(assigned, "vec_id")
-            .groupBy("cid", "dim")
-            .agg(F.expr("sum(f) div count(1)").alias("c"))
-        )
-
-    a2 = assign(update(assign(c0)))
-    return (
-        ex.join(a2, "vec_id")
-        .groupBy("cid", "dim")
-        .agg(
-            F.expr("sum(f) div count(1)").cast("long").alias("centroid_fixed"),
-            F.count(F.lit(1)).cast("long").alias("n_members"),
-        )
-    )
+    """Bit-deterministic Lloyd's k-means over the embedding space: 8
+    lowest-id seeds, two fixed assign→update rounds in BIGINT fixed
+    point (similarity.kmeans_fixed). The missing layer between s03's
+    FIXED anchors (IVF cells) and d09's cell blocking: learned cells,
+    same join geometry."""
+    return similarity.kmeans_fixed(_emb(spark, sf_dir))
 
 
 register("s08_kmeans_fixed", """
@@ -8235,42 +8127,9 @@ FROM lineitem
 
 def _q_gram_matrix(spark, sf_dir):
     """The linear-algebra layer under PCA whitening / dim reduction
-    before an IVF index: the 64×64 gram matrix Σ f_i·f_j over the
-    corpus, as EXACT sufficient statistics — per upper-triangle (i,j):
-    the pair count, Σf_i, Σf_j (the mean terms), and Σf_i·f_j as a
-    DECIMAL(38,0) digit string (f ≤ 2²⁰ ⟹ products ≤ 2⁴⁰; corpus
-    sums cross 2⁶³ exactly in the regime the r7 overflow rule
-    covers). The caller assembles covariance = (n·Σxy − Σx·Σy)/n² in
-    two float ops per cell. Plan: the exploded coordinates self-join
-    on vec_id (per-vector fan-out is the FIXED 64·65/2 = 2080 upper
-    triangle — linear in the corpus, never corpus×corpus), one
-    (i,j)-keyed agg with map-side combine. The 100 TB refinement is a
-    per-partition numpy gram via mapInArrow merged by cell — same
-    output, one pass, no explode; this form stays the catalog entry
-    as the oracle transcription."""
-    emb = _emb(spark, sf_dir)
-    ex = emb.select(
-        "vec_id", F.posexplode("embedding").alias("dim", "v")
-    ).select(
-        "vec_id",
-        F.col("dim").cast("long").alias("dim"),
-        F.floor(F.col("v").cast("double") * F.lit(1048576.0)).cast("long").alias("f"),
-    )
-    a = ex.select("vec_id", F.col("dim").alias("i"), F.col("f").alias("fi"))
-    b = ex.select("vec_id", F.col("dim").alias("j"), F.col("f").alias("fj"))
-    d = "decimal(19,0)"
-    return (
-        a.join(b, "vec_id")
-        .where(F.col("i") <= F.col("j"))
-        .groupBy("i", "j")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("fi").cast("long").alias("sum_fi"),
-            F.sum("fj").cast("long").alias("sum_fj"),
-            F.sum(F.col("fi").cast(d) * F.col("fj").cast(d))
-            .cast("decimal(38,0)").cast("string").alias("sum_prod"),
-        )
-    )
+    before an IVF index: the 64×64 gram matrix over the corpus as
+    EXACT fixed-point sufficient statistics (similarity.gram_matrix)."""
+    return similarity.gram_matrix(_emb(spark, sf_dir))
 
 
 register("s10_gram_matrix", """
@@ -8292,49 +8151,17 @@ GROUP BY a.dim, b.dim
 """)(_q_gram_matrix)
 
 
-def _q_gram_matrix_fast(spark, sf_dir):
-    """The 100 TB path for s10: per-partition numpy matmul partials
-    over fixed-point coordinates (mapInArrow — the corpus crosses the
-    wire once as vectors, not 64× as exploded rows), int64 per batch
-    → python-int accumulation → decimal-string partials → one bounded
-    DECIMAL(38,0) merge. Registered against the SAME oracle as s10 —
-    the twin's claim IS exact equality with the explode form."""
-    return similarity.gram_matrix_fast(_emb(spark, sf_dir))
-
-
+# the `_fast` names stay declared queries; each runs the same function,
+# against the same oracle, as s10, s05 and s08
 register("s10_gram_matrix_fast", CATALOG["s10_gram_matrix"].oracle)(
-    _q_gram_matrix_fast
+    _q_gram_matrix
 )
-
-
-def _q_nearest_centroid_fast(spark, sf_dir):
-    """The 100 TB path for s05: the bounded exact-integer centroid
-    table closes over a numpy mapInArrow classifier (identical IEEE
-    fixed-point terms, int64 distance sums, first-minimum tie rule =
-    lowest centroid label) — the corpus crosses once as vectors, not
-    64× as exploded join rows. Same oracle as s05; the twin's claim
-    IS exact equality with the expression form."""
-    return similarity.nearest_centroid_confusion_fast(_emb(spark, sf_dir))
-
-
 register(
     "s05_nearest_centroid_confusion_fast",
     CATALOG["s05_nearest_centroid_confusion"].oracle,
-)(_q_nearest_centroid_fast)
-
-
-def _q_kmeans_fixed_fast(spark, sf_dir):
-    """The 100 TB path for s08: each Lloyd round is one mapInArrow
-    matmul sweep (exact int64 distance decomposition, first-min tie =
-    lowest cid) + a bounded k·64 DECIMAL merge, with the 512-row
-    centroid table collected between rounds — the corpus crosses once
-    per round as vectors instead of 64× as exploded join rows. Same
-    oracle as s08; the twin's claim IS exact equality."""
-    return similarity.kmeans_fixed_fast(_emb(spark, sf_dir))
-
-
+)(_q_nearest_centroid)
 register("s08_kmeans_fixed_fast", CATALOG["s08_kmeans_fixed"].oracle)(
-    _q_kmeans_fixed_fast
+    _q_kmeans_fixed
 )
 
 

@@ -271,6 +271,20 @@ def test_dup_clusters_bounded_and_fixpoint(spark):
     assert fix == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10, 99: 99}
 
 
+def test_dup_clusters_fixpoint_raises_at_bound(spark):
+    # a 30-document chain (i, i+1) needs 30 rounds: label 1 moves one
+    # hop per round. At the bound the closure is partial, so it raises.
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 30)], "id_a long, id_b long"
+    )
+    ids = spark.createDataFrame([(i,) for i in range(1, 31)], "doc_id long")
+    with pytest.raises(RuntimeError, match="max_iters=20"):
+        dedup.dup_clusters_fixpoint(pairs, ids, max_iters=20)
+    fix = {r["doc_id"]: r["cluster_id"]
+           for r in dedup.dup_clusters_fixpoint(pairs, ids, max_iters=40).collect()}
+    assert fix == {i: 1 for i in range(1, 31)}
+
+
 # ---------------------------------------------------------------------------
 # sorted-neighborhood: scale twin == global-window form
 

@@ -564,21 +564,66 @@ def test_ivf_pq_adc_distances_match_recompute(spark):
 
 
 def test_ivf_pq_fast_twin_equals_expression_form(spark):
-    from tabular_to_parquet_spark.operators.similarity import knn_ivf_pq
-
-    vecs = [
-        (i, [((i * 23 + d * 3) % 29 - 14) / 14.0 for d in range(64)])
-        for i in range(80)
-    ]
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    q = emb.filter("vec_id % 8 = 0")
-    cols = ["query_id", "neighbor_id", "adc_dist_fixed", "rank"]
-    slow = sorted(tuple(r[c] for c in cols) for r in knn_ivf_pq(emb, q, k=4).collect())
-    fast = sorted(
-        tuple(r[c] for c in cols)
-        for r in knn_ivf_pq(emb, q, k=4, fast=True).collect()
+    """knn_ivf_pq equals tools/pq_fuzz.py's independent ADC top-k
+    (per-query LUT, probe cells by the sequential double fold,
+    row_number ties to the lowest neighbor id) on a corpus with many
+    repeated coordinates, so codes and distances tie."""
+    from tabular_to_parquet_spark.operators.similarity import (
+        IVF_PROBES,
+        ivf_anchors,
+        knn_ivf_pq,
+        pq_codebooks_fixed,
     )
-    assert slow == fast and slow
+    from tools.pq_fuzz import ref_adc_topk, ref_cell, ref_codes
+
+    vecs = {
+        i: [((i * 23 + d * 3) % 29 - 14) / 14.0 for d in range(64)]
+        for i in range(80)
+    }
+    emb = spark.createDataFrame(
+        list(vecs.items()), "vec_id long, embedding array<double>"
+    )
+    q = emb.filter("vec_id % 8 = 0")
+    got = {
+        (r["query_id"], r["neighbor_id"], r["adc_dist_fixed"], r["rank"])
+        for r in knn_ivf_pq(emb, q, k=4).collect()
+    }
+    anchors, books = ivf_anchors(), pq_codebooks_fixed()
+    corpus = [
+        (i, ref_cell(v, anchors), ref_codes(v, books, 16))
+        for i, v in vecs.items()
+    ]
+    want = set()
+    for qid in range(0, 80, 8):
+        want.update(
+            ref_adc_topk(corpus, (qid, vecs[qid]), anchors, books, 16,
+                         IVF_PROBES, 4)
+        )
+    assert got == want and got
+
+
+def test_pq_cell_codes_scores_cells_by_the_sequential_fold(spark):
+    """Each vector ties between cells 0 and 1 under the sequential
+    left-to-right double fold the DuckDB oracle uses (cell 0's score is
+    that fold's exact result for cell 1), so the lowest cell, 0, must
+    win. A pairwise or BLAS-ordered sum rounds cell 1's score apart."""
+    import numpy as np
+
+    from tabular_to_parquet_spark.operators.similarity import pq_cell_codes
+    from tools.pq_fuzz import ref_cell, ref_scores
+
+    for seed in (0, 1, 6, 8):
+        rng = np.random.default_rng(seed)
+        v = rng.uniform(-1, 1, 64).astype(np.float32).tolist()
+        v[0] = 1.0
+        a1 = rng.uniform(-1, 1, 64).tolist()
+        a1[0] = 0.0
+        anchors = [[ref_scores(v, [a1])[0]] + [0.0] * 63, a1]
+        assert ref_cell(v, anchors) == 0
+        emb = spark.createDataFrame(
+            [(1, v)], "vec_id long, embedding array<float>"
+        )
+        assert pq_cell_codes(emb, anchors).head()["_cell"] == 0
 
 
 # ---------------------------------------------------------------------------

@@ -53,14 +53,24 @@ def test_gd_values_unchanged_after_literal_n(spark):
 
 
 def test_pq_dedup_cascade_fast_twin(spark):
-    # fast=True (mapInArrow corpus coding) must be row-identical to
-    # the expression form — including with a non-default, larger
-    # anchor set (the suggest_cells scale path it exists for)
+    # pq_dedup_cascade with a non-default, larger anchor set (the
+    # suggest_cells scale path) equals tools/pq_fuzz.py's independent
+    # cell-blocked SDC -> exact reference, planted clones included
     import random
+
+    import numpy as np
 
     from tabular_to_parquet_spark.operators.similarity import (
         ivf_anchors,
+        pq_codebooks_fixed,
         pq_dedup_cascade,
+    )
+    from tools.pq_fuzz import (
+        ref_cascade,
+        ref_cell,
+        ref_codes,
+        ref_fixed,
+        ref_sdc_tables,
     )
 
     rng = random.Random(12)
@@ -75,11 +85,23 @@ def test_pq_dedup_cascade_fast_twin(spark):
         rows, "vec_id long, embedding array<float>"
     )
     anchors = ivf_anchors(cells=32)
-    kw = dict(anchors=anchors)
-    slow = pq_dedup_cascade(emb, 10**13, 10**13, **kw).collect()
-    fastr = pq_dedup_cascade(emb, 10**13, 10**13, fast=True, **kw).collect()
-    assert sorted(map(tuple, slow)) == sorted(map(tuple, fastr))
-    assert len(slow) > 0  # the planted clones must survive the cascade
+    got = {
+        tuple(r)
+        for r in pq_dedup_cascade(emb, 10**13, 10**13, anchors=anchors).collect()
+    }
+    # the reference sees the float32 values the frame stores
+    vecs = {i: np.asarray(v, dtype=np.float32).tolist() for i, v in rows}
+    books = pq_codebooks_fixed()
+    want = ref_cascade(
+        [(i, ref_cell(v, anchors), ref_codes(v, books, 16)) for i, v in vecs.items()],
+        {i: ref_fixed(v) for i, v in vecs.items()},
+        ref_sdc_tables(books),
+        10**13,
+        10**13,
+    )
+    assert got == want
+    # the planted clones must survive the cascade
+    assert {(j, 1000 + j) for j in range(5)} <= {(a, b) for a, b, _, _ in got}
 
 
 # duplicated_char_fraction (d23): per-doc interval-merge semantics

@@ -289,24 +289,28 @@ def test_a39_hand_sessions(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# s10 — gram matrix
+# s10 gram matrix, s05 and s08 tie rules, over hand-written embeddings
 
 
-def test_s10_hand_vectors(spark, tmp_path):
-    """Two 2-dim vectors (1.0, 0.5) and (0.25, -0.5): fixed-point
-    f = v * 2^20 exactly (dyadic), gram sums computed by hand."""
+def _write_vectors(spark, path, vecs, labels):
     pdf = pd.DataFrame(
         {
-            "vec_id": [1, 2],
-            "embedding": [[1.0, 0.5], [0.25, -0.5]],
-            "label": [0, 0],
+            "vec_id": list(range(1, len(vecs) + 1)),
+            "embedding": vecs,
+            "label": labels,
         }
     )
     spark.createDataFrame(pdf).select(
         "vec_id",
         F.col("embedding").cast("array<float>").alias("embedding"),
         F.col("label").cast("int").alias("label"),
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    ).write.mode("overwrite").parquet(str(path / "embeddings.parquet"))
+
+
+def test_s10_hand_vectors(spark, tmp_path):
+    """Two 2-dim vectors (1.0, 0.5) and (0.25, -0.5): fixed-point
+    f = v * 2^20 exactly (dyadic), gram sums computed by hand."""
+    _write_vectors(spark, tmp_path, [[1.0, 0.5], [0.25, -0.5]], [0, 0])
     S = 1048576
     f = {1: (S, S // 2), 2: (S // 4, -S // 2)}
     got = {
@@ -338,24 +342,11 @@ def test_s10_shape_and_symmetric_diagonal(spark):
             assert int(r["sum_prod"]) >= 0  # sum of squares
 
 
-def test_s10_fast_twin_equals_exact_form(spark):
-    a = sorted(
-        CATALOG["s10_gram_matrix"].spark(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: (r["i"], r["j"]),
-    )
-    b = sorted(
-        CATALOG["s10_gram_matrix_fast"]
-        .spark(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: (r["i"], r["j"]),
-    )
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
 def test_s10_fast_merges_partitions_exactly(spark, tmp_path):
     """Many partitions, values engineered so per-partition products
     are large: the decimal merge reproduces the single-partition
     total exactly."""
-    from tabular_to_parquet_spark.operators.similarity import gram_matrix_fast
+    from tabular_to_parquet_spark.operators.similarity import gram_matrix
 
     pdf = pd.DataFrame(
         {
@@ -369,73 +360,48 @@ def test_s10_fast_merges_partitions_exactly(spark, tmp_path):
     )
     one = {
         (r["i"], r["j"]): (r["n"], r["sum_fi"], r["sum_fj"], r["sum_prod"])
-        for r in gram_matrix_fast(sdf.coalesce(1)).collect()
+        for r in gram_matrix(sdf.coalesce(1)).collect()
     }
     many = {
         (r["i"], r["j"]): (r["n"], r["sum_fi"], r["sum_fj"], r["sum_prod"])
-        for r in gram_matrix_fast(sdf.repartition(16)).collect()
+        for r in gram_matrix(sdf.repartition(16)).collect()
     }
     assert one == many
     S = 1048576
     assert one[(0, 0)] == (200, 200 * S, 200 * S, str(200 * S * S))
     assert one[(0, 1)] == (200, 200 * S, -200 * S, str(-200 * S * S))
+    # 140k vectors of 8.0 (f = 2^23): each partial fits a BIGINT, the
+    # merged sum of products (140000 * 2^46) does not
+    n, f = 140_000, 8 * S
+    big = spark.range(n).select(
+        F.array(F.lit(8.0)).cast("array<float>").alias("embedding")
+    ).repartition(4)
+    row = gram_matrix(big).collect()
+    assert [tuple(r) for r in row] == [(0, 0, n, n * f, n * f, str(n * f * f))]
+    assert n * f * f > 2**63
 
 
-def test_s05_fast_twin_equals_expression_form(spark):
-    a = sorted(
-        CATALOG["s05_nearest_centroid_confusion"]
-        .spark(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: (r["label"], r["assigned"]),
+def test_s05_distance_ties_go_to_lowest_label(spark, tmp_path):
+    """Labels 0 and 1 have the same centroid (0, 0), so every vector is
+    equally far from both: each one is assigned label 0."""
+    _write_vectors(
+        spark, tmp_path,
+        [[0.5, 0.0], [-0.5, 0.0], [0.0, 0.5], [0.0, -0.5]], [0, 0, 1, 1],
     )
-    b = sorted(
-        CATALOG["s05_nearest_centroid_confusion_fast"]
-        .spark(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: (r["label"], r["assigned"]),
+    rows = CATALOG["s05_nearest_centroid_confusion"].spark(
+        spark, str(tmp_path)
+    ).collect()
+    assert sorted(tuple(r) for r in rows) == [(0, 0, 2), (1, 0, 2)]
+
+
+def test_s08_tied_seeds_go_to_lowest_cid(spark, tmp_path):
+    """Vectors 1 and 2 are identical, so seeds 0 and 1 tie for every
+    vector: both members join cid 0 and the empty cid 1 drops out."""
+    _write_vectors(
+        spark, tmp_path, [[0.5, 0.5], [0.5, 0.5], [-0.5, -0.25]], [0, 0, 0]
     )
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    assert sum(r["n_vecs"] for r in a) == 500
-
-
-def test_s08_fast_twin_equals_join_form(spark):
-    a = sorted(
-        CATALOG["s08_kmeans_fixed"].spark(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: (r["cid"], r["dim"]),
-    )
-    b = sorted(
-        CATALOG["s08_kmeans_fixed_fast"]
-        .spark(spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: (r["cid"], r["dim"]),
-    )
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
-def test_s08_fast_singletons(spark, tmp_path):
-    """The wave-5 eight-separated-vectors invariant holds through the
-    matmul path too: every seed keeps itself, centroids are the
-    fixed-pointed vectors."""
-    import math
-
-    dim = 16
-    vecs = []
-    for i in range(8):
-        v = [0.0] * dim
-        v[2 * i] = 0.5 + 0.05 * i
-        v[2 * i + 1] = -0.25
-        vecs.append(v)
-    pdf = pd.DataFrame(
-        {
-            "vec_id": list(range(1, 9)),
-            "embedding": vecs,
-            "label": [0] * 8,
-        }
-    )
-    spark.createDataFrame(pdf).select(
-        "vec_id",
-        F.col("embedding").cast("array<float>").alias("embedding"),
-        F.col("label").cast("int").alias("label"),
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-    rows = CATALOG["s08_kmeans_fixed_fast"].spark(spark, str(tmp_path)).collect()
-    assert len(rows) == 8 * dim
-    for r in rows:
-        assert r["n_members"] == 1
-        assert r["centroid_fixed"] == math.floor(vecs[r["cid"]][r["dim"]] * 1048576.0)
+    rows = CATALOG["s08_kmeans_fixed"].spark(spark, str(tmp_path)).collect()
+    S = 1048576
+    assert sorted(tuple(r) for r in rows) == [
+        (0, 0, S // 2, 2), (0, 1, S // 2, 2), (2, 0, -S // 2, 1), (2, 1, -S // 4, 1),
+    ]

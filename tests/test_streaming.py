@@ -304,39 +304,8 @@ _STREAMING_QUERIES = [
 ]
 
 
-@pytest.fixture(scope="module")
-def parity_compare():
-    """DuckDB views over SF, and tools/check_parity.py's normalize."""
-    import importlib.util
-    import pathlib
-
-    import duckdb
-
-    from tabular_to_parquet_spark.sources.tables import TABLE_NAMES
-
-    tool = pathlib.Path(__file__).resolve().parents[1] / "tools" / "check_parity.py"
-    spec = importlib.util.spec_from_file_location("check_parity", tool)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    return con, mod.normalize
-
-
 @pytest.mark.parametrize("name", _STREAMING_QUERIES)
-def test_streaming_query_matches_oracle(spark, parity_compare, name):
+def test_streaming_query_matches_oracle(parity_compare, name):
     """The catalog's Spark side equals its DuckDB oracle at sf0.001,
     compared as tools/check_parity.py compares them."""
-    import pandas as pd
-
-    import __spark_entry__ as entry_mod
-
-    con, normalize = parity_compare
-    got = entry_mod.queries()[name](spark, SF).toPandas()
-    want = con.sql(entry_mod.oracle_sql()[name]).df()
-    assert len(want) > 0
-    pd.testing.assert_frame_equal(
-        normalize(got), normalize(want),
-        check_dtype=False, check_exact=True,
-    )
+    parity_compare(name)

@@ -134,14 +134,24 @@ def test_top_tokens_plan_is_take_ordered(spark):
 
 
 def test_winnow_rolling_matches_expression_path(spark, docs):
-    """The mapInPandas rolling-hash winnower must reproduce the
-    expression path's fingerprint set exactly — and with no shuffle in
-    its plan (the whole point: per-doc local computation)."""
-    expr_fps = {(r.doc_id, r.fingerprint)
-                for r in ta.winnow_fingerprints(docs).collect()}
-    roll = ta.winnow_fingerprints_rolling(docs)
-    roll_fps = {(r.doc_id, r.fingerprint) for r in roll.collect()}
-    assert roll_fps == expr_fps and len(expr_fps) > 0
+    """The rolling-hash winnower's deque minimum must reproduce the
+    textbook definition — the distinct minimum of every full window of
+    w consecutive k-gram hashes, recomputed here window by window — and
+    its plan must have no shuffle (each doc is winnowed where it sits)."""
+    import re
+
+    k, w = ta.WINNOW_K, ta.WINNOW_W
+    want = set()
+    for r in docs.select("doc_id", "text").collect():
+        norm = re.sub(r"[ \t\n\x0b\f\r]+", " ", r.text.lower()).strip(" ")
+        hs = [
+            int(hashlib.md5(norm[i : i + k].encode()).hexdigest()[:15], 16)
+            for i in range(len(norm) - k + 1)
+        ]
+        want |= {(r.doc_id, min(hs[i : i + w])) for i in range(len(hs) - w + 1)}
+    roll = ta.winnow_fingerprints(docs)
+    got = {(r.doc_id, r.fingerprint) for r in roll.collect()}
+    assert got == want and len(want) > 0
     plan = roll._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 import re
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -51,8 +52,6 @@ def main() -> int:
         if name_filter and not re.search(name_filter, name):
             continue
         n_selected += 1
-        import time
-
         t0 = time.monotonic()
         try:
             out = fn(spark, sf_dir)
@@ -73,18 +72,21 @@ def main() -> int:
                       f"{nested} — project to scalars (concat_ws)")
                 continue
             sdf = out.toPandas()
+            spark_s = time.monotonic() - t0
         except Exception as exc:
             failures.append(name)
             print(f"FAIL {name}: spark error: {exc}")
             continue
         if name not in oracles:
             print(f"ok   {name}: rows-only, {len(sdf)} rows "
-                  f"({time.monotonic() - t0:.1f}s)")
+                  f"(spark {spark_s:.1f}s)")
             if len(sdf) == 0:
                 print(f"WARN {name}: 0 rows")
             continue
+        t1 = time.monotonic()
         try:
             ddf = con.sql(oracles[name]).df()
+            oracle_s = time.monotonic() - t1
         except Exception as exc:
             failures.append(name)
             print(f"FAIL {name}: oracle error: {exc}")
@@ -107,7 +109,7 @@ def main() -> int:
             print(f"FAIL {name}: {'; '.join(status)}")
         else:
             print(f"ok   {name}: {len(sdf)} rows exact-match "
-                  f"({time.monotonic() - t0:.1f}s)")
+                  f"(spark {spark_s:.1f}s, oracle {oracle_s:.1f}s)")
     print(f"\n{n_selected - len(failures)}/{n_selected} selected pass "
           f"({len(qs)} in catalog)")
     if n_selected == 0:

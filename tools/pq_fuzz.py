@@ -1,23 +1,21 @@
 """Differential fuzz for the PQ / IVF-ADC / SDC distance algebra
 (r10 verdict item 6, first half).
 
-The r10 PQ arc (s11 product quantization, s13/s13_fast IVF-ADC,
-d20 SDC dedup cascade) is oracle-gated only at the fixture geometry
-(dim=64, 4 subspaces, 8 codes, 16 md5 anchors).  This fuzzer drives
-the SAME production functions through random geometries and corpora
-and checks them three ways per seed:
+The PQ arc (s11 product quantization, s13 IVF-ADC, d20 SDC dedup
+cascade) is oracle-gated only at the fixture geometry (dim=64,
+4 subspaces, 8 codes, 16 md5 anchors).  This fuzzer drives the SAME
+production functions through random geometries and corpora and
+checks them against an INDEPENDENT pure-Python int/float reference —
+cell via the sequential IEEE double fold + lowest-index argmax, codes
+via exact int64 fixed-point argmin with the lowest-code tie rule:
 
-1. `pq_cell_codes_fast` (the mapInArrow twin) against an INDEPENDENT
-   pure-Python int/float reference — cell via the sequential IEEE
-   double fold + lowest-index argmax, codes via exact int64
-   fixed-point argmin with the lowest-code tie rule;
-2. `product_quantize` + `ivf_cell` (the expression form) against the
-   same reference — together 1+2 prove the twin contract without the
-   twins ever seeing each other;
-3. alternating by seed: `knn_ivf_pq` (both fast=True/False) against a
-   reference ADC top-k (per-query LUT + row_number tie semantics), or
-   `pq_dedup_cascade` against a reference cell-blocked SDC->exact
-   sweep with seed-drawn bounds.
+1. every seed: `pq_cell_codes` (the mapInArrow corpus coder behind
+   s13 and d20);
+2. rotating by seed: `product_quantize` codes (s11) and an `ivf_cell`
+   projection; or `knn_ivf_pq` against a reference ADC top-k
+   (per-query LUT + row_number tie semantics); or `pq_dedup_cascade`
+   against a reference cell-blocked SDC->exact sweep with seed-drawn
+   bounds.
 
 Corpus regimes stress the corners the fixtures never hit: duplicate
 vectors (argmin/argmax ties), exact-codeword vectors (zero distance),
@@ -290,38 +288,36 @@ def main() -> int:
         }
         code_cols = [f"code_s{s}" for s in range(subspaces)]
 
-        # 1. mapInArrow twin vs reference — every seed (cheap plan)
-        fast = sim.pq_cell_codes_fast(emb, anchors, subspaces, codes, dim)
-        got_fast = frame_rows(fast.select("vec_id", "_cell", *code_cols))
-        if got_fast != expected_corpus:
-            return ("corpus_fast", f"{sorted(got_fast ^ expected_corpus)[:4]}")
+        # 1. mapInArrow corpus coder vs reference — every seed
+        coded = sim.pq_cell_codes(emb, anchors, subspaces, codes, dim)
+        got = frame_rows(coded.select("vec_id", "_cell", *code_cols))
+        if got != expected_corpus:
+            return ("pq_cell_codes", f"{sorted(got ^ expected_corpus)[:4]}")
 
         corpus_rows = [
             (i, exp_cells[i], exp_codes[i]) for i in range(n)
         ]
 
-        # the expression-form plans cost ~10x the mapInArrow plan to
-        # BUILD (py4j), so the three expression legs rotate by seed:
-        # 0,2 mod 4 -> expression corpus codes; 1 mod 4 -> IVF-ADC
-        # end-to-end (both engines); 3 mod 4 -> SDC dedup cascade
+        # the expression plans (product_quantize, ivf_cell) cost ~10x
+        # the mapInArrow plan to BUILD (py4j), so the second leg
+        # rotates by seed: 0,2 mod 4 -> expression codes and cells;
+        # 1 mod 4 -> IVF-ADC end-to-end; 3 mod 4 -> SDC dedup cascade
         leg = seed % 4
         if leg in (0, 2):
-            expr = sim.product_quantize(
-                emb.withColumn(
-                    "_cell", sim.ivf_cell(F.col("embedding"), anchors)
-                ),
-                subspaces,
-                codes,
-                keep_cols=("_cell",),
-                dim=dim,
+            pq = sim.product_quantize(emb, subspaces, codes, dim=dim)
+            got = frame_rows(pq.select("vec_id", *code_cols))
+            want = {(i, *[int(c) for c in exp_codes[i]]) for i in range(n)}
+            if got != want:
+                return ("product_quantize", f"{sorted(got ^ want)[:4]}")
+            cells_df = emb.select(
+                "vec_id", sim.ivf_cell(F.col("embedding"), anchors)
             )
-            got_expr = frame_rows(expr.select("vec_id", "_cell", *code_cols))
-            if got_expr != expected_corpus:
-                return (
-                    "corpus_expr", f"{sorted(got_expr ^ expected_corpus)[:4]}"
-                )
+            got = frame_rows(cells_df)
+            want = {(i, int(exp_cells[i])) for i in range(n)}
+            if got != want:
+                return ("ivf_cell", f"{sorted(got ^ want)[:4]}")
         elif leg == 1:
-            # IVF-ADC end-to-end, both engines, vs reference top-k
+            # IVF-ADC end-to-end vs reference top-k
             k = rng.randint(1, 6)
             n_q = rng.randint(1, 4)
             qids = rng.sample(range(n), min(n_q, n))
@@ -335,19 +331,14 @@ def main() -> int:
                         sub, probes, k,
                     )
                 )
-            for fast_flag in (False, True):
-                got = frame_rows(
-                    sim.knn_ivf_pq(
-                        emb, queries, k=k, probes=probes, anchors=anchors,
-                        fast=fast_flag, subspaces=subspaces, codes=codes,
-                        dim=dim,
-                    )
+            got = frame_rows(
+                sim.knn_ivf_pq(
+                    emb, queries, k=k, probes=probes, anchors=anchors,
+                    subspaces=subspaces, codes=codes, dim=dim,
                 )
-                if got != expected_knn:
-                    return (
-                        f"knn_fast={fast_flag}",
-                        f"{sorted(got ^ expected_knn)[:4]}",
-                    )
+            )
+            if got != expected_knn:
+                return ("knn_ivf_pq", f"{sorted(got ^ expected_knn)[:4]}")
         else:
             # SDC dedup cascade vs reference sweep
             tables = sim.pq_sdc_tables(subspaces, codes, dim)

@@ -236,7 +236,7 @@ def suite(
 
     return {
         "conversion": conv,
-        "winnow_rolling": lambda: _noop(ta.winnow_fingerprints_rolling(docs)),
+        "winnow_fingerprints": lambda: _noop(ta.winnow_fingerprints(docs)),
         "dup_clusters_salted": lambda: _noop(
             dedup.dup_clusters(
                 dedup.minhash_pairs(salted, threshold=0.5),
@@ -283,9 +283,6 @@ def suite(
         "kmeans_fixed": lambda: _noop(
             _catalog()["s08_kmeans_fixed"].spark(spark, sf_dir)
         ),
-        "kmeans_fixed_fast": lambda: _noop(
-            _catalog()["s08_kmeans_fixed_fast"].spark(spark, sf_dir)
-        ),
         "ngram_novelty": lambda: _noop(
             _catalog()["x40_ngram_novelty"].spark(spark, sf_dir)
         ),
@@ -301,14 +298,8 @@ def suite(
         "gram_matrix": lambda: _noop(
             _catalog()["s10_gram_matrix"].spark(spark, sf_dir)
         ),
-        "gram_matrix_fast": lambda: _noop(
-            _catalog()["s10_gram_matrix_fast"].spark(spark, sf_dir)
-        ),
         "centroid_confusion": lambda: _noop(
             _catalog()["s05_nearest_centroid_confusion"].spark(spark, sf_dir)
-        ),
-        "centroid_confusion_fast": lambda: _noop(
-            _catalog()["s05_nearest_centroid_confusion_fast"].spark(spark, sf_dir)
         ),
         "ipc_writer": lambda: _catalog()["ipc3_writer_roundtrip"].spark(
             spark, sf_dir
@@ -351,15 +342,6 @@ def suite(
                 emb, queries, k=5, anchors=ivf_anchors(cells=knn_cells)
             )
         ),
-        "knn_ivf_pq_fast_fixed_queries": lambda: _noop(
-            __import__(
-                "tabular_to_parquet_spark.operators.similarity",
-                fromlist=["knn_ivf_pq"],
-            ).knn_ivf_pq(
-                emb, queries, k=5, anchors=ivf_anchors(cells=knn_cells),
-                fast=True,
-            )
-        ),
         # WARC leg: distributed write (32 parts at replica scale) then
         # read+extract — measures BOTH halves of the archive path
         "warc_write_read": lambda: _warc_leg(spark, sf_dir, work),
@@ -387,10 +369,9 @@ def suite(
         # d20 with the PRODUCTION sizing knob (r11 verdict item 3):
         # anchors = suggest_cells(n, 512/cell) instead of the catalog's
         # fixed 16 — the knob that keeps Σ|cell|² bounded as the corpus
-        # grows. fast=True (mapInArrow coding) because thousands of
-        # anchors cannot ride the unrolled-literal expression path;
-        # bit-identical by the pq_fuzz twin contract. Runs the
-        # emb-salted replica like the fixed-cell row above it.
+        # grows; the one mapInArrow corpus coder takes thousands of
+        # anchors as a batch matmul. Runs the emb-salted replica like
+        # the fixed-cell row above it.
         "pq_dedup_cascade_scaledcells": lambda: _noop(
             __import__(
                 "tabular_to_parquet_spark.operators.similarity",
@@ -410,7 +391,6 @@ def suite(
                         min_cells=16,
                     )
                 ),
-                fast=True,
             )
         ),
         # r11-new queries (r11 verdict item 4). d22 + d21 run the

@@ -212,9 +212,7 @@ def run_suite(spark, sf_dir: str, name_regex: str = "") -> dict[str, float]:
         "r8_session_paths": q("a39_session_paths"),
         "r8_ipc_writer": q("ipc3_writer_roundtrip"),
         "r8_gram_matrix": q("s10_gram_matrix"),
-        "r8_gram_matrix_fast": q("s10_gram_matrix_fast"),
-        "r8_centroid_confusion_fast": q("s05_nearest_centroid_confusion_fast"),
-        "r8_kmeans_fixed_fast": q("s08_kmeans_fixed_fast"),
+        "r8_centroid_confusion": q("s05_nearest_centroid_confusion"),
     })
     if name_regex:
         import re as _re

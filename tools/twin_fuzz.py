@@ -1,20 +1,24 @@
-"""Differential fuzz for the mapInArrow scale twins (s05/s08/s10).
+"""Differential fuzz of the s05/s08/s10 catalog entries against their
+DuckDB oracles over random embedding corpora.
 
-The `_fast` twins (operators/similarity.py: nearest_centroid_confusion_fast,
-kmeans_fixed_fast, gram_matrix_fast) claim BIT-EXACT equality with their
-explode/join expression forms at any corpus size — that claim is
-oracle-gated on the fixed test tables, but the failure modes live in the
-corners the fixtures don't hit: odd dims, tiny corpora (fewer vectors
-than k), duplicate/identical vectors (cluster collapse, argmin ties),
-empty clusters, single-partition vs many-partition splits (the partial
-→ merge path), zero vectors, and negative / large-magnitude coordinates.
+The catalog entries (operators/similarity.py: nearest_centroid_confusion,
+kmeans_fixed, gram_matrix — one ``mapInArrow`` form each) claim
+BIT-EXACT equality with their oracles at any corpus size. The catalog
+gates that claim only on the fixed test tables; the failure modes live
+in the corners the fixtures don't hit: odd dims, tiny corpora (fewer
+vectors than k), duplicate/identical vectors (cluster collapse, argmin
+ties), empty clusters, single-partition vs many-partition splits (the
+partial → merge path), zero vectors, and negative / large-magnitude
+coordinates.
 
 Each seed synthesizes a random corpus (vector count, dim, partition
 split, label pattern, duplicate/degenerate-vector mixture all drawn
-from the seed), runs BOTH catalog entries of each pair through the
-production code paths (extensions._emb is monkeypatched to serve the
-in-memory corpus — no parquet round-trip, same query bodies the driver
-certifies), and asserts exact frame equality.
+from the seed). The Spark side runs the catalog entry through the
+production code path (extensions._emb is monkeypatched to serve the
+in-memory corpus — no parquet round-trip, the same query bodies the
+driver certifies); the DuckDB side registers the same corpus as
+``embeddings`` and runs ``CATALOG[name].oracle``. The two frames must
+be equal exactly, compared as tools/check_parity.py compares them.
 
 Usage: python tools/twin_fuzz.py [n_seeds] [seed0]
 """
@@ -30,14 +34,14 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-PAIRS = [
-    ("s10_gram_matrix", "s10_gram_matrix_fast"),
-    ("s05_nearest_centroid_confusion", "s05_nearest_centroid_confusion_fast"),
-    ("s08_kmeans_fixed", "s08_kmeans_fixed_fast"),
+QUERIES = [
+    "s10_gram_matrix",
+    "s05_nearest_centroid_confusion",
+    "s08_kmeans_fixed",
 ]
 
 
-def gen_corpus(seed: int) -> pd.DataFrame:
+def gen_corpus(seed: int) -> tuple[pd.DataFrame, int]:
     rng = random.Random(seed)
     n = rng.randint(3, 90)
     dim = rng.choice([2, 3, 5, 8, 16, 31, 64])
@@ -77,21 +81,22 @@ def gen_corpus(seed: int) -> pd.DataFrame:
     ), rng.randint(1, 8)
 
 
-def frame_key(df: pd.DataFrame) -> list[tuple]:
-    df = df.reindex(sorted(df.columns), axis=1)
-    rows = [tuple(r) for r in df.itertuples(index=False)]
-    return sorted(rows, key=repr)
+def sorted_frame(df: pd.DataFrame, normalize) -> pd.DataFrame:
+    df = normalize(df)
+    return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
 def main() -> int:
     n_seeds = int(sys.argv[1]) if len(sys.argv) > 1 else 100
     seed0 = int(sys.argv[2]) if len(sys.argv) > 2 else 0
-    n_threads = int(os.environ.get("TWIN_FUZZ_THREADS", "8"))
+    n_threads = int(os.environ.get("TWIN_FUZZ_THREADS", "4"))
 
     from concurrent.futures import ThreadPoolExecutor
 
+    import duckdb
     from pyspark.sql import types as T
 
+    from check_parity import normalize
     from tabular_to_parquet_spark.parity import extensions
     from tabular_to_parquet_spark.parity.catalog import CATALOG
     from tabular_to_parquet_spark.session import get_spark
@@ -123,29 +128,32 @@ def main() -> int:
         df = spark.createDataFrame(pdf, schema=schema).repartition(parts)
         df.persist()
         corpora[key] = df
+        con = duckdb.connect()
+        # embedding lands as DOUBLE[]: the float32 values convert
+        # exactly, and every oracle casts its elements to DOUBLE
+        con.register("embeddings", pdf)
         try:
-            for slow_name, fast_name in PAIRS:
+            for name in QUERIES:
                 try:
-                    slow = frame_key(
-                        CATALOG[slow_name].spark(spark, key).toPandas()
+                    got = sorted_frame(
+                        CATALOG[name].spark(spark, key).toPandas(), normalize
                     )
-                    fast = frame_key(
-                        CATALOG[fast_name].spark(spark, key).toPandas()
+                    want = sorted_frame(
+                        con.sql(CATALOG[name].oracle).df(), normalize
+                    )
+                    pd.testing.assert_frame_equal(
+                        got, want, check_dtype=False, check_exact=True
+                    )
+                except AssertionError as exc:
+                    failures.append(
+                        (seed, name, f"mismatch: {str(exc).splitlines()[-1][:160]}")
                     )
                 except Exception as exc:  # noqa: BLE001
                     failures.append(
-                        (seed, slow_name, f"error: {str(exc).splitlines()[0][:160]}")
-                    )
-                    continue
-                if slow != fast:
-                    diff = [
-                        (a, b) for a, b in zip(slow, fast) if a != b
-                    ][:3]
-                    failures.append(
-                        (seed, slow_name,
-                         f"mismatch rows={len(slow)}/{len(fast)} first={diff}")
+                        (seed, name, f"error: {str(exc).splitlines()[0][:160]}")
                     )
         finally:
+            con.close()
             corpora.pop(key, None)
             df.unpersist()
         done[0] += 1
@@ -160,7 +168,10 @@ def main() -> int:
 
     for seed, name, reason in failures:
         print(f"FAIL seed={seed} {name}: {reason}")
-    print(f"{n_seeds - len(set(f[0] for f in failures))}/{n_seeds} twin seeds match")
+    print(
+        f"{n_seeds - len(set(f[0] for f in failures))}/{n_seeds} seeds match "
+        "their oracles"
+    )
     return 1 if failures else 0
 
 
