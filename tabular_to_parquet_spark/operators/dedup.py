@@ -739,6 +739,15 @@ def _propagate_min_label(
     )
 
 
+def _label_sum(labels: DataFrame):
+    """Exact sum of the labels. A round only lowers labels (each is
+    ``least(own, neighbours)``), so an unchanged sum means no label
+    changed — the convergence test without re-joining two rounds."""
+    return labels.agg(
+        F.sum(F.col("cluster_id").cast("decimal(38,0)"))
+    ).first()[0]
+
+
 def dup_clusters_fixpoint(
     pairs: DataFrame,
     ids: DataFrame,
@@ -746,7 +755,7 @@ def dup_clusters_fixpoint(
     max_iters: int = 20,
 ) -> DataFrame:
     """:func:`dup_clusters` iterated to convergence: min-label rounds
-    until no label changes (the driver checks one count per round —
+    until no label changes (the driver checks one label sum per round —
     the standard distributed connected-components loop; O(diameter)
     rounds, each fully parallel). ``localCheckpoint`` truncates the
     per-round lineage so late rounds don't replay the whole chain.
@@ -758,38 +767,19 @@ def dup_clusters_fixpoint(
     labels = ids.select(
         F.col(id_col), F.col(id_col).alias("cluster_id")
     ).localCheckpoint()
+    prev = _label_sum(labels)
     for _ in range(max_iters):
-        nxt = _propagate_min_label(edges, labels, id_col).localCheckpoint()
-        changed = (
-            labels.alias("a")
-            .join(nxt.alias("b"), id_col)
-            .where(F.col("a.cluster_id") != F.col("b.cluster_id"))
-            .count()
-        )
-        labels = nxt
-        if changed == 0:
+        labels = _propagate_min_label(edges, labels, id_col).localCheckpoint()
+        cur = _label_sum(labels)
+        if cur == prev:
             break
+        prev = cur
     else:
         raise RuntimeError(
             f"dup_clusters_fixpoint did not converge within "
             f"max_iters={max_iters}; raise max_iters for this graph"
         )
     return labels
-
-
-def semantic_dedup(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.7,
-    anchors: list[list[float]] | None = None,
-) -> DataFrame:
-    """Drop every vector that has a smaller-id near-duplicate in its
-    cell (one deterministic pass — the greedy keep-lowest-id variant of
-    SemDeDup's one-representative-per-cluster; no iterative closure)."""
-    pairs = semantic_dup_pairs(df, vec_col, id_col, threshold, anchors)
-    dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(dropped, on=id_col, how="left_anti")
 
 
 # ---------------------------------------------------------------------------

@@ -750,51 +750,6 @@ def decode_mjpeg_video_features(df: DataFrame) -> DataFrame:
     return df.mapInPandas(batches, VIDEO_FEATURE_SCHEMA)
 
 
-def decode_image_features_arrow(df: DataFrame) -> DataFrame:
-    """``mapInArrow`` twin of :func:`decode_image_features`: consumes
-    pyarrow RecordBatches directly — no pandas materialization of the
-    binary payload column on either side of the UDF boundary. Same
-    output values (equivalence test-gated); the Arrow path removes the
-    pandas Series boxing for large binary columns, which is the
-    dominant serialization cost when payloads are MBs, not KBs."""
-    import pyarrow as pa
-
-    def batches(it):
-        for batch in it:
-            mids = batch.column("media_id").to_pylist()
-            payloads = batch.column("payload").to_pylist()
-            cols = {"media_id": [], "width": [], "height": [],
-                    "r_sum": [], "g_sum": [], "b_sum": [], "decoded": []}
-            for mid, payload in zip(mids, payloads):
-                img = _try_decode(payload)
-                cols["media_id"].append(mid)
-                if img is None:
-                    for k in ("width", "height", "r_sum", "g_sum", "b_sum"):
-                        cols[k].append(None)
-                    cols["decoded"].append(False)
-                    continue
-                w, h, rgb = img
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["r_sum"].append(sum(rgb[0::3]))
-                cols["g_sum"].append(sum(rgb[1::3]))
-                cols["b_sum"].append(sum(rgb[2::3]))
-                cols["decoded"].append(True)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "media_id": pa.array(cols["media_id"], pa.int64()),
-                    "width": pa.array(cols["width"], pa.int64()),
-                    "height": pa.array(cols["height"], pa.int64()),
-                    "r_sum": pa.array(cols["r_sum"], pa.int64()),
-                    "g_sum": pa.array(cols["g_sum"], pa.int64()),
-                    "b_sum": pa.array(cols["b_sum"], pa.int64()),
-                    "decoded": pa.array(cols["decoded"], pa.bool_()),
-                }
-            )
-
-    return df.mapInArrow(batches, IMG_FEATURE_SCHEMA)
-
-
 AHASH_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), True),

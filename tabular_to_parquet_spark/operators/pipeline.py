@@ -503,9 +503,8 @@ def build_fingerprint_index(
     """Materialize the corpus's DISTINCT content fingerprints as a
     parquet table hash-BUCKETED by ``fp``.
 
-    The nightly-refresh trick :func:`dedup_against` names, made real
-    (same pattern as similarity.build_ivf_index): the corpus — the big
-    side — is written once; every subsequent batch anti-join reads it
+    The nightly-refresh trick :func:`dedup_against` names, made real:
+    the corpus — the big side — is written once; every subsequent batch anti-join reads it
     WITHOUT an Exchange, because the bucketed layout already satisfies
     the join's required distribution. Only the (small) batch side
     shuffles to meet the buckets. At 100 TB the index is one short row
@@ -771,39 +770,6 @@ def merge_partial_aggregates(
         .groupBy(*keys)
         .agg(*[F.sum(c).cast("long").alias(c) for c in value_cols])
     )
-
-
-def compact_parquet_dir(
-    spark,
-    input_dir: str,
-    output_dir: str,
-    target_file_mb: int = 128,
-) -> int:
-    """Small-files compaction for streaming sinks: rewrite a parquet
-    directory into ~``target_file_mb`` files, preserving rows exactly.
-
-    Streaming ingest (st1/st2) emits one file per micro-batch; at
-    100 TB/day that is thousands of KB-sized files whose footer/open
-    costs dominate later scans.  File count = ceil(total_bytes /
-    target) from the source directory's actual size — a metadata-only
-    estimate (no data pass); the rewrite itself is one shuffle-free
-    coalesce.  Returns the file count used.  The swap into place is
-    left to the caller (rename/retire), where a transactional table
-    format would make it atomic."""
-    import math
-    import os
-
-    total = 0
-    for root, _dirs, files in os.walk(input_dir):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, f))
-    n_files = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(input_dir)
-    df.coalesce(n_files).write.mode("overwrite").option(
-        "compression", "zstd"
-    ).parquet(output_dir)
-    return n_files
 
 
 def temperature_mixture(
@@ -1102,7 +1068,6 @@ def gd_linear_regressor(
     feature_cols: list[str],
     label_col: str = "y",
     rounds: int = 5,
-    sentinel: bool = True,
 ) -> DataFrame:
     """Train a linear regressor by batch gradient descent ENTIRELY
     in-plan — the distributed model-training primitive of a curation
@@ -1189,18 +1154,7 @@ def gd_linear_regressor(
     trades of a checkpointed run: building the result frame becomes
     EAGER (the checkpointed rounds execute at call time), and
     localCheckpoint is executor-local — a lost executor cannot replay
-    it.
-
-    ``sentinel=False`` (r13 verdict item 7) is the pre-certified-
-    corpus fast path: it drops the per-round ``max(abs(resid))``
-    aggregate column and every ok/poison projection (the r12 plan
-    shape, ~30% cheaper on pl37).  CONTRACT: the caller has already
-    certified — e.g. via tools/gd_fuzz.traj_in_envelope or a domain
-    bound — that the corpus's ACTUAL trajectory keeps every
-    ``|resid| < 2^53`` and every ``|grad_j| < 2^53 - n`` for all
-    ``rounds``; outside that envelope this path recreates the silent
-    [2^53, 2^63) wrong-weights window the sentinel exists to close.
-    Inside the envelope both paths are bit-identical (test-pinned)."""
+    it."""
     pre = feats.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.max(
@@ -1230,7 +1184,7 @@ def gd_linear_regressor(
     wt = feats.sparkSession.range(1).select(
         *[F.lit(0).cast("long").alias(f"w{j}") for j in range(len(feature_cols))],
         F.lit(n).cast("long").alias("n"),
-        *([F.lit(True).alias("ok")] if sentinel else []),
+        F.lit(True).alias("ok"),
     )
     two_s = 1 << GD_W_SCALE
     fdiv_exact = F.lit(1 << 53).cast("long")  # _pmod_floordiv exactness bound
@@ -1255,7 +1209,7 @@ def gd_linear_regressor(
             .alias("loss"),
             # overflow sentinel: the round's actual max |residual| —
             # the fdiv numerators' envelope witness (docstring)
-            *([F.max(aresid).alias("mr")] if sentinel else []),
+            F.max(aresid).alias("mr"),
         )
 
         def upd(j: int) -> Column:
@@ -1264,67 +1218,48 @@ def gd_linear_regressor(
                 F.lit(1 << GD_LR_SHIFT),
             )
 
-        if sentinel:
-            # valid iff every prior round was AND this round's actual
-            # residuals and gradients stay inside the 2^53
-            # fdiv-exactness envelope (values in [2^53, 2^63) compute
-            # silently-wrong floor divisions; >= 2^63 raises under
-            # ANSI).  The gradient bound is 2^53 - n, not 2^53: the
-            # /n fdiv's numerator d_j - pm exceeds |d_j| by up to
-            # n - 1 for negative d_j (docstring, r13 ADVICE)
-            ok_now = F.col("ok") & (F.col("mr") < fdiv_exact)
-            for j in range(len(feature_cols)):
-                ok_now = ok_now & (
-                    F.abs(F.col(f"d{j}")) < fdiv_exact - F.col("n")
-                )
-            new = delta.crossJoin(F.broadcast(wt)).select(
-                *[
-                    # freeze on poison: carrying the last valid weights
-                    # keeps every post-breach round's arithmetic inside
-                    # int64 (the poisoned plan must still execute)
-                    F.when(ok_now, upd(j))
-                    .otherwise(F.col(f"w{j}"))
-                    .alias(f"w{j}")
-                    for j in range(len(feature_cols))
-                ],
-                "loss",
-                "n",
-                ok_now.alias("ok"),
+        # valid iff every prior round was AND this round's actual
+        # residuals and gradients stay inside the 2^53
+        # fdiv-exactness envelope (values in [2^53, 2^63) compute
+        # silently-wrong floor divisions; >= 2^63 raises under
+        # ANSI).  The gradient bound is 2^53 - n, not 2^53: the
+        # /n fdiv's numerator d_j - pm exceeds |d_j| by up to
+        # n - 1 for negative d_j (docstring, r13 ADVICE)
+        ok_now = F.col("ok") & (F.col("mr") < fdiv_exact)
+        for j in range(len(feature_cols)):
+            ok_now = ok_now & (
+                F.abs(F.col(f"d{j}")) < fdiv_exact - F.col("n")
             )
-            if ck_every and t % ck_every == 0 and t < rounds:
-                # 1-row state: truncates the static plan (docstring);
-                # values unchanged, the weights are deterministic ints
-                new = new.localCheckpoint()
-            row = new.select(
-                F.lit(t).cast("long").alias("round"),
-                *[
-                    F.when(F.col("ok"), F.col(f"w{j}")).alias(f"w{j}")
-                    for j in range(len(feature_cols))
-                ],
-                F.when(F.col("ok"), F.col("loss")).alias(
-                    "sum_abs_resid_scaled"
-                ),
-            )
-            wt = new.select(
-                *[f"w{j}" for j in range(len(feature_cols))], "n", "ok"
-            )
-        else:
-            # pre-certified fast path (docstring contract): no mr
-            # aggregate, no ok algebra — the exact r12 plan shape
-            new = delta.crossJoin(F.broadcast(wt)).select(
-                *[upd(j).alias(f"w{j}") for j in range(len(feature_cols))],
-                "loss",
-                "n",
-            )
-            if ck_every and t % ck_every == 0 and t < rounds:
-                new = new.localCheckpoint()
-            row = new.select(
-                F.lit(t).cast("long").alias("round"),
-                *[f"w{j}" for j in range(len(feature_cols))],
-                F.col("loss").alias("sum_abs_resid_scaled"),
-            )
-            wt = new.select(
-                *[f"w{j}" for j in range(len(feature_cols))], "n"
-            )
+        new = delta.crossJoin(F.broadcast(wt)).select(
+            *[
+                # freeze on poison: carrying the last valid weights
+                # keeps every post-breach round's arithmetic inside
+                # int64 (the poisoned plan must still execute)
+                F.when(ok_now, upd(j))
+                .otherwise(F.col(f"w{j}"))
+                .alias(f"w{j}")
+                for j in range(len(feature_cols))
+            ],
+            "loss",
+            "n",
+            ok_now.alias("ok"),
+        )
+        if ck_every and t % ck_every == 0 and t < rounds:
+            # 1-row state: truncates the static plan (docstring);
+            # values unchanged, the weights are deterministic ints
+            new = new.localCheckpoint()
+        row = new.select(
+            F.lit(t).cast("long").alias("round"),
+            *[
+                F.when(F.col("ok"), F.col(f"w{j}")).alias(f"w{j}")
+                for j in range(len(feature_cols))
+            ],
+            F.when(F.col("ok"), F.col("loss")).alias(
+                "sum_abs_resid_scaled"
+            ),
+        )
+        wt = new.select(
+            *[f"w{j}" for j in range(len(feature_cols))], "n", "ok"
+        )
         out = row if out is None else out.unionAll(row)
     return out

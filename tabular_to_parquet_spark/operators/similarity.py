@@ -311,20 +311,14 @@ def ivf_corpus_frame(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     anchors: list[list[float]] | None = None,
-    vectorized: bool = False,
 ) -> DataFrame:
     """Corpus with its IVF cell assignment (one projection, no
-    shuffle). ``vectorized=True`` assigns cells with the batch-matmul
-    UDF (:func:`ivf_cell_vectorized`) — required once the anchor count
-    grows with the corpus (``suggest_cells``), where the literal-dot
-    expression unroll blows up Catalyst planning. The probe side stays
-    the expression form (|Q| is small and the assignments agree —
-    test-pinned), so oracle-gated queries keep the default."""
-    cell_fn = ivf_cell_vectorized if vectorized else ivf_cell
+    shuffle), assigned by :func:`ivf_cell` — the expression form the
+    oracle-gated queries reproduce."""
     return df.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
-        cell_fn(F.col(vec_col), anchors).alias("cell"),
+        ivf_cell(F.col(vec_col), anchors).alias("cell"),
         F.sqrt(dot_product(F.col(vec_col), F.col(vec_col))).alias("cn"),
     )
 
@@ -370,7 +364,6 @@ def knn_ivf(
     id_col: str = "vec_id",
     anchors: list[list[float]] | None = None,
     probes: int = IVF_PROBES,
-    vectorized: bool = False,
     corpus: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-style approximate top-k: the corpus is bucketed by nearest
@@ -387,10 +380,8 @@ def knn_ivf(
     pass :func:`kmeans_anchors` output for trained centroids — the
     plan does not change. Scale story: cell assignment is a projection
     (no shuffle); the join key is a small int with ~|C|/cells rows per
-    bucket — at 100 TB, raise IVF_CELLS so buckets stay executor-sized,
-    or materialize the corpus with :func:`build_ivf_index` so the probe
-    join is co-located (no corpus-side shuffle). Recall tunes with
-    IVF_PROBES.
+    bucket — at 100 TB, raise IVF_CELLS so buckets stay executor-sized.
+    Recall tunes with IVF_PROBES.
 
     Do NOT read the sf0.1 bench as the scale story: at 2k vectors
     brute force wins wall time (IVF pays 2-3 extra stages to prune a
@@ -401,7 +392,6 @@ def knn_ivf(
     the gap widens linearly in |C| from there.
     """
     if corpus is not None:
-        cell_fn = ivf_cell_vectorized if vectorized else ivf_cell
         # coalesce makes the join key provably NON-nullable (the cell
         # expression never actually yields null — element_at over a
         # 16-element literal array), so the probe join's implied
@@ -410,10 +400,10 @@ def knn_ivf(
         # legs' exchange subtrees differ and defeat ReusedExchange
         # (observed on the first s07 restructure attempt, r15)
         cframe = corpus.withColumn(
-            "cell", F.coalesce(cell_fn(F.col("cv"), anchors), F.lit(0))
+            "cell", F.coalesce(ivf_cell(F.col("cv"), anchors), F.lit(0))
         )
     else:
-        cframe = ivf_corpus_frame(df, vec_col, id_col, anchors, vectorized=vectorized)
+        cframe = ivf_corpus_frame(df, vec_col, id_col, anchors)
     return _ivf_probe_join(
         cframe, queries, k, vec_col, id_col, anchors, probes=probes,
     )
@@ -488,55 +478,6 @@ def tune_probes(
     return max_probes, best
 
 
-def build_ivf_index(
-    spark,
-    df: DataFrame,
-    table_name: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    anchors: list[list[float]] | None = None,
-    buckets: int = IVF_CELLS,
-    vectorized: bool = False,
-) -> None:
-    """Materialize the corpus as a parquet table BUCKETED BY cell.
-
-    The 100 TB probe path: the corpus (the big side) is written once,
-    hash-bucketed on the join key, so every subsequent probe join reads
-    it WITHOUT an Exchange — only the tiny exploded query side shuffles
-    to meet the bucket layout (verified by
-    test_ivf_bucketed_probe_join_corpus_shuffle_free).
-    """
-    from tabular_to_parquet_spark.sources.tables import reset_managed_table
-
-    reset_managed_table(spark, table_name)
-    (
-        ivf_corpus_frame(df, vec_col, id_col, anchors, vectorized=vectorized)
-        .write.mode("overwrite")
-        .bucketBy(buckets, "cell")
-        .sortBy("cell")
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
-def knn_ivf_bucketed(
-    spark,
-    table_name: str,
-    queries: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    anchors: list[list[float]] | None = None,
-    probes: int = IVF_PROBES,
-) -> DataFrame:
-    """Probe a :func:`build_ivf_index` table — same results as
-    :func:`knn_ivf`, corpus side co-located (no shuffle)."""
-    return _ivf_probe_join(
-        spark.table(table_name), queries, k, vec_col, id_col, anchors,
-        probes=probes,
-    )
-
-
 def knn_lsh(
     df: DataFrame,
     queries: DataFrame,
@@ -601,7 +542,6 @@ def knn_graph(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     anchors: list[list[float]] | None = None,
-    vectorized: bool = False,
 ) -> DataFrame:
     """Approximate kNN GRAPH: every vector's top-k cosine neighbors
     WITHIN its IVF cell — the self-join twin of :func:`knn_ivf` where
@@ -614,17 +554,15 @@ def knn_graph(
     one per-vector top-k window. Recall is cell-local by construction
     (a true neighbor in an adjacent cell is missed — the standard IVF
     trade; raise cells' probe overlap or re-rank offline where that
-    matters). At 100 TB use ``vectorized=True`` + ``suggest_cells`` so
-    cells stay executor-sized."""
+    matters). Cells come from :func:`ivf_cell`: one literal dot per
+    anchor, sized for the 16-anchor default."""
     # one explicit hash exchange on the cell id: both self-join sides
     # read the SAME materialized shuffle stage (ReusedExchange under
     # AQE), so the 16-anchor cell assignment + norm fold are evaluated
     # once instead of once per side (r14, guide §2.4) — and at corpus
     # scale the alternative the planner picked from tiny-SF stats was
     # broadcasting a corpus-sized side, which cannot survive 100 TB
-    c = ivf_corpus_frame(
-        df, vec_col, id_col, anchors, vectorized=vectorized
-    ).repartition("cell")
+    c = ivf_corpus_frame(df, vec_col, id_col, anchors).repartition("cell")
     a = c.select(
         F.col("neighbor_id").alias("src_id"),
         F.col("cv").alias("av"),
@@ -648,7 +586,9 @@ def knn_graph(
 def ivf_cell_vectorized(
     vec: Column, anchors: list[list[float]] | None = None
 ) -> Column:
-    """Arrow-batched numpy IVF cell assignment — the many-anchor path.
+    """Arrow-batched numpy IVF cell assignment — the cell assigner of
+    :func:`~tabular_to_parquet_spark.operators.dedup.semantic_dup_pairs`
+    ``fast=True``.
 
     :func:`ivf_cell` unrolls one literal-array dot per anchor into the
     projection; fine at 16 cells, but Catalyst planning cost and
@@ -659,8 +599,7 @@ def ivf_cell_vectorized(
     (B, d) @ (d, C) product, row argmax. numpy argmax takes the lowest
     index on ties — the same tie-break as the expression form; the
     matmul's sum order is NOT the sequential fold's (last-ulp), so
-    oracle-gated queries keep :func:`ivf_cell` and scale paths use
-    this."""
+    oracle-gated queries keep :func:`ivf_cell`."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf

@@ -38,15 +38,13 @@ def _bucket(tok, j: int, width: int):
     return md5_i64(tok, seed=f"cms{j}") % width
 
 
-def token_counts(
-    df: DataFrame, text_col: str = "text", lowercase: bool = True
-) -> DataFrame:
-    """(token, n) exact counts — the one corpus-sized shuffle."""
+def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """(token, n) exact counts of the lowercased tokens — the one
+    corpus-sized shuffle."""
     from tabular_to_parquet_spark.operators.text_analysis import tokens
 
-    src = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
     return (
-        df.select(F.explode(tokens(src)).alias("token"))
+        df.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )

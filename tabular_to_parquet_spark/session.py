@@ -32,35 +32,6 @@ def resolve_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def warm_codegen(*frames) -> float:
-    """Pre-compile whole-stage-codegen classes for the given plans by
-    executing them through the noop sink; returns seconds spent.
-
-    The one-shot wall time of codegen-heavy operators (minhash
-    signatures: 16 fused MIN aggregates; IVF: 16×64 literal dot
-    products) is dominated by one-time Janino compilation — measured at
-    sf0.01: minhash_pairs 8.0 s cold vs 2.4 s warm in the same JVM.
-    Janino's class cache is keyed on generated source, which depends on
-    plan STRUCTURE, not data volume — so build each frame over a tiny
-    slice of the real input (e.g. ``minhash_pairs(docs.limit(200))``)
-    and the real run reuses the compiled classes (measured: full run
-    after a 200-row warm = 2.5 s ≈ the 2.4 s fully-warm floor).
-
-    Do NOT build the warm plan over ``limit(0)``: Catalyst's
-    OptimizeLimitZero collapses it to an empty LocalRelation and most
-    stages are never generated. On a long-running cluster this matters
-    less (compilation amortizes); for latency-sensitive one-shot jobs,
-    call this at session start — e.g. while input data is still
-    landing.
-    """
-    import time
-
-    t0 = time.monotonic()
-    for df in frames:
-        df.write.format("noop").mode("overwrite").save()
-    return time.monotonic() - t0
-
-
 def parse_extra_conf(env_conf: str) -> tuple[dict[str, str], list[str]]:
     """Parse ``SPARK_GRAFT_EXTRA_CONF`` into ``(confs, malformed)``.
 

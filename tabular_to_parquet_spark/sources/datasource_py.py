@@ -78,38 +78,6 @@ class AvroContainerDataSource(DataSource):
 class AvroContainerReader(DataSourceReader):
     def __init__(self, path: str):
         self.path = path
-        self._pushed: list = []
-
-    def _row_predicate(self):
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            IsNotNull,
-            LessThan,
-            LessThanOrEqual,
-        )
-
-        checks = []
-        for f in self._pushed:
-            name = f.attribute[0]
-            if isinstance(f, IsNotNull):
-                checks.append(lambda r, n=name: r[n] is not None)
-            elif isinstance(f, EqualTo):
-                checks.append(lambda r, n=name, v=f.value: r[n] == v)
-            elif isinstance(f, GreaterThan):
-                checks.append(
-                    lambda r, n=name, v=f.value: r[n] is not None and r[n] > v)
-            elif isinstance(f, GreaterThanOrEqual):
-                checks.append(
-                    lambda r, n=name, v=f.value: r[n] is not None and r[n] >= v)
-            elif isinstance(f, LessThan):
-                checks.append(
-                    lambda r, n=name, v=f.value: r[n] is not None and r[n] < v)
-            elif isinstance(f, LessThanOrEqual):
-                checks.append(
-                    lambda r, n=name, v=f.value: r[n] is not None and r[n] <= v)
-        return lambda rec: all(c(rec) for c in checks)
 
     def partitions(self) -> list[InputPartition]:
         return [InputPartition(f) for f in _container_files(self.path)]
@@ -145,73 +113,10 @@ class AvroContainerReader(DataSourceReader):
             return lambda v: v
 
         convs = [(name, conv(kind)) for name, kind, _null in fields]
-        keep = self._row_predicate()
         for rec in iter_records(content):
-            if not keep(rec):
-                continue
             yield tuple(
                 None if rec[name] is None else c(rec[name]) for name, c in convs
             )
-
-
-class AvroPushdownReader(AvroContainerReader):
-    """AvroContainerReader + pushFilters: simple comparison filters on
-    non-temporal top-level columns are applied at DECODE time, so
-    filtered rows never cross the Python→JVM boundary; unsupported
-    filters are returned for Spark to evaluate. Spark re-applies
-    pushed filters above the scan anyway (the v2 contract allows
-    approximate sources) — this is purely a data-volume optimization.
-
-    Separate format name because implementing pushFilters requires
-    spark.sql.python.filterPushdown.enabled=true; the plain avro_py
-    format stays usable under default configs."""
-
-    def pushFilters(self, filters):
-        import io
-
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            IsNotNull,
-            LessThan,
-            LessThanOrEqual,
-        )
-
-        from tabular_to_parquet_spark.sources.avro_python import (
-            parse_record_schema,
-            read_header,
-        )
-
-        # the predicate runs on RAW decoded values — dates/timestamps
-        # are still epoch ints there, while Spark pushes datetime
-        # objects, so temporal columns are NOT pushable
-        comparable = {"boolean", "int", "long", "float", "double", "string"}
-        with open(_container_files(self.path)[0], "rb") as fh:
-            schema_json, _c, _s = read_header(io.BytesIO(fh.read()))
-        kinds = {n: k for n, k, _null in parse_record_schema(schema_json)}
-
-        supported = (EqualTo, GreaterThan, GreaterThanOrEqual,
-                     LessThan, LessThanOrEqual, IsNotNull)
-        rest = []
-        for f in filters:
-            if (isinstance(f, supported) and len(f.attribute) == 1
-                    and kinds.get(f.attribute[0]) in comparable):
-                self._pushed.append(f)
-            else:
-                rest.append(f)
-        return rest
-
-
-class AvroPushdownDataSource(AvroContainerDataSource):
-    """``format("avro_py_pd")`` — the pushdown-enabled reader."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "avro_py_pd"
-
-    def reader(self, schema) -> "AvroPushdownReader":
-        return AvroPushdownReader(self.options["path"])
 
 
 # ---------------------------------------------------------------------------

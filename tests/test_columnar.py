@@ -183,47 +183,6 @@ def test_python_datasource_avro_roundtrip(spark, tmp_path):
     ]
 
 
-def test_python_datasource_filter_pushdown(spark, tmp_path):
-    """pushFilters: comparison filters on non-temporal columns are
-    applied at decode time (rows never cross the Python boundary);
-    results equal the unfiltered frame filtered in Spark."""
-    import json as _json
-
-    import pandas as pd
-
-    from tabular_to_parquet_spark.sources import avro_python as ap
-    from tabular_to_parquet_spark.sources.datasource_py import (
-        AvroContainerDataSource,
-    )
-
-    pdf = pd.DataFrame({"a": list(range(20)), "s": [f"v{i%3}" for i in range(20)]})
-    schema = {"type": "record", "name": "t", "fields": [
-        {"name": "a", "type": ["null", "long"]},
-        {"name": "s", "type": ["null", "string"]},
-    ]}
-    fields = ap.parse_record_schema(_json.dumps(schema))
-    d = tmp_path / "avro"
-    d.mkdir()
-    ap.write_container(
-        str(d / "part0.avro"), schema, ap.pandas_to_records(pdf, fields)
-    )
-    from tabular_to_parquet_spark.sources.datasource_py import (
-        AvroPushdownDataSource,
-    )
-
-    spark.dataSource.register(AvroPushdownDataSource)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
-        df = spark.read.format("avro_py_pd").load(str(d))
-        got = sorted(
-            r["a"] for r in df.filter("a >= 10 AND s = 'v0'").collect()
-        )
-    finally:
-        spark.conf.unset("spark.sql.python.filterPushdown.enabled")
-    want = sorted(i for i in range(10, 20) if i % 3 == 0)
-    assert got == want
-
-
 def test_sqlite_datasource_partitions_and_types(spark, tmp_path):
     import sqlite3
 

@@ -359,14 +359,3 @@ def test_gif_codec_roundtrip_property(w, h, seed):
     rgb = b"".join(rng.choice(palette) for _ in range(w * h))
     data = encode_gif(w, h, rgb)
     assert decode_gif(data) == (w, h, rgb)
-
-
-def test_arrow_decode_twin_matches_pandas_path(spark):
-    docs = spark.createDataFrame([(i,) for i in range(1, 9)], ["doc_id"])
-    media = mm.attach_gif_payload(docs)
-    a = {r["media_id"]: r.asDict() for r in mm.decode_image_features(media).collect()}
-    b = {
-        r["media_id"]: r.asDict()
-        for r in mm.decode_image_features_arrow(media).collect()
-    }
-    assert a == b and len(a) == 8

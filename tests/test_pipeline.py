@@ -481,21 +481,6 @@ def test_snapshot_diff_merge_roundtrip(spark):
     }
 
 
-def test_compact_parquet_dir_preserves_rows(spark, tmp_path):
-    src = str(tmp_path / "many")
-    # 12 tiny files (streaming-sink shape)
-    spark.range(0, 1200).repartition(12).write.parquet(src)
-    import glob
-    assert len(glob.glob(src + "/*.parquet")) == 12
-    out = str(tmp_path / "compact")
-    n = pl.compact_parquet_dir(spark, src, out, target_file_mb=128)
-    assert n == 1  # tiny input → one target file
-    assert len(glob.glob(out + "/*.parquet")) == 1
-    a = sorted(r["id"] for r in spark.read.parquet(src).collect())
-    b = sorted(r["id"] for r in spark.read.parquet(out).collect())
-    assert a == b
-
-
 def test_zorder_layout_tightens_file_envelopes(spark, tmp_path):
     """The pruning claim, measured: writing files in zorder_key order
     must shrink the per-file (dim_a, dim_b) min/max envelope area —

@@ -2,9 +2,7 @@
 gradient bound tightens from |d_j| < 2^53 to |d_j| < 2^53 - n (the
 /n fdiv numerator d_j - pm with pm in [0, n) can exceed |d_j| by up
 to n - 1, so a negative d_j inside the old bound could still feed an
-inexact double division), and the pre-certified-corpus
-``sentinel=False`` fast path recovers the r12 plan shape while
-staying bit-identical inside the envelope."""
+inexact double division)."""
 
 from __future__ import annotations
 
@@ -56,26 +54,6 @@ def test_gd_sentinel_plan_embeds_tightened_grad_bound(spark):
     assert "cast(9007199254740992 as bigint) - n#" in plan
 
 
-def test_gd_sentinel_off_bit_identical_in_envelope(spark):
-    # verdict item 7: the pre-certified fast path must agree with the
-    # sentinel path on every emitted value inside the envelope
-    rows = [(3, -1, 7), (5, 2, 11), (-4, 1, -9), (2, 2, 4), (9, -3, 0)]
-    df = spark.createDataFrame(rows, "x0 long, x1 long, y long")
-    cols = ["x0", "x1"]
-
-    def vals(sentinel):
-        return [
-            tuple(r)
-            for r in gd_linear_regressor(
-                df, cols, rounds=5, sentinel=sentinel
-            )
-            .orderBy("round")
-            .collect()
-        ]
-
-    assert vals(False) == vals(True)
-
-
 def test_chunked_scan_repartition_survives_aqe_coalescing(spark):
     # r13 verdict item 4 / NEXT.md queue: the §20 huge-doc fix depends
     # on _char_windows_chunked's explicit round-robin repartition NOT
@@ -115,24 +93,3 @@ def test_chunked_scan_repartition_survives_aqe_coalescing(spark):
     for i, ln in enumerate(lines):
         if "AQEShuffleRead" in ln and i + 1 < len(lines):
             assert "RoundRobinPartitioning" not in lines[i + 1]
-
-
-def test_gd_sentinel_off_drops_mr_aggregate(spark):
-    # the fast path's whole point: no max(abs(resid)) column, no
-    # ok/poison projections — the r12 plan shape
-    df = spark.createDataFrame([(3, 7), (5, 11)], "x0 long, y long")
-    slow = (
-        gd_linear_regressor(df, ["x0"], rounds=2, sentinel=True)
-        ._jdf.queryExecution()
-        .analyzed()
-        .toString()
-    )
-    fast = (
-        gd_linear_regressor(df, ["x0"], rounds=2, sentinel=False)
-        ._jdf.queryExecution()
-        .analyzed()
-        .toString()
-    )
-    assert "mr" in slow and "ok" in slow
-    assert " mr" not in fast and "max(abs(" not in fast
-    assert " ok" not in fast

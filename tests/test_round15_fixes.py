@@ -155,7 +155,7 @@ def test_parse_extra_conf_separators_and_malformed(caplog, monkeypatch):
 
 def test_gd_checkpoint_rounds_bit_identical(spark):
     # above GD_LAZY_MAX_ROUNDS the carried state is checkpointed; that
-    # must not change a single emitted value, in either sentinel mode
+    # must not change a single emitted value
     from tabular_to_parquet_spark.operators.pipeline import (
         GD_LAZY_MAX_ROUNDS,
         gd_linear_regressor,
@@ -166,16 +166,11 @@ def test_gd_checkpoint_rounds_bit_identical(spark):
         "x0 long, x1 long, y long",
     )
     lazy_max = GD_LAZY_MAX_ROUNDS
-    for sent in (True, False):
-        lazy = gd_linear_regressor(
-            df, ["x0", "x1"], rounds=lazy_max, sentinel=sent
-        ).collect()
-        ck = gd_linear_regressor(
-            df, ["x0", "x1"], rounds=lazy_max + 1, sentinel=sent
-        ).collect()
-        assert len(ck) == lazy_max + 1
-        head = [r for r in ck if r["round"] <= lazy_max]
-        assert sorted(map(tuple, head)) == sorted(map(tuple, lazy))
+    lazy = gd_linear_regressor(df, ["x0", "x1"], rounds=lazy_max).collect()
+    ck = gd_linear_regressor(df, ["x0", "x1"], rounds=lazy_max + 1).collect()
+    assert len(ck) == lazy_max + 1
+    head = [r for r in ck if r["round"] <= lazy_max]
+    assert sorted(map(tuple, head)) == sorted(map(tuple, lazy))
 
 
 def test_gd_checkpoint_rounds_truncates_static_plan(spark):

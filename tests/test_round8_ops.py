@@ -239,21 +239,6 @@ def test_image_ahash_collides_for_identical_images(spark):
     assert out[4] == (None, None, False)
 
 
-def test_knn_ivf_vectorized_corpus_matches_expression(spark):
-    """knn_ivf with the batch-matmul corpus cell assigner returns the
-    same neighbors as the expression form (probe side unchanged)."""
-    from tabular_to_parquet_spark.operators.similarity import knn_ivf
-    from tabular_to_parquet_spark.sources.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    q = emb.filter(F.col("vec_id") % 50 == 0)
-    expr = {(r.query_id, r.rank): r.neighbor_id
-            for r in knn_ivf(emb, q, k=5).collect()}
-    vect = {(r.query_id, r.rank): r.neighbor_id
-            for r in knn_ivf(emb, q, k=5, vectorized=True).collect()}
-    assert expr == vect
-
-
 def test_kcore_raises_instead_of_returning_non_core(spark):
     """A long path needs one peel round per endpoint pair; exhausting
     max_iters must raise, never return a subgraph with degree < k."""

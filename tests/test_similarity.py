@@ -142,36 +142,6 @@ def test_kmeans_anchors_recall_at_equal_probe_cost(embeddings, queries):
     assert km_recall >= 0.3
 
 
-def test_ivf_bucketed_probe_join_corpus_shuffle_free(spark, embeddings, queries, tmp_path):
-    """build_ivf_index + knn_ivf_bucketed: identical results to knn_ivf,
-    and the bucketed corpus side reads without an Exchange (one fewer
-    shuffle than the unbucketed plan)."""
-    sim.build_ivf_index(spark, embeddings, "ivf_idx_test")
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        plain = sim.knn_ivf(embeddings, queries, k=5)
-        bucketed = sim.knn_ivf_bucketed(spark, "ivf_idx_test", queries, k=5)
-        assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, bucketed.collect()))
-
-        # at test scale Spark broadcasts the tiny query side (no shuffle
-        # on either side); the bucketing payoff is on the sort-merge path
-        # - the 100 TB shape where both sides are large - so pin SMJ
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        plain = sim.knn_ivf(embeddings, queries, k=5)
-        bucketed = sim.knn_ivf_bucketed(spark, "ivf_idx_test", queries, k=5)
-
-        def n_exchanges(df):
-            return df._jdf.queryExecution().executedPlan().toString().count("Exchange")
-
-        plan_b = bucketed._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in plan_b
-        # corpus side reads its bucket layout instead of shuffling
-        assert n_exchanges(bucketed) < n_exchanges(plain)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        spark.sql("DROP TABLE IF EXISTS ivf_idx_test")
-
-
 def test_tune_probes_meets_slo_and_is_minimal(embeddings, queries):
     # a loose SLO is satisfiable with few probes; the returned recall
     # must actually meet it, and fewer probes must NOT meet it
