@@ -150,11 +150,25 @@ def main(argv: list[str] | None = None) -> int:
         input_path = args.input
         output_path = args.output or derive_output_path(args.input)
 
-    from tabular_to_parquet_spark.operators.convert import OptionRefused, run_conversion
-    from tabular_to_parquet_spark.session import get_spark
+    from tabular_to_parquet_spark.session import get_spark, stop_spark
 
-    spark = get_spark("tabular_to_parquet_cli")
-    adapter = adapters[args.format](spark, input_path, args)
+    try:
+        spark = get_spark("tabular_to_parquet_cli")
+    except ValueError as exc:  # a malformed SPARK_GRAFT_* setting
+        print(f"error: {exc}", file=sys.stderr)
+        return 1
+    try:
+        return _convert(spark, adapters[args.format], args, input_path, output_path)
+    finally:
+        # wait for the JVM to exit, so that none outlives the command
+        stop_spark(spark)
+
+
+def _convert(spark, build_adapter, args, input_path: str, output_path: str) -> int:
+    """Run one conversion and print its banner; returns the exit status."""
+    from tabular_to_parquet_spark.operators.convert import OptionRefused, run_conversion
+
+    adapter = build_adapter(spark, input_path, args)
     try:
         res = run_conversion(
             spark,

@@ -25,6 +25,8 @@ single-huge-file caveat).
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -188,12 +190,21 @@ def read_columnar(spark: SparkSession, path: str, fmt: str) -> DataFrame:
         raise ValueError(f"unsupported columnar format: {fmt!r}")
     if fmt == "ipc":
         return read_ipc_python(spark, path)
+    if fmt == "avro" and not source_registered(spark, "avro"):
+        return read_avro_python(spark, path)
+    return spark.read.format(fmt).load(path)
+
+
+def source_registered(spark: SparkSession, fmt: str) -> bool:
+    """True when Spark resolves the data source ``fmt`` (spark-avro is
+    an external module). The lookup runs no query, so a missing source
+    leaves no failed read for the query listeners to log."""
+    lookup = spark._jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource
     try:
-        return spark.read.format(fmt).load(path)
-    except Exception as exc:
-        if fmt == "avro" and "Failed to find data source" in str(exc):
-            return read_avro_python(spark, path)
-        raise
+        lookup(fmt, spark._jsparkSession.sessionState().conf())
+    except (AnalysisException, Py4JJavaError):
+        return False
+    return True
 
 
 def columnar_adapter(spark: SparkSession, path: str, fmt: str = "orc") -> Adapter:

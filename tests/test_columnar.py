@@ -95,6 +95,33 @@ def test_avro_python_roundtrip_all_types(spark, tmp_path):
     assert rows[-3]["s"] == "" and rows[-3]["raw"] == b""
 
 
+def test_avro_read_starts_no_failing_read(spark, tmp_path, monkeypatch):
+    """The avro path looks the source up before reading: without
+    spark-avro it decodes in Python and never starts a Spark read that
+    fails (a failed read makes the query listeners log an ERROR with
+    two stack traces on every avro conversion)."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from tabular_to_parquet_spark.sources.columnar import source_registered
+
+    assert source_registered(spark, "parquet")
+    assert not source_registered(spark, "no_such_source")
+    failed = []
+    load = DataFrameReader.load
+
+    def recording_load(self, *args, **kwargs):
+        try:
+            return load(self, *args, **kwargs)
+        except Exception as exc:
+            failed.append(exc)
+            raise
+
+    monkeypatch.setattr(DataFrameReader, "load", recording_load)
+    df = read_columnar(spark, _write_parts(tmp_path), "avro")
+    assert df.count() == len(AVRO_RECORDS)
+    assert failed == []
+
+
 def test_avro_convert_typed_and_reinference(spark, tmp_path):
     from tabular_to_parquet_spark.sources import avro_python as ap
 
